@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.Par
 
 import graft.functions.Canon
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.Par
 
 import graft.functions.Canon
 
@@ -1796,20 +1797,6 @@ object Similarity {
       .select(col(keyCol), (-col("_t._ni")).as(idCol),
         col("_t._s").as(scoreCol))
 
-  /** Run two INDEPENDENT eager builds concurrently (r21, guide §2.6
-    * "overlap independent jobs"): a recall dial's brute-force truth
-    * pass shares no lineage with the chain build beside it — both
-    * read only the already-pinned corpus frame — so submitting the
-    * two job streams from two driver threads lets the scheduler
-    * back-fill one stream's stragglers with the other's tasks.
-    * Purely a scheduling overlap: each branch is deterministic on its
-    * own, and neither reads anything the other writes, so evaluation
-    * order cannot change a row. The by-name second branch runs on a
-    * pool thread; its failure is rethrown unwrapped.
-    */
-  private def concurrently[A, B](a: => A, b: => B): (A, B) =
-    Par.concurrently(a, b)
-
   /** NN-descent KNN-graph construction (Dong et al. 2011, WWW — the
     * standard distributed KNN-graph builder): [[knnGraph]] can only
     * ever link vectors sharing a label block, so true neighbors split
@@ -2046,7 +2033,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("nbr_id").asc)
     // truth pass built CONCURRENTLY with the descended graph (r21,
     // guide §2.6): both branches read only the pinned `e`
-    val (descended, truth) = concurrently(
+    val (descended, truth) = Par.concurrently(
       nnDescentGraph(embeddings, e, hashRankCounted(e), k, rounds),
       q.as("a").join(e.as("b"),
           col("a.vec_id") =!= col("b.vec_id"))
@@ -2346,7 +2333,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("nbr_id").asc)
     // chain build and truth pass overlapped (r21, guide §2.6): both
     // branches read only the pinned `e`
-    val ((f0, f), truth) = concurrently(
+    val ((f0, f), truth) = Par.concurrently(
       beamChainOn(embeddings, e, beam, rounds, graphK, descentRounds),
       q.as("a").join(e.as("b"),
           col("a.vec_id") =!= col("b.vec_id"))
@@ -2479,7 +2466,7 @@ object Similarity {
     val wT = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("nbr_id").asc)
     // chain and truth overlapped (r21, guide §2.6)
-    val ((f0, f), truth) = concurrently(
+    val ((f0, f), truth) = Par.concurrently(
       hierChainOn(embeddings, e, beam, rounds, graphK, descentRounds),
       q.as("a").join(e.as("b"),
           col("a.vec_id") =!= col("b.vec_id"))
@@ -2535,7 +2522,7 @@ object Similarity {
     val wT = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("nbr_id").asc)
     // chain + walk and the truth pass overlapped (r21, guide §2.6)
-    val (fs, truth) = concurrently(
+    val (fs, truth) = Par.concurrently(
       {
         val hr = hashRankCounted(e)
         val gsym = searchGraphOn(hr,
@@ -2675,7 +2662,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("nbr_id").asc)
     // insert chain and truth pass overlapped (r21, guide §2.6); the
     // truth branch pins its own query frame from the shared `eAll`
-    val ((patched, newFwd), (q, truth)) = concurrently(
+    val ((patched, newFwd), (q, truth)) = Par.concurrently(
       incrementalPartsOn(embeddings, eAll, k, beam, rounds,
         descentRounds),
       {
@@ -3190,7 +3177,7 @@ object Similarity {
     // branch derives the query rows from the shared pinned `e` with
     // the same % 50 filter — identical rows to the chain's q, the
     // same (qv ≡ v, qnrm ≡ nrm) operands, so identical sims
-    val ((fpq, gsym, q), truth) = concurrently(
+    val ((fpq, gsym, q), truth) = Par.concurrently(
       pqBeamChainOn(embeddings, e, beam, rounds, graphK,
         descentRounds, m, nCodes, dim),
       e.filter(col("vec_id") % 50 === 0)

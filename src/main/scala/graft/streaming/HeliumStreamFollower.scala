@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
+import graft.Par
 import graft.operators.HeliumGraph
 import graft.sinks.GraphSink
 import graft.sources.HeliumBlockStreamProvider
@@ -43,6 +44,14 @@ import graft.sources.HeliumBlockStreamProvider
   * The account collection keeps the reference's insert-ignore
   * collapse deferred to read (the A3 distinct view), exactly like the
   * driver loop.
+  *
+  * Per epoch, where the reference bulk-loads its three collections one
+  * after another (follower.py:205-207), [[commitBatch]] runs the three
+  * write-then-import legs concurrently and its housekeeping strictly
+  * after all three. The source still runs ONCE per epoch: every leg
+  * reads one persisted envelope, and the block manager's per-block
+  * lock lets only one task compute each cached partition. The import
+  * read-back uses the schema each leg wrote.
   */
 object HeliumStreamFollower {
 
@@ -51,10 +60,24 @@ object HeliumStreamFollower {
     * content-keyed, in-batch deduped, and committed by epoch
     * partition overwrite (idempotent under epoch replay).
     *
+    * The three collections commit as three CONCURRENT legs over the
+    * one persisted envelope ([[graft.Par]]): each leg writes its
+    * `batch=hi` partition, then imports it. The legs share no output,
+    * so their order cannot change a row; overlapping them makes an
+    * epoch cost about its slowest leg, not the sum of all three.
+    * Housekeeping (retention drop, inventory refresh) and the
+    * envelope's `unpersist` run strictly after ALL three legs have
+    * finished — also when one leg fails, so a failed epoch never
+    * leaves a leg writing behind a replay of the same partition. The
+    * legs' jobs carry the stream thread's job group, so a query stop
+    * cancels them like any other epoch job.
+    *
     * With an [[GraphSink.ImportTarget]], each committed partition is
     * read back and POSTed as importBulk bodies from the executors —
     * the driver loop's wire verb (HeliumFollower.write), same
-    * read-back-what-the-store-holds discipline. A replayed epoch
+    * read-back-what-the-store-holds discipline. The read-back passes
+    * the schema the leg just wrote instead of inferring it from the
+    * files (no schema-inference job). A replayed epoch
     * re-POSTs its partition, which the store's onDuplicate=ignore
     * absorbs (every document carries its content-hash `_key`) — the
     * HTTP sink inherits T5 from the key discipline, not from any
@@ -84,7 +107,9 @@ object HeliumStreamFollower {
     // envelope four ways (two payment variants, receipts, accounts),
     // and an un-persisted micro-batch re-runs its partition readers
     // per action — i.e. refetches every block over HTTP and burns the
-    // per-task retry budget three extra times.
+    // per-task retry budget three extra times. The legs below read the
+    // cache concurrently: a task that finds a cached partition being
+    // computed by another waits on its block lock, then reads the copy.
     //
     // Raw `persist()` here, NOT the Materialize seam used by the batch
     // operators: the seam exists to TRUNCATE LINEAGE under iteration
@@ -107,26 +132,29 @@ object HeliumStreamFollower {
         if (hiRow.isNullAt(0)) None else Some(hiRow.getLong(0))
       }
       hiOpt.foreach { hi =>
-        val payments = HeliumGraph.paymentV1Edges(cached)
-          .unionByName(HeliumGraph.paymentV2Edges(cached))
-          .dropDuplicates("_key")
-        val receipts = HeliumGraph.receiptEdges(cached)
-          .dropDuplicates("_key")
-        val accounts = HeliumGraph.accountVertices(cached)
-        Seq(payments -> "payments", receipts -> "poc_receipts",
-          accounts -> "accounts").foreach { case (df, c) =>
-          df.write.mode(SaveMode.Overwrite)
-            .parquet(s"$sinkDir/$c/batch=$hi")
+        // one leg per collection: overwrite `batch=hi`, then read back
+        // what the store holds — under the schema just written, so the
+        // read-back runs no schema-inference job — and POST it
+        def leg(df: DataFrame, c: String): Unit = {
+          val dir = s"$sinkDir/$c/batch=$hi"
+          df.write.mode(SaveMode.Overwrite).parquet(dir)
           importTarget.foreach { t =>
             GraphSink.importBulkPost(
-              env.sparkSession.read.parquet(s"$sinkDir/$c/batch=$hi"),
-              t, c)
+              env.sparkSession.read.schema(df.schema).parquet(dir), t, c)
           }
         }
-        // reference loop housekeeping, post-commit — the same order
-        // as HeliumFollower.step: receipt retention partition drop
-        // (T7, follower.py:210-214) and the inventory-lag refresh
-        // trigger (T6, follower.py:61-62)
+        // returns only once all three legs have finished
+        Par.concurrently3(
+          leg(HeliumGraph.paymentV1Edges(cached)
+            .unionByName(HeliumGraph.paymentV2Edges(cached))
+            .dropDuplicates("_key"), "payments"),
+          leg(HeliumGraph.receiptEdges(cached).dropDuplicates("_key"),
+            "poc_receipts"),
+          leg(HeliumGraph.accountVertices(cached), "accounts"))
+        // reference loop housekeeping, strictly after all three legs —
+        // the same order as HeliumFollower.step: receipt retention
+        // partition drop (T7, follower.py:210-214) and the
+        // inventory-lag refresh trigger (T6, follower.py:61-62)
         receiptRetentionBlocks.foreach { keep =>
           Follower.dropExpiredBatches(s"$sinkDir/poc_receipts",
             hi - keep)
@@ -134,7 +162,7 @@ object HeliumStreamFollower {
         if (Follower.shouldRefreshInventory(hi, inventoryHeight(),
           inventoryLag)) onInventoryRefresh()
       }
-    } finally { cached.unpersist(); () }
+    } finally { cached.unpersist(); () } // after every leg has ended
   }
 
   /** The epoch's committed end height — the (lo, hi] offset-range end

@@ -170,6 +170,58 @@ class HeliumBlockStreamSpec extends SparkSpec {
     }
   }
 
+  test("concurrent collection legs: every epoch job carries the query's " +
+    "job group, and each block and transaction is fetched once") {
+    import graft.streaming.HeliumStreamFollower
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val heights = 100L to 102L
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val listed = heights.map(h => mapper.readTree(
+      graft.sources.HeliumFixtures.blockJsonByHeight(h))
+      .get("transactions").size()).sum
+    StubNode.withServerCalls { (endpoint, calls) =>
+      val dir = Files.createTempDirectory("hsf-legs").toString
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      val marker = "hsf-legs-drained"
+      try {
+        val q = HeliumStreamFollower.writer(spark, endpoint,
+          s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
+          maxHeightsPerTrigger = 1L, numPartitions = 2,
+          maxRetries = 2, sleepMs = 0L,
+          importTarget = Some(
+            graft.sinks.GraphSink.ImportTarget(endpoint, "helium")))
+          .start()
+        val runId =
+          try { q.processAllAvailable(); q.runId.toString }
+          finally q.stop()
+        assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+        // the listener bus delivers in order: once a marker job is
+        // seen, every epoch job before it has been recorded
+        sc.setJobGroup(marker, marker)
+        try spark.range(1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30000000000L
+        while (!groups.contains(marker) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        val epochJobs = groups.asScala.toSeq.takeWhile(_ != marker)
+        assert(epochJobs.nonEmpty, "no epoch job recorded")
+        assert(epochJobs.forall(_ == runId),
+          s"epoch jobs outside the query's job group $runId: " +
+            epochJobs.filterNot(_ == runId).distinct)
+      } finally sc.removeSparkListener(listener)
+      assert(calls.get("block_get") === heights.size.toLong)
+      assert(calls.get("transaction_get") === listed.toLong)
+    }
+  }
+
   test("capstone housekeeping: retention drop and inventory refresh " +
     "fire per epoch, matching the driver loop") {
     import graft.streaming.{HeliumFollower, HeliumStreamFollower}

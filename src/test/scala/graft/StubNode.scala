@@ -45,7 +45,7 @@ object StubNode {
                            extraPayloads: Map[String, String] = Map.empty)(
       f: (String, java.util.Queue[(String, String)]) => A): A =
     withServerCore(flaky, tipCap, extraBlocks, prunedHeights,
-      extraPayloads) { (endpoint, imports, _) => f(endpoint, imports) }
+      extraPayloads) { (endpoint, imports, _, _) => f(endpoint, imports) }
 
   /** Variant exposing the tip as a MUTABLE AtomicLong (initially
     * `tipCap`): FollowerBench's tail mode advances it one height at a
@@ -58,7 +58,16 @@ object StubNode {
                        extraPayloads: Map[String, String] = Map.empty)(
       f: (String, java.util.concurrent.atomic.AtomicLong) => A): A =
     withServerCore(Map.empty, tipCap, extraBlocks, Set.empty,
-      extraPayloads) { (endpoint, _, tip) => f(endpoint, tip) }
+      extraPayloads) { (endpoint, _, tip, _) => f(endpoint, tip) }
+
+  /** Variant exposing per-method JSON-RPC call counts (method → calls,
+    * each counted before its reply is sent), so specs can pin how many
+    * times the follower fetched each block and transaction.
+    */
+  def withServerCalls[A](
+      f: (String, java.util.Map[String, java.lang.Long]) => A): A =
+    withServerCore(Map.empty, Long.MaxValue, Map.empty, Set.empty,
+      Map.empty) { (endpoint, _, _, calls) => f(endpoint, calls) }
 
   private def withServerCore[A](flaky: Map[String, Int],
                                 tipCap: Long,
@@ -66,7 +75,8 @@ object StubNode {
                                 prunedHeights: Set[Long],
                                 extraPayloads: Map[String, String])(
       f: (String, java.util.Queue[(String, String)],
-          java.util.concurrent.atomic.AtomicLong) => A): A = {
+          java.util.concurrent.atomic.AtomicLong,
+          java.util.Map[String, java.lang.Long]) => A): A = {
     val tip = new java.util.concurrent.atomic.AtomicLong(tipCap)
     val blocks = HeliumFixtures.blockJsonByHeight ++ extraBlocks
     val payloads = HeliumFixtures.payloadByHash ++ extraPayloads
@@ -74,6 +84,7 @@ object StubNode {
     val flakyRemaining = new java.util.concurrent.ConcurrentHashMap[String, Integer]
     flaky.foreach { case (k, v) => flakyRemaining.put(k, v) }
     val imports = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
     def handle(ex: HttpExchange): Unit = {
       val raw = new String(
@@ -107,7 +118,9 @@ object StubNode {
       }
       val req = mapper.readTree(raw)
       val id = req.get("id").asLong()
-      val result: Either[Int, String] = req.get("method").asText() match {
+      val method = req.get("method").asText()
+      calls.merge(method, 1L, (a, b) => a + b)
+      val result: Either[Int, String] = method match {
         case "block_height" =>
           Right(math.min(
             (blocks.keys ++ prunedHeights).max, tip.get()).toString)
@@ -143,7 +156,8 @@ object StubNode {
     val pool = java.util.concurrent.Executors.newCachedThreadPool()
     server.setExecutor(pool)
     server.start()
-    try f(s"http://127.0.0.1:${server.getAddress.getPort}/", imports, tip)
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}/", imports, tip,
+      calls)
     finally { server.stop(0); pool.shutdown() }
   }
 }
