@@ -21,8 +21,8 @@ import graft.sources.HeliumSchemas
   *
   * Scale: every transform is a map-side projection/generate — the only
   * shuffle in the whole slice is accountVertices' distinct. At 100 TB
-  * the per-block loop becomes per-batch ranges of the block cursor
-  * (graft.streaming.Follower) with these same plans.
+  * the per-block loop becomes per-epoch height ranges of the block
+  * stream (graft.streaming.HeliumStreamFollower) with these same plans.
   */
 object HeliumGraph {
 

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * A real ArangoDB connector would replace the parquet/json writers
   * behind the same three verbs; idempotency never depends on the
-  * store: content-hash keys + in-batch dedup (+ overwrite-by-partition
-  * in the Follower) give insert-ignore semantics on any sink.
+  * store: content-hash keys + in-batch dedup (+ the follower's
+  * overwrite-by-epoch-partition) give insert-ignore semantics on any
+  * sink.
   */
 object GraphSink {
 
@@ -27,7 +28,7 @@ object GraphSink {
 
   /** S5: bulk insert-ignore — dedup on the content key inside the
     * batch, then append. The reference's onDuplicate="ignore" across
-    * batches is the Follower's overwrite-by-batch-partition.
+    * batches is HeliumStreamFollower's overwrite-by-batch-partition.
     */
   def insertIgnore(df: DataFrame, path: String): Unit =
     df.dropDuplicates("_key").write.mode(SaveMode.Append).parquet(path)

@@ -49,19 +49,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `planInputPartitions(start, end)` slices the (start, end] height
   *    range into `numPartitions` contiguous chunks; each task fetches
   *    its blocks + txn payloads EXECUTOR-side with its own client
-  *    (RpcTxnSource.fetchRangeBulk's fan-out shape) under the T4
-  *    retry-then-skip policy. At 1000 executors the node is the
-  *    bottleneck, which is where it belongs.
+  *    under the T4 retry-then-skip policy ([[RetryPolicy]]). At 1000
+  *    executors the node is the bottleneck, which is where it belongs.
   *  - Exactly-once: heights are immutable and the range is half-open,
   *    so a replayed batch re-reads exactly the same blocks; the
   *    downstream content-key sinks (T5) make re-delivery idempotent.
   *
-  * The driver-side cursor loop (HeliumFollower) remains the parity
-  * path — the reference's own loop is serial polling, and SURVEY §4.3
-  * deliberately kept the follower semantics testable without a
-  * streaming engine. This source is the beyond-parity scale face over
-  * the same seam; HeliumBlockStreamSpec pins row-level parity between
-  * the two against one stub node.
+  * [[graft.streaming.HeliumStreamFollower]] runs the follower over
+  * this source; [[HeliumBlockPartitionReader]] is the one place that
+  * expands block → transactions → payloads.
   */
 class HeliumBlockStreamProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -198,10 +194,10 @@ final class HeliumBlockReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** Executor-side reader: its own client + mapper per task (the
-  * fetchRangeBulk discipline — no closure capture, isolated
-  * connections), streaming block→txn→payload expansion under T4
-  * retry-then-skip. Heights the node doesn't serve produce no rows.
+/** Executor-side reader: its own client + mapper per task (no closure
+  * capture, isolated connections), streaming block→txn→payload
+  * expansion under T4 retry-then-skip. Heights the node doesn't serve
+  * produce no rows.
   */
 final class HeliumBlockPartitionReader(p: HeliumBlockInputPartition)
     extends PartitionReader[InternalRow] {
@@ -231,4 +227,29 @@ final class HeliumBlockPartitionReader(p: HeliumBlockInputPartition)
     if (rows.hasNext) { current = rows.next(); true } else false
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+/** T4 (follower.py:58-69): bounded retry with sleep, then SKIP — the
+  * reference retries a not-yet-indexed payload up to 50× with 10 s
+  * sleeps and then advances the cursor anyway (a failed block is
+  * skipped, not fatal; T1 note in SURVEY §2.10). Pure policy so specs
+  * can inject a fake clock.
+  */
+object RetryPolicy {
+  /** Runs `attempt` until it yields Some, up to `maxRetries` retries,
+    * sleeping between tries. Returns (result, attemptsUsed); None
+    * means exhausted → caller records the skip and advances.
+    */
+  def withRetries[A](maxRetries: Int, sleepMs: Long,
+                     sleep: Long => Unit = Thread.sleep)(
+      attempt: () => Option[A]): (Option[A], Int) = {
+    var tries = 0
+    var out: Option[A] = None
+    while (out.isEmpty && tries <= maxRetries) {
+      out = attempt()
+      tries += 1
+      if (out.isEmpty && tries <= maxRetries) sleep(sleepMs)
+    }
+    (out, tries)
+  }
 }

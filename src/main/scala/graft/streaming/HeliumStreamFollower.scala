@@ -1,34 +1,34 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Par
 import graft.operators.HeliumGraph
 import graft.sinks.GraphSink
 import graft.sources.HeliumBlockStreamProvider
 
-/** The ENGINE-DRIVEN follower — the reference's poll loop
-  * (follower.py:44-75) as one Structured Streaming query, composing
-  * the three seams that are each unit-tested on their own into the
-  * integration a real user runs first:
+/** The follower — the reference's poll loop (follower.py:44-75) as one
+  * Structured Streaming query, composing the three seams that are each
+  * unit-tested on their own:
   *
   *   readStream(HeliumBlockStreamProvider)   — S1-S3, offsets = heights
   *     → HeliumGraph parity transforms       — P1-P4 / N1-N4
   *     → GraphSink insert-ignore commit      — S5 / F8 / T5
   *   with the engine's own WAL checkpointing — T1 / T2
   *
-  * Division of labor vs [[HeliumFollower]] (the driver-loop parity
-  * path): there the CALLER owns the cursor, retries, and checkpoint
-  * ordering, mirroring the reference line by line; here Spark's
-  * micro-batch engine owns offset tracking, trigger policy, and
-  * recovery, which is the deployment shape a 1000-executor cluster
-  * actually uses. HeliumBlockStreamSpec pins the two byte-identical
-  * over the same fixture range, including across a mid-backfill kill
-  * and WAL restart.
+  * Where the reference's loop owns its cursor, retries and checkpoint
+  * ordering, here Spark's micro-batch engine owns offset tracking,
+  * trigger policy and recovery. HeliumFollowerSpec and
+  * HeliumBlockStreamSpec check the committed tables against the
+  * fixtures run through the same transforms, including across a
+  * mid-backfill kill and WAL restart.
   *
   * Exactly-once effect (T5) without sink transactions: the WAL
   * serializes half-open immutable height ranges, and every epoch's
@@ -38,12 +38,10 @@ import graft.sources.HeliumBlockStreamProvider
   * committed range even when tail heights carry no envelope rows, and
   * a replayed epoch (crash between sink write and WAL commit)
   * REWRITES its own partition with identical content-keyed rows
-  * instead of appending duplicates.
-  * Height-named partitions are also the unit the driver loop commits
-  * (HeliumFollower's `hi`) and what T7 height-based retention drops.
-  * The account collection keeps the reference's insert-ignore
-  * collapse deferred to read (the A3 distinct view), exactly like the
-  * driver loop.
+  * instead of appending duplicates. Height-named partitions are also
+  * the unit T7 height-based retention drops. The account collection
+  * keeps the reference's insert-ignore collapse deferred to read (the
+  * A3 distinct view).
   *
   * Per epoch, where the reference bulk-loads its three collections one
   * after another (follower.py:205-207), [[commitBatch]] runs the three
@@ -57,8 +55,9 @@ object HeliumStreamFollower {
 
   /** One epoch's transform + commit — the follower.py:145-207 body
     * over an envelope micro-batch: the three collections, each
-    * content-keyed, in-batch deduped, and committed by epoch
-    * partition overwrite (idempotent under epoch replay).
+    * content-keyed, in-batch deduped, and committed by overwriting the
+    * epoch's `batch=hi` partition (idempotent under epoch replay);
+    * `hi` is the epoch's committed offset end ([[epochEndHeight]]).
     *
     * The three collections commit as three CONCURRENT legs over the
     * one persisted envelope ([[graft.Par]]): each leg writes its
@@ -73,36 +72,29 @@ object HeliumStreamFollower {
     * cancels them like any other epoch job.
     *
     * With an [[GraphSink.ImportTarget]], each committed partition is
-    * read back and POSTed as importBulk bodies from the executors —
-    * the driver loop's wire verb (HeliumFollower.write), same
-    * read-back-what-the-store-holds discipline. The read-back passes
-    * the schema the leg just wrote instead of inferring it from the
-    * files (no schema-inference job). A replayed epoch
-    * re-POSTs its partition, which the store's onDuplicate=ignore
-    * absorbs (every document carries its content-hash `_key`) — the
-    * HTTP sink inherits T5 from the key discipline, not from any
-    * sink-side transaction.
+    * read back and POSTed as importBulk bodies from the executors, so
+    * the documents on the wire are exactly what the store of record
+    * holds. The read-back passes the schema the leg just wrote instead
+    * of inferring it from the files (no schema-inference job). A
+    * replayed epoch re-POSTs its partition, which the store's
+    * onDuplicate=ignore absorbs (every document carries its
+    * content-hash `_key`) — the HTTP sink inherits T5 from the key
+    * discipline, not from any sink-side transaction.
     *
-    * KNOWN parity divergence (pinned by spec, documented by design):
-    * when every block of an epoch fails block_get (a node pruned or
+    * When every block of an epoch fails block_get (a node pruned or
     * persistently erroring below its own tip), retry-then-skip leaves
-    * an EMPTY envelope — indistinguishable here from a served range
-    * whose blocks carry no transactions. With `epochHi` from the
-    * offsets WAL this path commits an empty `batch=hi` partition and
-    * runs retention/refresh housekeeping (the engine committed the
-    * range, so the cursor semantics say it is processed), while the
-    * driver loop's fetchRange sees no block and commits NOTHING for
-    * the same range. Both are defensible cursor readings; the
-    * streamed one is preferred because an epoch the WAL committed
-    * must never be silently un-processed on restart replay.
+    * an EMPTY envelope, indistinguishable here from a served range
+    * whose blocks carry no transactions. The epoch still commits an
+    * empty `batch=hi` partition and runs its housekeeping: the engine
+    * committed the range, and an epoch the WAL committed must never be
+    * silently un-processed on restart replay (DECISIONS DR-3).
     */
-  def commitBatch(env: DataFrame, sinkDir: String, batchId: Long,
-                  importTarget: Option[GraphSink.ImportTarget] = None,
-                  receiptRetentionBlocks: Option[Long] = None,
-                  inventoryHeight: () => Option[Long] = () => None,
-                  onInventoryRefresh: () => Unit = () => (),
-                  inventoryLag: Long = 500L,
-                  epochHi: Option[Long] = None): Unit = {
+  private[streaming] def commitBatch(
+      env: DataFrame, sinkDir: String, hi: Long,
+      importTarget: Option[GraphSink.ImportTarget],
+      receiptRetentionBlocks: Option[Long],
+      inventoryHeight: () => Option[Long],
+      onInventoryRefresh: () => Unit, inventoryLag: Long): Unit = {
     // ONE source evaluation per epoch: the transforms read the
     // envelope four ways (two payment variants, receipts, accounts),
     // and an un-persisted micro-batch re-runs its partition readers
@@ -121,56 +113,74 @@ object HeliumStreamFollower {
     // site deliberately bypasses the seam.
     val cached = env.persist()
     try {
-      // The epoch's partition name: the engine-committed offset-range
-      // end when the caller threads it through ([[epochEndHeight]] —
-      // the driver loop's own `hi` cursor semantics, including for
-      // epochs whose tail heights carry no envelope rows); data max as
-      // the fallback for direct callers outside a streaming query (the
-      // reference's own per-batch granularity, one driver-side scalar).
-      val hiOpt = epochHi.orElse {
-        val hiRow = cached.agg(max(col("block"))).first()
-        if (hiRow.isNullAt(0)) None else Some(hiRow.getLong(0))
-      }
-      hiOpt.foreach { hi =>
-        // one leg per collection: overwrite `batch=hi`, then read back
-        // what the store holds — under the schema just written, so the
-        // read-back runs no schema-inference job — and POST it
-        def leg(df: DataFrame, c: String): Unit = {
-          val dir = s"$sinkDir/$c/batch=$hi"
-          df.write.mode(SaveMode.Overwrite).parquet(dir)
-          importTarget.foreach { t =>
-            GraphSink.importBulkPost(
-              env.sparkSession.read.schema(df.schema).parquet(dir), t, c)
-          }
+      // one leg per collection: overwrite `batch=hi`, then read back
+      // what the store holds — under the schema just written, so the
+      // read-back runs no schema-inference job — and POST it
+      def leg(df: DataFrame, c: String): Unit = {
+        val dir = s"$sinkDir/$c/batch=$hi"
+        df.write.mode(SaveMode.Overwrite).parquet(dir)
+        importTarget.foreach { t =>
+          GraphSink.importBulkPost(
+            env.sparkSession.read.schema(df.schema).parquet(dir), t, c)
         }
-        // returns only once all three legs have finished
-        Par.concurrently3(
-          leg(HeliumGraph.paymentV1Edges(cached)
-            .unionByName(HeliumGraph.paymentV2Edges(cached))
-            .dropDuplicates("_key"), "payments"),
-          leg(HeliumGraph.receiptEdges(cached).dropDuplicates("_key"),
-            "poc_receipts"),
-          leg(HeliumGraph.accountVertices(cached), "accounts"))
-        // reference loop housekeeping, strictly after all three legs —
-        // the same order as HeliumFollower.step: receipt retention
-        // partition drop (T7, follower.py:210-214) and the
-        // inventory-lag refresh trigger (T6, follower.py:61-62)
-        receiptRetentionBlocks.foreach { keep =>
-          Follower.dropExpiredBatches(s"$sinkDir/poc_receipts",
-            hi - keep)
-        }
-        if (Follower.shouldRefreshInventory(hi, inventoryHeight(),
-          inventoryLag)) onInventoryRefresh()
       }
+      // returns only once all three legs have finished
+      Par.concurrently3(
+        leg(HeliumGraph.paymentV1Edges(cached)
+          .unionByName(HeliumGraph.paymentV2Edges(cached))
+          .dropDuplicates("_key"), "payments"),
+        leg(HeliumGraph.receiptEdges(cached).dropDuplicates("_key"),
+          "poc_receipts"),
+        leg(HeliumGraph.accountVertices(cached), "accounts"))
+      // reference loop housekeeping, strictly after all three legs:
+      // receipt retention partition drop (T7, follower.py:210-214) and
+      // the inventory-lag refresh trigger (T6, follower.py:61-62)
+      receiptRetentionBlocks.foreach { keep =>
+        dropExpiredBatches(s"$sinkDir/poc_receipts", hi - keep)
+      }
+      if (shouldRefreshInventory(hi, inventoryHeight(), inventoryLag))
+        onInventoryRefresh()
     } finally { cached.unpersist(); () } // after every leg has ended
   }
 
+  /** T7 partition drop on a batch=N-partitioned directory: removes
+    * every `batch=N` with N below `cutoffBatch`, whole (metadata-only,
+    * no data rewrite). Returns the dropped batch ids, ascending.
+    */
+  private[graft] def dropExpiredBatches(dir: String,
+                                        cutoffBatch: Long): Seq[Long] = {
+    val root = Paths.get(dir)
+    if (!Files.exists(root)) Seq.empty
+    else {
+      val expired = Files.list(root).iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("batch="))
+        .map(p => (p, p.getFileName.toString.stripPrefix("batch=").toLong))
+        .filter(_._2 < cutoffBatch)
+        .toSeq
+      expired.foreach { case (p, _) =>
+        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => Files.delete(f))
+      }
+      expired.map(_._2).sorted
+    }
+  }
+
+  /** T6 (follower.py:61-62): refresh the dimension snapshot when the
+    * sync cursor leads the inventory snapshot by more than `lag`.
+    * A None inventory height means the bootstrap never ran — treated
+    * as "always refresh" rather than reproducing the reference's
+    * uncaught TypeError (SURVEY §2.10 known quirk).
+    */
+  private[graft] def shouldRefreshInventory(syncHeight: Long,
+                                            inventoryHeight: Option[Long],
+                                            lag: Long = 500L): Boolean =
+    inventoryHeight.forall(h => syncHeight - h > lag)
+
   /** The epoch's committed end height — the (lo, hi] offset-range end
     * the engine planned for `batchId`, read back from its own offsets
-    * WAL at `checkpointDir/offsets/<batchId>`. This is the SAME `hi`
-    * the driver loop checkpoints (HeliumFollower.step), so partition
-    * names, the retention cutoff, and the inventory-refresh trigger
-    * stay parity-exact even when an epoch's tail heights yield no
+    * WAL at `checkpointDir/offsets/<batchId>`. Partition names, the
+    * retention cutoff and the inventory-refresh trigger follow the
+    * committed range even when an epoch's tail heights yield no
     * envelope rows (a data-max probe would under-report there).
     *
     * Deterministic under replay: the engine writes the offsets entry
@@ -205,42 +215,11 @@ object HeliumStreamFollower {
     }
   }
 
-  /** The configured query, trigger left to the caller (production
-    * uses the default continuous polling; specs use Trigger.Once /
-    * processAllAvailable). `startHeight` is the exclusive cursor seed
-    * honored only on FIRST start — a restart recovers the committed
-    * offset from the WAL at `checkpointDir` and ignores it.
-    */
-  def writer(spark: SparkSession, endpoint: String, sinkDir: String,
-             checkpointDir: String, startHeight: Long,
-             maxHeightsPerTrigger: Long = 0L, numPartitions: Int = 4,
-             maxRetries: Int = 50, sleepMs: Long = 10000L,
-             importTarget: Option[GraphSink.ImportTarget] = None,
-             receiptRetentionBlocks: Option[Long] = None,
-             inventoryHeight: () => Option[Long] = () => None,
-             onInventoryRefresh: () => Unit = () => (),
-             inventoryLag: Long = 500L)
-      : DataStreamWriter[Row] =
-    spark.readStream
-      .format(classOf[HeliumBlockStreamProvider].getName)
-      .option("endpoint", endpoint)
-      .option("startHeight", startHeight.toString)
-      .option("maxHeightsPerTrigger", maxHeightsPerTrigger.toString)
-      .option("numPartitions", numPartitions.toString)
-      .option("maxRetries", maxRetries.toString)
-      .option("sleepMs", sleepMs.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (env: DataFrame, batchId: Long) =>
-        commitBatch(env, sinkDir, batchId, importTarget,
-          receiptRetentionBlocks, inventoryHeight, onInventoryRefresh,
-          inventoryLag,
-          epochHi = Some(epochEndHeight(spark, checkpointDir, batchId)))
-      }
-      .option("checkpointLocation", checkpointDir)
-
-  /** Start with the default trigger (continuous micro-batch polling —
-    * the reference loop's steady state).
+  /** Start the follower with the default trigger (continuous
+    * micro-batch polling — the reference loop's steady state; specs
+    * drain with processAllAvailable). `startHeight` is the exclusive
+    * cursor seed honored only on FIRST start — a restart recovers the
+    * committed offset from the WAL at `checkpointDir` and ignores it.
     */
   def start(spark: SparkSession, endpoint: String, sinkDir: String,
             checkpointDir: String, startHeight: Long,
@@ -252,8 +231,22 @@ object HeliumStreamFollower {
             onInventoryRefresh: () => Unit = () => (),
             inventoryLag: Long = 500L)
       : StreamingQuery =
-    writer(spark, endpoint, sinkDir, checkpointDir, startHeight,
-      maxHeightsPerTrigger, numPartitions, maxRetries, sleepMs,
-      importTarget, receiptRetentionBlocks, inventoryHeight,
-      onInventoryRefresh, inventoryLag).start()
+    spark.readStream
+      .format(classOf[HeliumBlockStreamProvider].getName)
+      .option("endpoint", endpoint)
+      .option("startHeight", startHeight.toString)
+      .option("maxHeightsPerTrigger", maxHeightsPerTrigger.toString)
+      .option("numPartitions", numPartitions.toString)
+      .option("maxRetries", maxRetries.toString)
+      .option("sleepMs", sleepMs.toString)
+      .load()
+      .writeStream
+      .foreachBatch { (env: DataFrame, batchId: Long) =>
+        commitBatch(env, sinkDir,
+          epochEndHeight(spark, checkpointDir, batchId), importTarget,
+          receiptRetentionBlocks, inventoryHeight, onInventoryRefresh,
+          inventoryLag)
+      }
+      .option("checkpointLocation", checkpointDir)
+      .start()
 }

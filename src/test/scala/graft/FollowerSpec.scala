@@ -2,45 +2,42 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.Follower
+import graft.streaming.HeliumStreamFollower
 
+/** The follower's cursor (T1-T3) from a never-run start, and its pure
+  * policies without a stream: T4 retry-then-skip, the T6
+  * inventory-refresh trigger and the T7 retention drop.
+  */
 class FollowerSpec extends SparkSpec {
 
-  private def freshDirs(): (String, String) = {
-    val base = Files.createTempDirectory("follower").toString
-    (s"$base/sink", s"$base/checkpoint.json")
-  }
-
-  // events at sf0.001: 1000 rows, event_id 0..999
   test("cursor starts at -1, advances per batch, drains to tip") {
-    val (sink, cp) = freshDirs()
-    val f = new Follower(spark, sf0001, sink, cp, batchSize = 400L)
-    assert(f.cursor() === -1L)
-    assert(f.step() === Some(399L))
-    assert(f.cursor() === 399L)
-    f.runToTip()
-    assert(f.step() === None) // at tip: poll, no-op
-    val total = table("events").count()
-    assert(f.sink().count() === total) // every event exactly once
-    // SURVEY §5 item 4: a full second run is a no-op end to end
-    val cursorBefore = f.cursor()
-    f.runToTip()
-    assert(f.cursor() === cursorBefore)
-    assert(f.sink().count() === total)
-  }
-
-  test("re-running a batch is idempotent (overwrite, not append)") {
-    val (sink, cp) = freshDirs()
-    val f = new Follower(spark, sf0001, sink, cp, batchSize = 400L)
-    f.step()
-    val first = f.sink().count()
-    // simulate a crash after sink commit but before checkpoint:
-    // reset the checkpoint and reprocess the same batch
-    Files.write(java.nio.file.Paths.get(cp),
-      """{"sync_cursor": -1}""".getBytes)
-    f.step()
-    assert(f.sink().count() === first)
-    assert(f.cursor() === 399L)
+    // -1 = never run: backfill from the chain start. The stub node has
+    // no block below 100, so the first two epochs commit empty
+    // partitions and the third carries every fixture block.
+    StubNode.withServer() { endpoint =>
+      val dir = Files.createTempDirectory("follower").toString
+      def start() = HeliumStreamFollower.start(spark, endpoint,
+        s"$dir/sink", s"$dir/ckpt", startHeight = -1L,
+        maxHeightsPerTrigger = 50L, numPartitions = 2, maxRetries = 0,
+        sleepMs = 0L)
+      val q = start()
+      try q.processAllAvailable() finally q.stop()
+      // one partition per epoch, named by its offset end: (-1, 49],
+      // (49, 99], (99, 102]
+      def epochEnds() = FixtureReference.partitions(s"$dir/sink/payments")
+        .map(_.stripPrefix("batch=").toLong).sorted
+      assert(epochEnds() === Seq(49L, 99L, 102L))
+      val payments = FixtureReference.committed(spark, s"$dir/sink",
+        "payments")
+      assert(payments.size === 5) // every payment edge exactly once
+      // a full second run from the same checkpoint is a no-op end to end
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      assert(q2.recentProgress.forall(_.numInputRows == 0))
+      assert(epochEnds() === Seq(49L, 99L, 102L))
+      assert(FixtureReference.committed(spark, s"$dir/sink", "payments")
+        === payments)
+    }
   }
 
   test("T4: bounded retry succeeds late, then skips on exhaustion") {
@@ -60,44 +57,23 @@ class FollowerSpec extends SparkSpec {
     assert(none.isEmpty && used === 6)
   }
 
-  test("fixture TxnSource serves cursor ranges through the seam") {
-    val src = new graft.sources.FixtureTxnSource
-    val batch = src.fetchRange(spark, 99L, 101L).get
-    assert(batch.count() === 5) // blocks 100-101 of the fixtures
-    assert(src.fetchRange(spark, 102L, 200L).get.count() === 0)
-  }
-
-  test("sparse cursor: empty windows are skipped, not stranding the follower") {
-    // source with a gap: event_id 0..99 and 800..999 (700 missing ids)
-    val base = Files.createTempDirectory("gappy").toString
-    table("events")
-      .filter("event_id < 100 OR event_id >= 800")
-      .write.parquet(s"$base/events.parquet")
-    val f = new Follower(spark, base, s"$base/sink", s"$base/cp.json",
-      batchSize = 100L)
-    assert(f.step() === Some(99L))   // (−1, 99]: the head range
-    assert(f.step() === Some(899L))  // jumps the 7 empty windows in one step
-    assert(f.step() === Some(999L))
-    assert(f.step() === None)
-    assert(f.sink().count() === 300) // every surviving event exactly once
-  }
-
   test("T6: inventory refresh triggers on cursor lag; missing bootstrap refreshes") {
-    import graft.streaming.Follower.shouldRefreshInventory
+    import HeliumStreamFollower.shouldRefreshInventory
     assert(!shouldRefreshInventory(1000L, Some(800L)))  // lag 200 <= 500
     assert(shouldRefreshInventory(1501L, Some(1000L)))  // lag 501 > 500
     assert(shouldRefreshInventory(0L, None))            // no bootstrap
   }
 
   test("retention drops whole expired batch partitions") {
-    val (sink, cp) = freshDirs()
-    val f = new Follower(spark, sf0001, sink, cp, batchSize = 300L)
-    f.runToTip() // batches 299, 599, 899, 1199
-    val before = f.sink().select("batch").distinct().count()
-    assert(before === 4)
-    val dropped = f.dropExpiredBatches(600L)
+    val dir = Files.createTempDirectory("retention").toString
+    for (b <- Seq(299L, 599L, 899L, 1199L))
+      spark.range(b - 299, b + 1).write.parquet(s"$dir/batch=$b")
+    def sink() = spark.read.parquet(dir)
+    assert(sink().select("batch").distinct().count() === 4)
+    val dropped = HeliumStreamFollower.dropExpiredBatches(dir, 600L)
     assert(dropped === Seq(299L, 599L))
-    assert(f.sink().select("batch").distinct().count() === 2)
-    assert(f.sink().filter("batch < 600").count() === 0)
+    assert(sink().select("batch").distinct().count() === 2)
+    assert(sink().filter("batch < 600").count() === 0)
+    assert(sink().count() === 600L) // the kept batches whole
   }
 }

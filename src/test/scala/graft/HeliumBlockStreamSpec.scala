@@ -2,19 +2,31 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.{HeliumBlockStreamProvider, JsonRpcClient, RpcTxnSource}
+import graft.FixtureReference._
+import graft.sources.HeliumBlockStreamProvider
+import graft.streaming.HeliumStreamFollower
 
 /** The DataSource V2 micro-batch face of the S1-S3 seam, driven by
   * Spark's own streaming engine against the stub node: offsets are
   * block heights in the engine WAL, fetches run executor-side, and the
-  * rows must be EXACTLY what the batch-path source produces for the
-  * same cursor range.
+  * rows must be EXACTLY the fixture envelopes of the same cursor range
+  * ([[FixtureReference]]), payloads compared through the rows derived
+  * from them.
   */
 class HeliumBlockStreamSpec extends SparkSpec {
 
-  private def envelopeRows(df: org.apache.spark.sql.DataFrame) =
-    df.select("block", "block_time", "hash", "type", "payload")
-      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+  /** The streamed envelopes equal the fixture envelopes of (99, 102]:
+    * the same txns (the block listing dedups the duplicate tx1 row) and
+    * the same payload-derived edges.
+    */
+  private def assertFixtureEnvelopes(
+      streamed: org.apache.spark.sql.DataFrame): Unit = {
+    val expected = envelopes(spark, 99L, 102L).distinct()
+    assert(streamed.count() === expected.count())
+    assert(envelopeMeta(streamed) === envelopeMeta(expected))
+    assert(derived(streamed) === derived(expected))
+    assert(derived(streamed).size === 8) // 5 payment + 3 receipt edges
+  }
 
   test("streams the block range in capped micro-batches, " +
     "row-parity with the batch source") {
@@ -33,32 +45,27 @@ class HeliumBlockStreamSpec extends SparkSpec {
         .outputMode("append").start()
       try {
         q.processAllAvailable()
-        // parity: identical rows to the batch-path source over the
-        // same (99, 102] range
-        val batch = new RpcTxnSource(new JsonRpcClient(endpoint),
-          maxRetries = 2, sleepMs = 0, sleep = _ => ())
-          .fetchRange(spark, 99L, 102L).get
+        // parity: the fixture envelopes of the same (99, 102] range
         val streamed = spark.sql("SELECT * FROM helium_blocks_stream")
-        assert(envelopeRows(streamed) === envelopeRows(batch))
-        assert(envelopeRows(streamed).nonEmpty)
+        assertFixtureEnvelopes(streamed)
         // the 1-height cap forced one micro-batch per block: 3 batches
         // moved data for heights 100..102
         val dataBatches = q.recentProgress.count(_.numInputRows > 0)
         assert(dataBatches === 3,
           s"expected 3 capped batches, saw $dataBatches")
         // tip reached: another poll plans no work
+        val total = streamed.count()
         q.processAllAvailable()
         assert(spark.sql("SELECT * FROM helium_blocks_stream").count()
-          === batch.count())
+          === total)
       } finally q.stop()
     }
   }
 
   test("capstone: engine-driven stream → transforms → sink equals the " +
-    "driver-loop follower, across a mid-backfill kill and WAL restart") {
-    import graft.streaming.{HeliumFollower, HeliumStreamFollower}
+    "fixture reference, across a mid-backfill kill and WAL restart") {
     val dir = Files.createTempDirectory("hsf").toString
-    def writer(endpoint: String) = HeliumStreamFollower.writer(spark,
+    def start(endpoint: String) = HeliumStreamFollower.start(spark,
       endpoint, s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
       maxHeightsPerTrigger = 1L, numPartitions = 2,
       maxRetries = 2, sleepMs = 0L)
@@ -66,7 +73,7 @@ class HeliumBlockStreamSpec extends SparkSpec {
     // exactly that height, idles, and is killed mid-backfill — the
     // WAL has committed offset 100 with heights 101..102 outstanding.
     StubNode.withServer(tipCap = 100L) { endpoint =>
-      val q1 = writer(endpoint).start()
+      val q1 = start(endpoint)
       try q1.processAllAvailable() finally q1.stop()
     }
     val partialPayments =
@@ -75,104 +82,28 @@ class HeliumBlockStreamSpec extends SparkSpec {
       // run 2: restart from the SAME checkpoint against the advanced
       // tip — must resume at the recovered offset (not the
       // startHeight seed) and drain the rest
-      val q2 = writer(endpoint).start()
+      val q2 = start(endpoint)
       try q2.processAllAvailable() finally q2.stop()
-      // the driver-loop parity follower over the same fixture range
-      val fdir = Files.createTempDirectory("hsf-follower").toString
-      val f = new HeliumFollower(spark,
-        new RpcTxnSource(new JsonRpcClient(endpoint),
-          maxRetries = 2, sleepMs = 0, sleep = _ => ()),
-        s"$fdir/sink", s"$fdir/checkpoint.json", batchSize = 2L)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$fdir/checkpoint.json"),
-        """{"sync_cursor": 99}""")
-      f.runToTip(102L)
-      def rows(root: String, c: String) =
-        spark.read.parquet(s"$root/$c").drop("batch")
-          .collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      for (c <- Seq("payments", "poc_receipts")) {
-        assert(rows(s"$dir/sink", c) === rows(s"$fdir/sink", c),
-          s"collection $c diverged from the driver loop")
-        assert(rows(s"$dir/sink", c).nonEmpty, s"collection $c empty")
-      }
-      // accounts: the A3 collapse-at-read distinct view on both sides
-      def accounts(root: String) =
-        spark.read.parquet(s"$root/accounts").select("_key").distinct()
-          .collect().map(_.getString(0)).toSet
-      assert(accounts(s"$dir/sink") === accounts(s"$fdir/sink"))
-      assert(accounts(s"$dir/sink") ===
-        Set("alice", "bob", "carol", "dave"))
-      // the kill really was mid-backfill: run 1 committed strictly
-      // fewer payment edges than the finished stream
-      assert(partialPayments <
-        rows(s"$dir/sink", "payments").size.toLong,
-        "run 1 unexpectedly drained the whole backlog")
     }
-  }
-
-  test("capstone wire sink: engine-driven importBulk POSTs carry the " +
-    "same documents as the driver loop's") {
-    import graft.streaming.{HeliumFollower, HeliumStreamFollower}
-    import scala.jdk.CollectionConverters._
-    // compact to_json docs contain no nested objects/arrays here, so
-    // splitting on "},{" recovers the exact document bytes (the
-    // HeliumFollowerSpec convention)
-    def docs(bodies: Seq[String]): Set[String] = bodies.flatMap { b =>
-      assert(b.startsWith("[") && b.endsWith("]"))
-      b.stripPrefix("[").stripSuffix("]").split("\\},\\{")
-        .filter(_.nonEmpty)
-        .map(d => (if (d.startsWith("{")) d else "{" + d) +
-          (if (d.endsWith("}")) "" else "}"))
-    }.toSet
-    def collect(posted: Seq[(String, String)], c: String): Set[String] = {
-      posted.foreach { case (path, _) =>
-        assert(path.contains("&type=list&onDuplicate=ignore"))
-      }
-      docs(posted.collect {
-        case (p, b) if p.contains(s"collection=$c&") => b
-      })
+    val env = envelopes(spark, 99L, 102L)
+    for (c <- Seq("payments", "poc_receipts")) {
+      assert(committed(spark, s"$dir/sink", c) === rows(collection(env, c)),
+        s"collection $c differs from the fixture reference")
+      assert(committed(spark, s"$dir/sink", c).nonEmpty, s"collection $c empty")
     }
-    // engine-driven: 1-height epochs
-    val streamPosts = StubNode.withServerImports() { (endpoint, imports) =>
-      val dir = Files.createTempDirectory("hsf-wire").toString
-      val q = HeliumStreamFollower.writer(spark, endpoint,
-        s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
-        maxHeightsPerTrigger = 1L, numPartitions = 2,
-        maxRetries = 2, sleepMs = 0L,
-        importTarget = Some(
-          graft.sinks.GraphSink.ImportTarget(endpoint, "helium")))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      imports.asScala.toSeq
-    }
-    // driver loop: 2-height batches — DIFFERENT epoch boundaries, so
-    // document-set parity (insert-ignore's collapse unit) is the
-    // invariant, not body-level bytes
-    val loopPosts = StubNode.withServerImports() { (endpoint, imports) =>
-      val dir = Files.createTempDirectory("hsf-wire-loop").toString
-      val f = new HeliumFollower(spark,
-        new RpcTxnSource(new JsonRpcClient(endpoint),
-          maxRetries = 2, sleepMs = 0, sleep = _ => ()),
-        s"$dir/sink", s"$dir/checkpoint.json", batchSize = 2L,
-        importTarget = Some(
-          graft.sinks.GraphSink.ImportTarget(endpoint, "helium")))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/checkpoint.json"),
-        """{"sync_cursor": 99}""")
-      f.runToTip(102L)
-      imports.asScala.toSeq
-    }
-    for (c <- Seq("payments", "poc_receipts", "accounts")) {
-      val s = collect(streamPosts, c)
-      assert(s === collect(loopPosts, c),
-        s"wire documents for $c diverged from the driver loop")
-      assert(s.nonEmpty, s"no documents posted for $c")
-    }
+    // accounts: the A3 collapse-at-read distinct view
+    val accounts = accountKeys(spark.read.parquet(s"$dir/sink/accounts"))
+    assert(accounts === accountKeys(collection(env, "accounts")))
+    assert(accounts === Set("alice", "bob", "carol", "dave"))
+    // the kill really was mid-backfill: run 1 committed strictly fewer
+    // payment edges than the finished stream
+    assert(partialPayments <
+      committed(spark, s"$dir/sink", "payments").size.toLong,
+      "run 1 unexpectedly drained the whole backlog")
   }
 
   test("concurrent collection legs: every epoch job carries the query's " +
     "job group, and each block and transaction is fetched once") {
-    import graft.streaming.HeliumStreamFollower
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -187,19 +118,18 @@ class HeliumBlockStreamSpec extends SparkSpec {
     val listed = heights.map(h => mapper.readTree(
       graft.sources.HeliumFixtures.blockJsonByHeight(h))
       .get("transactions").size()).sum
-    StubNode.withServerCalls { (endpoint, calls) =>
+    StubNode.withServerCalls() { (endpoint, calls) =>
       val dir = Files.createTempDirectory("hsf-legs").toString
       val sc = spark.sparkContext
       sc.addSparkListener(listener)
       val marker = "hsf-legs-drained"
       try {
-        val q = HeliumStreamFollower.writer(spark, endpoint,
+        val q = HeliumStreamFollower.start(spark, endpoint,
           s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
           maxHeightsPerTrigger = 1L, numPartitions = 2,
           maxRetries = 2, sleepMs = 0L,
           importTarget = Some(
             graft.sinks.GraphSink.ImportTarget(endpoint, "helium")))
-          .start()
         val runId =
           try { q.processAllAvailable(); q.runId.toString }
           finally q.stop()
@@ -222,64 +152,9 @@ class HeliumBlockStreamSpec extends SparkSpec {
     }
   }
 
-  test("capstone housekeeping: retention drop and inventory refresh " +
-    "fire per epoch, matching the driver loop") {
-    import graft.streaming.{HeliumFollower, HeliumStreamFollower}
-    def partitions(root: String): Seq[String] =
-      Option(new java.io.File(root).list()).fold(Seq.empty[String])(
-        _.filter(_.startsWith("batch=")).sorted.toSeq)
-    def receipts(root: String): Seq[String] =
-      spark.read.parquet(root).drop("batch")
-        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    // engine-driven: 1-height epochs, keep 1 block of receipts, a
-    // stale inventory (height 0) against a tiny lag so the refresh
-    // trigger must fire every epoch
-    val (sParts, sRows, sRefreshes) = StubNode.withServer() { endpoint =>
-      val dir = Files.createTempDirectory("hsf-keep").toString
-      var refreshes = 0
-      val q = HeliumStreamFollower.writer(spark, endpoint,
-        s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
-        maxHeightsPerTrigger = 1L, numPartitions = 2,
-        maxRetries = 2, sleepMs = 0L,
-        receiptRetentionBlocks = Some(1L),
-        inventoryHeight = () => Some(0L),
-        onInventoryRefresh = () => refreshes += 1,
-        inventoryLag = 1L).start()
-      try q.processAllAvailable() finally q.stop()
-      (partitions(s"$dir/sink/poc_receipts"),
-        receipts(s"$dir/sink/poc_receipts"), refreshes)
-    }
-    // driver loop: same per-height batching and retention config
-    val (lParts, lRows, lRefreshes) = StubNode.withServer() { endpoint =>
-      val dir = Files.createTempDirectory("hsf-keep-loop").toString
-      var refreshes = 0
-      val f = new HeliumFollower(spark,
-        new RpcTxnSource(new JsonRpcClient(endpoint),
-          maxRetries = 2, sleepMs = 0, sleep = _ => ()),
-        s"$dir/sink", s"$dir/checkpoint.json", batchSize = 1L,
-        receiptRetentionBlocks = Some(1L),
-        inventoryHeight = () => Some(0L),
-        onInventoryRefresh = () => refreshes += 1,
-        inventoryLag = 1L)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/checkpoint.json"),
-        """{"sync_cursor": 99}""")
-      f.runToTip(102L)
-      (partitions(s"$dir/sink/poc_receipts"),
-        receipts(s"$dir/sink/poc_receipts"), refreshes)
-    }
-    assert(sParts === lParts, "retained partitions diverged")
-    assert(sParts.nonEmpty && sParts.size < 3,
-      s"retention never dropped anything: $sParts")
-    assert(sRows === lRows, "retained receipt rows diverged")
-    assert(sRefreshes > 0 && lRefreshes > 0,
-      "inventory refresh trigger never fired")
-  }
-
   test("capstone kill/restart byte parity with the production " +
     "RocksDB conf set (this query keeps no streaming state — the " +
     "provider's stateful behavior is pinned in StreamingOpsSpec)") {
-    import graft.streaming.{HeliumFollower, HeliumStreamFollower}
     // the production state-store config (Sessions.tuned
     // rocksdbStateStore = true), set per-query — the conf keys are
     // read at stream start, the StreamingOpsSpec discipline. The
@@ -298,34 +173,25 @@ class HeliumBlockStreamSpec extends SparkSpec {
     spark.conf.set(changelogKey, "true")
     try {
       val dir = Files.createTempDirectory("hsf-rocks").toString
-      def writer(endpoint: String) = HeliumStreamFollower.writer(spark,
+      def start(endpoint: String) = HeliumStreamFollower.start(spark,
         endpoint, s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
         maxHeightsPerTrigger = 1L, numPartitions = 2,
         maxRetries = 2, sleepMs = 0L)
       StubNode.withServer(tipCap = 100L) { endpoint =>
-        val q1 = writer(endpoint).start()
+        val q1 = start(endpoint)
         try q1.processAllAvailable() finally q1.stop()
       }
       StubNode.withServer() { endpoint =>
-        val q2 = writer(endpoint).start()
+        val q2 = start(endpoint)
         try q2.processAllAvailable() finally q2.stop()
-        val fdir = Files.createTempDirectory("hsf-rocks-loop").toString
-        val f = new HeliumFollower(spark,
-          new RpcTxnSource(new JsonRpcClient(endpoint),
-            maxRetries = 2, sleepMs = 0, sleep = _ => ()),
-          s"$fdir/sink", s"$fdir/checkpoint.json", batchSize = 2L)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$fdir/checkpoint.json"),
-          """{"sync_cursor": 99}""")
-        f.runToTip(102L)
-        def rows(root: String, c: String) =
-          spark.read.parquet(s"$root/$c").drop("batch")
-            .collect().map(_.toSeq.mkString("|")).sorted.toSeq
-        for (c <- Seq("payments", "poc_receipts")) {
-          assert(rows(s"$dir/sink", c) === rows(s"$fdir/sink", c),
-            s"collection $c diverged under RocksDB state store")
-          assert(rows(s"$dir/sink", c).nonEmpty, s"collection $c empty")
-        }
+      }
+      val env = envelopes(spark, 99L, 102L)
+      for (c <- Seq("payments", "poc_receipts")) {
+        assert(committed(spark, s"$dir/sink", c) ===
+          rows(collection(env, c)),
+          s"collection $c diverged under RocksDB state store")
+        assert(committed(spark, s"$dir/sink", c).nonEmpty,
+          s"collection $c empty")
       }
     } finally {
       prior.fold(spark.conf.unset(providerKey))(
@@ -335,9 +201,7 @@ class HeliumBlockStreamSpec extends SparkSpec {
   }
 
   test("empty-tail epoch: partition names, retention, and refresh " +
-    "trigger follow the committed offset range, matching the driver " +
-    "loop") {
-    import graft.streaming.{HeliumFollower, HeliumStreamFollower}
+    "trigger follow the committed offset range") {
     // a tip block the node serves with ZERO transactions: the final
     // (101, 103] epoch carries data only from height 102, so a
     // data-max partition name would commit batch=102 and compute the
@@ -346,98 +210,62 @@ class HeliumBlockStreamSpec extends SparkSpec {
     val emptyTip = Map(103L ->
       ("""{"hash":"bh103","height":103,"prev_hash":"bh102",""" +
         """"time":1600000400,"transactions":[]}"""))
-    def partitions(root: String): Seq[String] =
-      Option(new java.io.File(root).list()).fold(Seq.empty[String])(
-        _.filter(_.startsWith("batch=")).sorted.toSeq)
-    def rows(root: String): Seq[String] =
-      spark.read.parquet(root).drop("batch")
-        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    val (sParts, sRows) =
-      StubNode.withServer(extraBlocks = emptyTip) { endpoint =>
-        val dir = Files.createTempDirectory("hsf-tail").toString
-        val q = HeliumStreamFollower.writer(spark, endpoint,
-          s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
-          maxHeightsPerTrigger = 2L, numPartitions = 2,
-          maxRetries = 2, sleepMs = 0L,
-          receiptRetentionBlocks = Some(1L),
-          inventoryHeight = () => Some(0L),
-          onInventoryRefresh = () => (),
-          inventoryLag = 1L).start()
-        try q.processAllAvailable() finally q.stop()
-        (partitions(s"$dir/sink/payments"), rows(s"$dir/sink/payments"))
-      }
-    val (lParts, lRows) = StubNode.withServer(extraBlocks = emptyTip) {
-      endpoint =>
-        val dir = Files.createTempDirectory("hsf-tail-loop").toString
-        val f = new HeliumFollower(spark,
-          new RpcTxnSource(new JsonRpcClient(endpoint),
-            maxRetries = 2, sleepMs = 0, sleep = _ => ()),
-          s"$dir/sink", s"$dir/checkpoint.json", batchSize = 2L,
-          receiptRetentionBlocks = Some(1L),
-          inventoryHeight = () => Some(0L),
-          onInventoryRefresh = () => (),
-          inventoryLag = 1L)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/checkpoint.json"),
-          """{"sync_cursor": 99}""")
-        f.runToTip(103L)
-        (partitions(s"$dir/sink/payments"), rows(s"$dir/sink/payments"))
+    StubNode.withServer(extraBlocks = emptyTip) { endpoint =>
+      val dir = Files.createTempDirectory("hsf-tail").toString
+      val refreshes = new java.util.concurrent.atomic.AtomicInteger
+      val q = HeliumStreamFollower.start(spark, endpoint,
+        s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
+        maxHeightsPerTrigger = 2L, numPartitions = 2,
+        maxRetries = 2, sleepMs = 0L,
+        receiptRetentionBlocks = Some(1L),
+        // fires only when the epoch end is past 102: 103 yes, 102 no
+        inventoryHeight = () => Some(102L),
+        onInventoryRefresh = () => { refreshes.incrementAndGet(); () },
+        inventoryLag = 0L)
+      try q.processAllAvailable() finally q.stop()
+      // the final epoch's partition is batch=103 (the committed offset
+      // end), not the data max 102
+      assert(partitions(s"$dir/sink/payments") ===
+        Seq("batch=101", "batch=103"))
+      // retention cutoff 103 - 1 = 102 dropped the receipts of batch=101
+      assert(partitions(s"$dir/sink/poc_receipts") === Seq("batch=103"))
+      assert(refreshes.get() === 1, "refresh trigger missed epoch end 103")
+      assert(committed(spark, s"$dir/sink", "payments") ===
+        rows(collection(envelopes(spark, 99L, 103L), "payments")))
     }
-    // the final epoch's partition must be batch=103 (the committed
-    // offset end) on BOTH paths, not the data max 102
-    assert(sParts === lParts, "partition names diverged")
-    assert(sParts.contains("batch=103"),
-      s"empty-tail epoch not named by its offset end: $sParts")
-    assert(sRows === lRows, "payment rows diverged")
   }
 
-  test("whole-epoch block_get failure: the streamed path commits the " +
-    "WAL-named empty partition, the driver loop commits nothing " +
-    "(the documented commitBatch divergence)") {
-    import graft.streaming.{HeliumFollower, HeliumStreamFollower}
+  test("whole-epoch block_get failure: the WAL-named empty partition " +
+    "is committed") {
     // tip advanced to 103 but block_get(103) permanently fails: with
     // 1-height epochs the final (102, 103] epoch's every block fails,
-    // retry-then-skip yields an empty envelope
-    def partitions(root: String): Seq[String] =
-      Option(new java.io.File(root).list()).fold(Seq.empty[String])(
-        _.filter(_.startsWith("batch=")).sorted.toSeq)
-    val sParts = StubNode.withServer(prunedHeights = Set(103L)) {
-      endpoint =>
-        val dir = Files.createTempDirectory("hsf-pruned").toString
-        val q = HeliumStreamFollower.writer(spark, endpoint,
-          s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
-          maxHeightsPerTrigger = 1L, numPartitions = 2,
-          maxRetries = 2, sleepMs = 0L).start()
-        try q.processAllAvailable() finally q.stop()
-        partitions(s"$dir/sink/payments")
+    // retry-then-skip yields an empty envelope (DECISIONS DR-3)
+    StubNode.withServer(prunedHeights = Set(103L)) { endpoint =>
+      val dir = Files.createTempDirectory("hsf-pruned").toString
+      val q = HeliumStreamFollower.start(spark, endpoint,
+        s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
+        maxHeightsPerTrigger = 1L, numPartitions = 2,
+        maxRetries = 2, sleepMs = 0L)
+      try q.processAllAvailable() finally q.stop()
+      // the engine committed (102, 103], so the epoch IS processed:
+      // an empty batch=103 partition, never a silent gap (the rows
+      // below equal the reference, so batch=103 holds none)
+      val parts = partitions(s"$dir/sink/payments")
+      assert(parts.contains("batch=103"),
+        s"WAL-committed failed epoch left no partition: $parts")
+      assert(parts === Seq("batch=100", "batch=101", "batch=102",
+        "batch=103"))
+      assert(committed(spark, s"$dir/sink", "payments") ===
+        rows(collection(envelopes(spark, 99L, 103L), "payments")))
     }
-    // the engine committed (102, 103], so the epoch IS processed:
-    // an empty batch=103 partition, never a silent gap
-    assert(sParts.contains("batch=103"),
-      s"WAL-committed failed epoch left no partition: $sParts")
-    val lParts = StubNode.withServer(prunedHeights = Set(103L)) {
-      endpoint =>
-        val dir = Files.createTempDirectory("hsf-pruned-loop").toString
-        val f = new HeliumFollower(spark,
-          new RpcTxnSource(new JsonRpcClient(endpoint),
-            maxRetries = 2, sleepMs = 0, sleep = _ => ()),
-          s"$dir/sink", s"$dir/checkpoint.json", batchSize = 1L)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/checkpoint.json"),
-          """{"sync_cursor": 99}""")
-        f.runToTip(103L)
-        partitions(s"$dir/sink/payments")
-    }
-    // the driver loop stops short: no batch=103 — the divergence the
-    // commitBatch scaladoc documents
-    assert(!lParts.contains("batch=103"),
-      s"driver loop unexpectedly committed the failed epoch: $lParts")
-    assert(sParts.filterNot(_ == "batch=103") === lParts,
-      "paths diverged beyond the documented empty-epoch case")
   }
 
   test("uncapped: the whole backlog arrives in one micro-batch") {
-    StubNode.withServer() { endpoint =>
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val listed = (100L to 102L).map(h => mapper.readTree(
+      graft.sources.HeliumFixtures.blockJsonByHeight(h))
+      .get("transactions").size()).sum
+    StubNode.withServerCalls() { (endpoint, calls) =>
       val ckpt = Files.createTempDirectory("hbs-ckpt2").toString
       val q = spark.readStream
         .format(classOf[HeliumBlockStreamProvider].getName)
@@ -451,13 +279,12 @@ class HeliumBlockStreamSpec extends SparkSpec {
       try {
         q.processAllAvailable()
         assert(q.recentProgress.count(_.numInputRows > 0) === 1)
-        val batch = new RpcTxnSource(new JsonRpcClient(endpoint),
-          maxRetries = 2, sleepMs = 0, sleep = _ => ())
-          .fetchRange(spark, 99L, 102L).get
-        assert(envelopeRows(
-          spark.sql("SELECT * FROM helium_blocks_whole"))
-          === envelopeRows(batch))
+        assertFixtureEnvelopes(spark.sql("SELECT * FROM helium_blocks_whole"))
       } finally q.stop()
+      // the one epoch fanned (99, 102] out over the default 4-way
+      // partitioning without fetching any height or txn twice
+      assert(calls.get("block_get") === 3L)
+      assert(calls.get("transaction_get") === listed.toLong)
     }
   }
 }

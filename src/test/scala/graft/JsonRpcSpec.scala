@@ -1,13 +1,15 @@
 package graft
 
+import java.nio.file.Files
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import graft.operators.HeliumGraph
-import graft.sources.{HeliumFixtures, JsonRpcClient, RpcTxnSource}
+import graft.sources.{HeliumBlockStreamProvider, JsonRpcClient}
 
 /** End-to-end S1-S3 over a real HTTP round-trip: the StubNode serves
-  * the Helium fixtures; the RpcTxnSource must reproduce the fixture
-  * envelope DataFrame and feed the parity transforms unchanged.
+  * the Helium fixtures; the client unwraps results and maps −100 to
+  * missing, and the stream reader retries a not-yet-indexed payload,
+  * then skips it (T4).
   */
 class JsonRpcSpec extends SparkSpec {
 
@@ -26,82 +28,30 @@ class JsonRpcSpec extends SparkSpec {
     }
   }
 
-  test("RpcTxnSource reproduces the fixture envelopes end-to-end") {
-    StubNode.withServer() { endpoint =>
-      val src = new RpcTxnSource(new JsonRpcClient(endpoint),
-        maxRetries = 2, sleepMs = 0, sleep = _ => ())
-      val env = src.fetchRange(spark, 99L, 102L).get
-      // the listing dedups the duplicate tx1 row; everything else
-      // equal. Payload bytes are compared SEMANTICALLY (via the
-      // derived edges below): jackson re-serialization drops the
-      // fixture JSON's incidental whitespace.
-      val expected = HeliumFixtures.txnEnvelopes(spark).distinct()
-      val meta = Seq("block", "block_time", "hash", "type").map
-        { org.apache.spark.sql.functions.col }
-      assert(env.count() === expected.count())
-      assert(env.select(meta: _*).exceptAll(expected.select(meta: _*))
-        .isEmpty)
-      // beyond-tip range → None (chain tip not reached)
-      assert(src.fetchRange(spark, 200L, 210L).isEmpty)
-      // the parity transforms over the live-fetched frame produce the
-      // exact same edges as over the fixture frame — every
-      // payload-derived value round-trips the wire intact
-      def rows(d: org.apache.spark.sql.DataFrame) =
-        d.collect().map(_.toSeq).toSet
-      def edges(d: org.apache.spark.sql.DataFrame) =
-        rows(HeliumGraph.paymentV1Edges(d).dropDuplicates("_key")) ++
-          rows(HeliumGraph.paymentV2Edges(d))
-      assert(edges(env) === edges(expected))
-      assert(edges(env).size === 5)
-      assert(rows(HeliumGraph.receiptEdges(env)) ===
-        rows(HeliumGraph.receiptEdges(expected)))
-      assert(rows(HeliumGraph.receiptEdges(env)).size === 3)
-    }
-  }
-
-  test("fetchRangeBulk fans the backfill out across partitions") {
-    StubNode.withServer() { endpoint =>
-      val clients = spark.sparkContext.longAccumulator("clients")
-      val calls = spark.sparkContext.longAccumulator("rpc_calls")
-      val mk = () => {
-        clients.add(1)
-        new JsonRpcClient(endpoint, (e, b) => {
-          calls.add(1); JsonRpcClient.httpPost(e, b)
-        })
-      }
-      val bulk = RpcTxnSource.fetchRangeBulk(spark, mk, 99L, 102L,
-        numPartitions = 3, maxRetries = 2, sleepMs = 0, sleep = _ => ())
-      val serial = new RpcTxnSource(new JsonRpcClient(endpoint),
-        maxRetries = 2, sleepMs = 0, sleep = _ => ())
-        .fetchRange(spark, 99L, 102L).get
-      // identical envelope set to the serial path (ONE action on bulk,
-      // so the accumulators below count a single execution)
-      def metaSet(d: org.apache.spark.sql.DataFrame) =
-        d.select("block", "block_time", "hash", "type")
-          .collect().map(_.toSeq).toSet
-      val bulkMeta = metaSet(bulk)
-      assert(bulkMeta === metaSet(serial))
-      assert(bulkMeta.size === 6)
-      // one client per non-empty height slice (3 heights → 3 slices),
-      // and every slice actually issued RPCs from its own task
-      assert(clients.value === 3L)
-      // 3 block_gets + 6 transaction_gets, spread across the slices
-      assert(calls.value === 9L)
-    }
-  }
-
   test("T4: a not-yet-indexed txn is retried, then skipped on exhaustion") {
-    // tx2 succeeds on the 3rd try; tx3 exhausts its retries → skipped
-    StubNode.withServer(flaky = Map("tx2" -> 2, "tx3" -> 99)) { endpoint =>
-      var sleeps = 0
-      val src = new RpcTxnSource(new JsonRpcClient(endpoint),
-        maxRetries = 3, sleepMs = 10, sleep = _ => sleeps += 1)
-      val env = src.fetchRange(spark, 99L, 102L).get
-      val hashes = env.select("hash").distinct()
-        .collect().map(_.getString(0)).toSet
-      assert(hashes.contains("tx2"), "flaky txn recovered by retry")
-      assert(!hashes.contains("tx3"), "exhausted txn skipped, not fatal")
-      assert(sleeps >= 2 + 3, "retry policy slept between attempts")
+    // tx2 succeeds on the 3rd try; tx3 exhausts its retries → skipped.
+    // Through the stream reader, which sleeps for real: sleepMs = 0.
+    StubNode.withServerCalls(flaky = Map("tx2" -> 2, "tx3" -> 99)) {
+      (endpoint, calls) =>
+        val ckpt = Files.createTempDirectory("rpc-t4").toString
+        val q = spark.readStream
+          .format(classOf[HeliumBlockStreamProvider].getName)
+          .option("endpoint", endpoint)
+          .option("startHeight", "99")
+          .option("maxRetries", "3").option("sleepMs", "0")
+          .load()
+          .writeStream.format("memory").queryName("helium_blocks_t4")
+          .option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+        val hashes = spark.sql("SELECT DISTINCT hash FROM helium_blocks_t4")
+          .collect().map(_.getString(0)).toSet
+        assert(hashes.contains("tx2"), "flaky txn recovered by retry")
+        assert(!hashes.contains("tx3"), "exhausted txn skipped, not fatal")
+        assert(hashes === Set("tx1", "tx2", "tx4", "tx5", "tx6"))
+        // 6 listed txns fetched once each, plus 2 retries of tx2 and
+        // all 3 retries of tx3
+        assert(calls.get("transaction_get") === 6L + 2L + 3L)
     }
   }
 }

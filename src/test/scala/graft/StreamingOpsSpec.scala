@@ -40,25 +40,24 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("file-source streaming run of the follower transform (AvailableNow)") {
-    // stream the events table through the same transformBatch the
-    // batch Follower uses — the unified-API path: readStream +
-    // foreachBatch + Trigger.AvailableNow drains and stops.
+    // stream the fixture envelopes through the follower's payment
+    // transform — the unified-API path: readStream + foreachBatch +
+    // Trigger.AvailableNow drains and stops.
     val dir = java.nio.file.Files.createTempDirectory("stream").toString
-    val src = table("events")
+    val src = graft.sources.HeliumFixtures.txnEnvelopes(spark)
     src.write.mode("overwrite").parquet(s"$dir/in")
     val counts = new java.util.concurrent.atomic.AtomicLong(0)
-    val follower = new graft.streaming.Follower(
-      spark, sf0001, s"$dir/sink", s"$dir/cp.json", 400L)
     val q = spark.readStream.schema(src.schema).parquet(s"$dir/in")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        counts.addAndGet(follower.transformBatch(batch).count())
+        counts.addAndGet(
+          FixtureReference.collection(batch, "payments").count())
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(60000)
-    assert(counts.get() === 1000L) // all events, deduped keys unique
+    assert(counts.get() === 5L) // every payment edge, deduped keys unique
   }
 
   test("watermark drops late data in append mode") {

@@ -62,11 +62,12 @@ object StubNode {
 
   /** Variant exposing per-method JSON-RPC call counts (method → calls,
     * each counted before its reply is sent), so specs can pin how many
-    * times the follower fetched each block and transaction.
+    * times the follower fetched each block and transaction — retries
+    * of `flaky` hashes included.
     */
-  def withServerCalls[A](
+  def withServerCalls[A](flaky: Map[String, Int] = Map.empty)(
       f: (String, java.util.Map[String, java.lang.Long]) => A): A =
-    withServerCore(Map.empty, Long.MaxValue, Map.empty, Set.empty,
+    withServerCore(flaky, Long.MaxValue, Map.empty, Set.empty,
       Map.empty) { (endpoint, _, _, calls) => f(endpoint, calls) }
 
   private def withServerCore[A](flaky: Map[String, Int],
