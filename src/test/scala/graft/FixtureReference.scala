@@ -61,6 +61,18 @@ object FixtureReference {
   def derived(env: DataFrame): Seq[String] =
     rows(collection(env, "payments")) ++ rows(collection(env, "poc_receipts"))
 
+  /** The documents of importBulk bodies. Compact to_json docs contain
+    * no nested objects or arrays here, so splitting on "},{" recovers
+    * the exact document bytes.
+    */
+  def importDocs(bodies: Seq[String]): Set[String] = bodies.flatMap { b =>
+    assert(b.startsWith("[") && b.endsWith("]"))
+    b.stripPrefix("[").stripSuffix("]").split("\\},\\{")
+      .filter(_.nonEmpty)
+      .map(d => (if (d.startsWith("{")) d else "{" + d) +
+        (if (d.endsWith("}")) "" else "}"))
+  }.toSet
+
   /** `batch=N` partition names under a collection directory, sorted. */
   def partitions(dir: String): Seq[String] =
     Option(new java.io.File(dir).list()).fold(Seq.empty[String])(

@@ -102,6 +102,77 @@ class HeliumBlockStreamSpec extends SparkSpec {
       "run 1 unexpectedly drained the whole backlog")
   }
 
+  test("capstone wire sink: engine-driven importBulk POSTs carry the " +
+    "same documents as the driver loop's") {
+    import scala.jdk.CollectionConverters._
+    // the driver loop committed 2-height batches; a stream capped at 2
+    // heights per epoch replays that batch schedule, the 1-height
+    // stream a different one. Document-set parity (insert-ignore's
+    // collapse unit) is the invariant across epoch boundaries, not
+    // body-level bytes.
+    def posts(cap: Long): Seq[(String, String)] =
+      StubNode.withServerImports() { (endpoint, imports) =>
+        val dir = Files.createTempDirectory("hsf-wire").toString
+        val q = HeliumStreamFollower.start(spark, endpoint,
+          s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
+          maxHeightsPerTrigger = cap, numPartitions = 2,
+          maxRetries = 2, sleepMs = 0L,
+          importTarget = Some(
+            graft.sinks.GraphSink.ImportTarget(endpoint, "helium")))
+        try q.processAllAvailable() finally q.stop()
+        imports.asScala.toSeq
+      }
+    def collect(posted: Seq[(String, String)], c: String): Set[String] = {
+      posted.foreach { case (path, _) =>
+        assert(path.contains("&type=list&onDuplicate=ignore"))
+      }
+      importDocs(posted.collect {
+        case (p, b) if p.contains(s"collection=$c&") => b
+      })
+    }
+    val streamPosts = posts(1L)
+    val loopPosts = posts(2L)
+    val env = envelopes(spark, 99L, 102L)
+    for (c <- Seq("payments", "poc_receipts", "accounts")) {
+      val s = collect(streamPosts, c)
+      assert(s === collect(loopPosts, c),
+        s"wire documents for $c diverged from the driver loop's batches")
+      assert(s === importDocs(graft.sinks.GraphSink.importBulkBodies(
+        collection(env, c)).collect().toSeq),
+        s"wire documents for $c differ from the fixture reference")
+      assert(s.nonEmpty, s"no documents posted for $c")
+    }
+  }
+
+  test("capstone housekeeping: retention drop and inventory refresh " +
+    "fire per epoch, matching the driver loop") {
+    // 1-height epochs (the driver loop's per-height batching), keep 1
+    // block of receipts, a stale inventory (height 0) against a tiny
+    // lag so the refresh trigger must fire at every epoch
+    StubNode.withServer() { endpoint =>
+      val dir = Files.createTempDirectory("hsf-keep").toString
+      val refreshes = new java.util.concurrent.atomic.AtomicInteger
+      val q = HeliumStreamFollower.start(spark, endpoint,
+        s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
+        maxHeightsPerTrigger = 1L, numPartitions = 2,
+        maxRetries = 2, sleepMs = 0L,
+        receiptRetentionBlocks = Some(1L),
+        inventoryHeight = () => Some(0L),
+        onInventoryRefresh = () => { refreshes.incrementAndGet(); () },
+        inventoryLag = 1L)
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      // the driver loop's outcome: after the last epoch (cursor 102)
+      // the cutoff 101 has dropped batch=100 and kept the rest
+      assert(partitions(s"$dir/sink/poc_receipts") ===
+        Seq("batch=101", "batch=102"))
+      assert(committed(spark, s"$dir/sink", "poc_receipts") ===
+        rows(collection(envelopes(spark, 100L, 102L), "poc_receipts")))
+      assert(refreshes.get() === 3,
+        "inventory refresh trigger did not fire once per epoch")
+    }
+  }
+
   test("concurrent collection legs: every epoch job carries the query's " +
     "job group, and each block and transaction is fetched once") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}

@@ -105,18 +105,9 @@ class HeliumFollowerSpec extends SparkSpec {
         assert(path.startsWith("/_db/helium/_api/import?collection="))
         assert(path.contains("&type=list&onDuplicate=ignore"))
       }
-      // compact to_json docs contain no nested objects/arrays here, so
-      // splitting on "},{" recovers the exact document bytes
-      def docs(bodies: Seq[String]): Set[String] = bodies.flatMap { b =>
-        assert(b.startsWith("[") && b.endsWith("]"))
-        b.stripPrefix("[").stripSuffix("]").split("\\},\\{")
-          .filter(_.nonEmpty)
-          .map(d => (if (d.startsWith("{")) d else "{" + d) +
-            (if (d.endsWith("}")) "" else "}"))
-      }.toSet
       val env = envelopes(spark, 99L, 102L)
       for (c <- collections) {
-        val wire = docs(posted.collect {
+        val wire = importDocs(posted.collect {
           case (p, b) if p.contains(s"collection=$c&") => b
         })
         // per collection, the documents on the wire are byte-identical
@@ -127,11 +118,11 @@ class HeliumFollowerSpec extends SparkSpec {
           GraphSink.importBulkBodies(
             spark.read.parquet(s"$dir/sink/$c/$p")).collect()
         }
-        assert(wire === docs(expected), s"collection $c wire mismatch")
+        assert(wire === importDocs(expected), s"collection $c wire mismatch")
         assert(wire.nonEmpty, s"collection $c posted nothing")
         // ...and, as a document set (insert-ignore's collapse unit), to
         // the fixture reference's bodies
-        assert(wire === docs(GraphSink.importBulkBodies(
+        assert(wire === importDocs(GraphSink.importBulkBodies(
           collection(env, c)).collect().toSeq),
           s"collection $c differs from the fixture reference on the wire")
       }
