@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Fixture-only calibration queries (they read no sf-scaled
     * testdata — BASELINE.md §3.1): their medians separate machine
@@ -83,17 +82,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Per-query medians of `reps` runs in ONE JVM (warm tables, warm
     // codegen) — the agreed round-over-round instrument after two
     // rounds were muddied by machine noise (r11's 367 s anomaly; r12
     // burned five full runs re-establishing the number).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Bench session only: the two-stage rank template's ~32-row _pid
     // windows are bounded by construction (PlanCheck traces them), and
     // their per-run WindowExec WARN spam buried the guard verdict in
@@ -102,9 +96,7 @@ object Bench {
     // Warm up the JVM/codegen/scheduler and the parquet footers once so
     // whichever query the Map iterates first doesn't absorb session
     // startup (~5s) into its measurement.
-    Tables.names.foreach(n =>
-      try Tables.load(spark, sfDir, n).count()
-      catch { case _: Throwable => () })
+    Tables.warm(spark, sfDir)
     // noop sink: forces FULL evaluation of every output column.
     // count() would let Catalyst prune the projections away and time
     // an empty scan for map-only queries.

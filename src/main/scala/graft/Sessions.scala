@@ -85,8 +85,12 @@ object Sessions {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
-  /** Local session for tests and ad-hoc runs. */
-  def local(cpus: Int = 4): SparkSession = {
+  /** The one local session: Verify, Bench, the tools and the specs.
+    * Cores default to `SPARK_GRAFT_CPUS`, else 4; shuffle partitions
+    * follow the cores.
+    */
+  def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt))
+      : SparkSession = {
     val s = tuned(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString))

@@ -18,6 +18,16 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** Load every table once, so session startup, codegen and parquet
+    * footers are paid before the first measured query (and operators
+    * that size-probe their inputs at build time see warm tables).
+    * Missing tables are skipped: fixture-only runs have none.
+    */
+  def warm(spark: SparkSession, sfDir: String): Unit =
+    names.foreach(n =>
+      try load(spark, sfDir, n).count()
+      catch { case _: Throwable => () })
+
   /** S9 (follower.py:77-95 DDL analog): register every table in the
     * session catalog so the surface is queryable via spark.sql. Edge
     * vs vertex collections are a column convention (_from/_to), not a

@@ -60,12 +60,7 @@ object Verify {
     // on one oracle without running the whole surface.
     val only = args.drop(2).headOption.map(_.split(",").toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val errors =
       dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => keep(kv._1)))
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))

@@ -26,10 +26,6 @@ object Canon {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Seeded variant: h(seed, s) = hash60(seed || '|' || s). */
-  def hash60Seeded(seed: Int, c: Column): Column =
-    hash60(concat(lit(s"$seed|"), c))
-
   /** Universal-hash family over Z_p, p = 2^31-1: seed s maps a base
     * hash h (already reduced mod p) to (A_s·h + B_s) mod p. One md5
     * per token + k cheap affine transforms instead of k md5s — the

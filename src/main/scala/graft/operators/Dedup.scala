@@ -854,7 +854,7 @@ object Dedup {
     * Output per doc: segment counts and the deduplicated text.
     *
     * Shape: segmentation is a row-local Generate (one explode — no
-    * stacked Generates, per the Probe red-flag rule); first-occurrence
+    * stacked Generates, per the PlanCheck red-flag rule); first-occurrence
     * is ONE hash shuffle (window over md5(segment)); re-assembly is
     * ONE groupBy(doc_id) with a sort_array over the kept (idx, seg)
     * structs — per-doc data, never a global sort. Two shuffles total,

@@ -33,13 +33,6 @@ object GraphEtl {
   def contentKey(df: DataFrame, cols: Seq[String]): Column =
     md5(concat_ws("|", cols.sorted.map(c => df(c).cast("string")): _*))
 
-  /** Reference-faithful variant: md5 of the canonical-JSON document
-    * (sorted field names, compact separators). Internal consistency only
-    * — see SURVEY §7.4(2).
-    */
-  def contentKeyJson(cols: Seq[Column]): Column =
-    md5(to_json(struct(cols: _*)))
-
   /** Payment-edge construction (P2/F1/F5, follower.py:148-158):
     * one edge per lineitem from the ordering customer to the supplier,
     * with a content-hash `_key` for idempotent loading.
@@ -441,13 +434,7 @@ object GraphEtl {
     val e = edges.select(col("_from").as("src"), col("_to").as("dst"))
       .distinct().materialized
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // pinned HASH-PARTITIONED by src (r21, guide §2.4): the
-    // checkpoint preserves the physical partitioning, so each
-    // iteration's ranks⋈eDeg join re-exchanges only the vertex-sized
-    // ranks side — the edge-sized eDeg side (the big one) shuffles
-    // once here instead of once per iteration
-    val eDeg = e.join(outDeg, "src")
-      .repartition(col("src")).materialized
+    val eDeg = e.join(outDeg, "src").materialized
     val vertices = e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct().materialized
     var ranks = vertices.withColumn("rank", lit(1000000L))
@@ -488,9 +475,7 @@ object GraphEtl {
     val e = edges.select(col("_from").as("src"), col("_to").as("dst"))
       .distinct().materialized
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // hash-partitioned pin, same reasoning as pageRankFixedPoint (r21)
-    val eDeg = e.join(outDeg, "src")
-      .repartition(col("src")).materialized
+    val eDeg = e.join(outDeg, "src").materialized
     val vertices = e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct()
       .withColumn("_seed", isSeed)

@@ -1089,7 +1089,7 @@ object Similarity {
     *
     * The artifacts are built ONCE per (input plan, parameters) per JVM
     * ([[persistedIndexDir]], ADVICE r16): repeated constructions —
-    * bench reps, PlanCheck/Probe sweeps — reuse the registered
+    * bench reps, PlanCheck sweeps — reuse the registered
     * directory, and a shutdown hook deletes every registered dir at
     * JVM exit (index files, not scratch, while the "deployment" runs).
     */
@@ -1150,7 +1150,7 @@ object Similarity {
     * ([[graft.plans.LazyBuildParquet]]), which Spark performs when an
     * action materializes the scan — never during analysis,
     * optimization, physical planning, or `.explain`. A plan-only
-    * sweep (PlanCheck/Probe) therefore constructs and classifies the
+    * sweep (PlanCheck) therefore constructs and classifies the
     * full search plan without executing a build. The build also no
     * longer runs inside the ConcurrentHashMap mapping function
     * (ADVICE r17): `computeIfAbsent` only allocates the holder, and
@@ -1888,7 +1888,7 @@ object Similarity {
     * corpus-keyed self-join + top-k window (≈6 exchanges and 2 full
     * per-partition sorts → 3 exchanges + the two fetch joins, no
     * sort). Extracted as a named builder so the descent loop and the
-    * plans/rNN round-plan evidence (tools/RoundPlan) compose the
+    * plans/rNN round-plan evidence (`tools.Main rounds`) compose the
     * identical frame.
     */
   private[graft] def nnDescentRoundFrame(e: DataFrame, g: DataFrame,
@@ -1913,7 +1913,7 @@ object Similarity {
       "vec_id", "nbr_id", "sim", k)
   }
 
-  /** Dev-only (tools/RoundPlan, r21): the two fused round frames,
+  /** Dev-only (`tools.Main rounds`, r21): the two fused round frames,
     * LAZY, over a minimal eagerly-built chain prefix — the committed
     * per-round plan evidence for the exchange counts the static query
     * plans cannot show (the rounds materialize eagerly). Composes the
@@ -2217,7 +2217,7 @@ object Similarity {
     * aggregate exchange; the hop⋈frontier duplicates are
     * bit-identical rows that array_distinct removes). Extracted as a
     * named builder so the walk loop and the plans/rNN round-plan
-    * evidence (tools/RoundPlan) compose the identical frame.
+    * evidence (`tools.Main rounds`) compose the identical frame.
     */
   private[graft] def beamRoundFrame(e: DataFrame, gsym: DataFrame,
                                     q: DataFrame, frontier: DataFrame,

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * directory (and therefore needs its files to exist) at DataFrame
   * CONSTRUCTION time, which is why the s51/s52 persisted-index gates
   * used to execute a full Spark index build inside every plan-only
-  * sweep (PlanCheck, Probe): constructing the query forced the build.
+  * sweep (PlanCheck): constructing the query forced the build.
   * Here the relation is assembled directly from its parts — the known
   * data schema plus a [[LazyBuildFileIndex]] — so analysis,
   * optimization, physical planning, and `.explain` never touch the

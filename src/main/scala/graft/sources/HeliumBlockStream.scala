@@ -116,6 +116,7 @@ final class HeliumBlockMicroBatchStream(endpoint: String,
   require(numPartitions > 0,
     s"numPartitions must be > 0; got $numPartitions")
   private val client = new JsonRpcClient(endpoint)
+  @volatile private var probedTip: Offset = null
 
   override def initialOffset(): Offset = HeightOffset(startHeight)
 
@@ -136,6 +137,7 @@ final class HeliumBlockMicroBatchStream(endpoint: String,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[HeightOffset].height
     val tip = client.height()
+    probedTip = HeightOffset(tip)
     val end = limit match {
       case r: ReadMaxRows => math.min(tip, s + r.maxRows())
       case _ => tip
@@ -143,13 +145,19 @@ final class HeliumBlockMicroBatchStream(endpoint: String,
     HeightOffset(math.max(end, s))
   }
 
-  /** The engine always routes through the admission-controlled
-    * overload for SupportsAdmissionControl sources; the plain probe
-    * reports the uncapped tip (also serves reportLatestOffset).
+  /** The uncapped tip of this trigger's probe (null before the first):
+    * the engine calls this right after `latestOffset(start, limit)` on
+    * every trigger, so re-probing here would double the per-trigger
+    * `block_height` RPCs.
     */
-  override def latestOffset(): Offset = HeightOffset(client.height())
+  override def reportLatestOffset(): Offset = probedTip
 
-  override def reportLatestOffset(): Offset = HeightOffset(client.height())
+  /** Never called for a SupportsAdmissionControl source: the engine
+    * always routes through `latestOffset(start, limit)`.
+    */
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead")
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {

@@ -4,10 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.Sessions
-
 /** Versioned plan-flag sweep (VERDICT r14 #3): the red-flag classifier
-  * that `Probe plans` prints ad-hoc, committed as an artifact
+  * over every registered query's plan, committed as an artifact
   * (PLANCHECK.json) and DIFFED against it, so flag-class drift fails
   * loudly instead of being re-derived from BASELINE.md prose each
   * round.
@@ -22,16 +20,16 @@ import graft.Sessions
   * the artifact that no longer flag are INFO-only (an improvement;
   * refresh the artifact at leisure).
   *
-  * Usage:
-  *   runMain graft.tools.PlanCheck            — sweep + diff, exit 1 on drift
-  *   runMain graft.tools.PlanCheck --write    — sweep + (re)write PLANCHECK.json
+  * Usage (sf from SPARK_GRAFT_SF_DIR, session local[8]):
+  *   runMain graft.tools.Main plancheck          — sweep + diff, exit 1 on drift
+  *   runMain graft.tools.Main plancheck --write  — sweep + (re)write PLANCHECK.json
   */
 object PlanCheck {
 
-  /** The flag classes, single source of truth (Probe's `plans` mode
-    * uses this too). Each matches a structural red flag in the STATIC
-    * executed plan; the benign instances are enumerated in
-    * PLANCHECK.json and explained in BASELINE.md §3.3:
+  /** The flag classes, single source of truth. Each matches a
+    * structural red flag in the STATIC executed plan; the benign
+    * instances are enumerated in PLANCHECK.json and explained in
+    * BASELINE.md §3.3:
     * BroadcastNestedLoopJoin = the 1-row-broadcast scalar-anchor
     * class; no-pushed-filter = derived-column filters above their
     * producers; stacked-generate = cheap int-sequence generators
@@ -252,24 +250,22 @@ $body
         }.toSet
     } catch { case _: Throwable => Set.empty }
 
-  def main(args: Array[String]): Unit = {
+  /** `plancheck [--write] [path]`: sweep, then diff against (or with
+    * `--write` re-record) the artifact at `path` → exit code.
+    */
+  def check(spark: SparkSession, args: Seq[String]): Int = {
     val write = args.contains("--write")
     val path = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("PLANCHECK.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val (flagged, errors) = sweep(spark, sfDir)
-    spark.stop()
     errors.foreach(e => println(s"FAIL plancheck-error: $e"))
     if (write) {
       Files.writeString(Paths.get(path), render(sfDir, flagged))
       println(s"PLANCHECK written: ${flagged.size} flagged queries, " +
         s"${flagged.values.map(_.size).sum} flags → $path")
-      if (errors.nonEmpty) sys.exit(1)
+      if (errors.nonEmpty) 1 else 0
     } else {
       val committed = committedPairs(path)
       val current = flagged.toSeq
@@ -286,7 +282,7 @@ $body
       println(s"PLANCHECK ${if (fresh.isEmpty && errors.isEmpty) "OK"
         else "DRIFT"}: ${current.size} flags on ${flagged.size} queries " +
         s"vs ${committed.size} committed pairs")
-      if (fresh.nonEmpty || errors.nonEmpty) sys.exit(1)
+      if (fresh.nonEmpty || errors.nonEmpty) 1 else 0
     }
   }
 }

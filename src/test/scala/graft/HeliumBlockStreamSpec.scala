@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 
 import graft.FixtureReference._
-import graft.sources.HeliumBlockStreamProvider
+import graft.sources.{HeightOffset, HeliumBlockMicroBatchStream,
+  HeliumBlockStreamProvider, HeliumFixtures}
 import graft.streaming.HeliumStreamFollower
 
 /** The DataSource V2 micro-batch face of the S1-S3 seam, driven by
@@ -356,6 +357,22 @@ class HeliumBlockStreamSpec extends SparkSpec {
       // partitioning without fetching any height or txn twice
       assert(calls.get("block_get") === 3L)
       assert(calls.get("transaction_get") === listed.toLong)
+    }
+  }
+
+  test("one tip probe per trigger: the capped end and the reported " +
+    "uncapped tip share one block_height call") {
+    StubNode.withServerCalls() { (endpoint, calls) =>
+      val stream = new HeliumBlockMicroBatchStream(endpoint,
+        startHeight = 99L, maxHeightsPerTrigger = 1L, numPartitions = 2,
+        maxRetries = 2, sleepMs = 0L)
+      assert(stream.reportLatestOffset() === null) // no probe yet
+      assert(stream.latestOffset(HeightOffset(99L),
+        stream.getDefaultReadLimit) === HeightOffset(100L))
+      assert(stream.reportLatestOffset() ===
+        HeightOffset(HeliumFixtures.blockJsonByHeight.keys.max))
+      assert(calls.get("block_height") === 1L)
+      intercept[UnsupportedOperationException](stream.latestOffset())
     }
   }
 }

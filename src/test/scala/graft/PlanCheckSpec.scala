@@ -6,7 +6,7 @@ import graft.tools.PlanCheck
 
 /** The PLANCHECK drift gate's pure logic: classifier, artifact
   * round-trip, and the pair diff that decides pass/fail. The full-plan
-  * sweep itself runs out-of-JVM (`runMain graft.tools.PlanCheck`) —
+  * sweep itself runs out-of-JVM (`runMain graft.tools.Main plancheck`) —
   * this spec pins the pieces that make its exit code trustworthy.
   */
 class PlanCheckSpec extends AnyFunSuite {
