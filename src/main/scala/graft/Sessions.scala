@@ -18,36 +18,9 @@ object Sessions {
     *  - UTC session time zone: oracle (DuckDB) parity.
     *  - AQE on: runtime shuffle-partition coalescing + skew-join
     *    handling — the local[32] stand-in for what matters at 100 TB.
-    *
-    * `rocksdbStateStore = true` switches Structured Streaming state
-    * (streamingDedupFirst's per-key flags, interval-join buffers,
-    * session windows) from the default in-memory HDFS-backed provider
-    * to RocksDB. The default provider holds every key of every state
-    * partition on-heap — at 100 TB of keyed state that is executor OOM
-    * by design; RocksDB keeps state off-heap + on local disk with
-    * incremental changelog checkpointing. Off by default: the gate
-    * suite's fixtures are tiny and the in-memory provider keeps the
-    * local feedback loop fastest. (Also settable per-query before
-    * stream start via the same conf key — it is read at query start,
-    * which is how StreamingOpsSpec exercises both providers in one
-    * session.)
     */
-  def tuned(b: SparkSession.Builder,
-            rocksdbStateStore: Boolean = false): SparkSession.Builder = {
-    val base = if (rocksdbStateStore)
-      b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-        // Changelog checkpointing is NOT Spark's default: without it
-        // every commit uploads a full RocksDB snapshot, which at large
-        // keyed state is the dominant per-batch cost. Incremental
-        // changelogs upload only the delta (snapshots amortize in the
-        // background maintenance task).
-        .config("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-    else b
-    base
-      .withExtensions(new graft.plans.GraftExtensions)
+  def tuned(b: SparkSession.Builder): SparkSession.Builder = {
+    b.withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")

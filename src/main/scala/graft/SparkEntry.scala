@@ -1829,13 +1829,6 @@ object SparkEntry {
   private val pairDot: String =
     foldSum("[a.v[i] * b.v[i] FOR i IN range(1, len(a.v)+1)]")
 
-  /** DuckDB: the NN-descent chain (s28/s29 mirrors, shared so the
-    * gates cannot drift) — embCte + the s08 label-blocked seed as
-    * `g0`, then `rounds` unrolled local-join rounds ending in
-    * `g<rounds>`. Every per-round CTE is MATERIALIZED: the chain
-    * references each round's graph 3× and DuckDB's per-reference
-    * CTE inlining is exponential in rounds (the g15 k-core lesson).
-    */
   /** s29/s30 shared oracle tail after [[nnDescentCte]]: the label-only
     * seed graph, the exact-truth pass over the `vec_id % 50` query
     * subset, and the two recall rows.
@@ -1875,6 +1868,13 @@ object SparkEntry {
        | hd.n_hits::DOUBLE / (n_queries * 5)::DOUBLE
        |FROM nq, hd""".stripMargin
 
+  /** DuckDB: the NN-descent chain (s28/s29 mirrors, shared so the
+    * gates cannot drift) — embCte + the s08 label-blocked seed as
+    * `g0`, then `rounds` unrolled local-join rounds ending in
+    * `g<rounds>`. Every per-round CTE is MATERIALIZED: the chain
+    * references each round's graph 3× and DuckDB's per-reference
+    * CTE inlining is exponential in rounds (the g15 k-core lesson).
+    */
   private def nnDescentCte(rounds: Int, k: Int = 5,
                            base: String = embCte): String = {
     val seed = base +
@@ -2113,10 +2113,6 @@ object SparkEntry {
        | hn.n_hits::DOUBLE / (nq_new * 5)::DOUBLE
        |FROM iq, hn""".stripMargin
 
-  /** s34 oracle tail after [[beamCte]]: the exact corpus-wide truth
-    * over the dial queries, top-k cuts of the entry and final
-    * frontiers, and the two recall rows.
-    */
   /** s50 tail after [[beamCte]] run to `cuts.max` rounds: the exact
     * truth pass (once), then recall@k rows cut at each bf$r.
     */
@@ -2148,6 +2144,10 @@ object SparkEntry {
        |$rows""".stripMargin
   }
 
+  /** s34 oracle tail after [[beamCte]]: the exact corpus-wide truth
+    * over the dial queries, top-k cuts of the entry and final
+    * frontiers, and the two recall rows.
+    */
   private def beamRecallTail(rounds: Int, k: Int): String =
     s""",
        |btrs AS (SELECT a.q_id AS vec_id, b.vec_id AS nbr_id,
@@ -2282,6 +2282,11 @@ object SparkEntry {
       |  SELECT doc_id, bk, count(*) OVER (PARTITION BY bk) AS bsz
       |  FROM banded) WHERE bsz <= 1000)""".stripMargin
 
+  /** Per-row centroid cosine (alias `a` × centroid table `c`). */
+  private val centSim: String =
+    foldSum("[a.v[i] * c.cv[i] FOR i IN range(1, len(a.v)+1)]") +
+      " / (a.nrm * c.cnrm)"
+
   /** Shared deterministic-IVF CTE chain (appended after embCte's `n`):
     * hash-seeded cells (c0), seed-cell assignment (asg0), ONE
     * fixed-point Lloyd round — per-(cell, dim) integer sums of
@@ -2293,11 +2298,6 @@ object SparkEntry {
     * parameters both gated callers (s03, s11) use. Same left-fold dot
     * as the Spark side throughout.
     */
-  /** Per-row centroid cosine (alias `a` × centroid table `c`). */
-  private val centSim: String =
-    foldSum("[a.v[i] * c.cv[i] FOR i IN range(1, len(a.v)+1)]") +
-      " / (a.nrm * c.cnrm)"
-
   private val ivfCte: String = ivfCteOver("n")
 
   /** [[ivfCte]] with the PROBE QUERIES drawn from `$qsrc` while the

@@ -133,6 +133,9 @@ object AsOf {
           + col("t3_us").isNotNull.cast("int")).cast("long").as("stage"))
   }
 
+  /** a04's gated week bucket (µs) — shared with the oracle. */
+  val WeekUs: Long = 7L * 24 * 3600 * 1000000L
+
   /** Cohort retention matrix (a04) — the classic product-analytics
     * complement to [[eventFunnel]]: users cohorted by their FIRST
     * active week, then each (cohort, age) cell counts how many of
@@ -152,9 +155,6 @@ object AsOf {
     * construction age 0 retention is exactly 1.0 — the standard
     * sanity row, and the spec pins it.
     */
-  /** a04's gated week bucket (µs) — shared with the oracle. */
-  val WeekUs: Long = 7L * 24 * 3600 * 1000000L
-
   def cohortRetention(events: DataFrame, bucketUs: Long = WeekUs)
       : DataFrame = {
     require(bucketUs > 0, s"bucketUs must be positive, got $bucketUs")
@@ -177,31 +177,11 @@ object AsOf {
           .as("retention"))
   }
 
-  /** The repo's two-stage global rank (t06/q35/p10 template) as a
-    * local helper: range-repartition on `order`, per-partition
-    * row_number, partition-count prefix offsets via one window over
-    * the tiny counts table — never a partition-less window over data.
-    * Appends `rnName` (1-based) to `df`.
+  /** a05's gated quantile count and day bucket — shared with the
+    * oracle.
     */
-  private def globalRank(df: DataFrame,
-                         order: Seq[org.apache.spark.sql.Column],
-                         rnName: String,
-                         numPartitions: Int): DataFrame = {
-    // pinned post-exchange (TwoStage scaladoc): one boundary draw for
-    // the rank and counts branches
-    val parted = TwoStage.rangeParted(df, numPartitions, order: _*)
-    val wLocal = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    val local = parted.withColumn("_r",
-      row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = Window.orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid"))
-      .withColumn(rnName, col("_off") + col("_r"))
-      .drop("_pid", "_r", "_off")
-  }
+  val RfmQuantiles: Int = 5
+  val DayUs: Long = 86400000000L
 
   /** RFM segmentation (a05) — the marketing-analytics staple beside
     * [[cohortRetention]]: per user, recency (days since last event,
@@ -214,17 +194,12 @@ object AsOf {
     *
     * Scale: one map-side-combinable per-user aggregate over the event
     * store, a 1-row anchor broadcast, then THREE two-stage global
-    * ranks over the (much smaller) user table — the [[globalRank]]
-    * template per dimension, joined back on user_id; quantile
-    * assignment is exact integer algebra ((rank−1)·nq div n + 1), no
-    * percentile sketch, no partition-less window.
+    * ranks over the (much smaller) user table — one
+    * [[TwoStage.globalRank]] per dimension, joined back on user_id;
+    * quantile assignment is exact integer algebra
+    * ((rank−1)·nq div n + 1, n the rank's `_n`), no percentile
+    * sketch, no partition-less window.
     */
-  /** a05's gated quantile count and day bucket — shared with the
-    * oracle.
-    */
-  val RfmQuantiles: Int = 5
-  val DayUs: Long = 86400000000L
-
   def rfmSegments(events: DataFrame, nq: Int = RfmQuantiles,
                   numPartitions: Int = 32): DataFrame = {
     require(nq >= 1, s"nq must be >= 1, got $nq")
@@ -241,12 +216,10 @@ object AsOf {
         expr(s"(t0 - last_ts) div $DayUs").as("recency_days"),
         col("frequency"), col("monetary_cents"))
       .materialized
-    val n = broadcast(rfm.agg(count(lit(1)).as("_n")))
     def grade(order: Seq[org.apache.spark.sql.Column], qName: String) =
-      globalRank(rfm, order, "_rn", numPartitions)
-        .crossJoin(n)
+      TwoStage.globalRank(rfm, numPartitions, Nil, order: _*)
         .select(col("user_id"),
-          (expr(s"((_rn - 1) * $nq) div _n") + 1L).as(qName))
+          (expr(s"((_rank - 1) * $nq) div _n") + 1L).as(qName))
     val rq = grade(Seq(col("recency_days").asc, col("user_id").asc), "r_q")
     val fq = grade(Seq(col("frequency").desc, col("user_id").asc), "f_q")
     val mq = grade(Seq(col("monetary_cents").desc, col("user_id").asc),

@@ -78,19 +78,6 @@ object Dedup {
     based.select(col("doc_id") +: sigCols: _*)
   }
 
-  /** LSH banding over an 8-seed signature: 4 bands of 2 rows; the band
-    * key is md5 over (band index, the band's minhashes). Docs sharing
-    * any band key become a candidate pair (doc_a < doc_b, distinct).
-    *
-    * Pair generation is groupBy(band) + in-bucket combination
-    * expansion, NOT a self-join: a self-join would recompute the
-    * signature subplan on both sides and shuffle the corpus twice —
-    * this form shuffles (doc_id, band_key) once and expands pairs
-    * row-locally from each bucket's sorted id array. `maxBucket`
-    * guards the known LSH pathology of a degenerate hot bucket
-    * (oversized buckets are skipped — standard practice; keep it above
-    * any real bucket size when oracle-comparing).
-    */
   /** (doc_id, band_key) rows of an 8-seed signature — 4 bands of 2
     * rows, short-doc degenerate bands dropped. Docs shorter than the
     * shingle width have an all-null signature; concat_ws skips nulls,
@@ -110,6 +97,19 @@ object Dedup {
       .filter(!col("bk").isin(degenerateBandKeys: _*))
   }
 
+  /** LSH banding over an 8-seed signature: 4 bands of 2 rows; the band
+    * key is md5 over (band index, the band's minhashes). Docs sharing
+    * any band key become a candidate pair (doc_a < doc_b, distinct).
+    *
+    * Pair generation is groupBy(band) + in-bucket combination
+    * expansion, NOT a self-join: a self-join would recompute the
+    * signature subplan on both sides and shuffle the corpus twice —
+    * this form shuffles (doc_id, band_key) once and expands pairs
+    * row-locally from each bucket's sorted id array. `maxBucket`
+    * guards the known LSH pathology of a degenerate hot bucket
+    * (oversized buckets are skipped — standard practice; keep it above
+    * any real bucket size when oracle-comparing).
+    */
   def lshCandidatePairs(sig: DataFrame, maxBucket: Int = 1000): DataFrame = {
     val banded = bandedKeys(sig)
     val buckets = banded
@@ -941,6 +941,11 @@ object Dedup {
         abs(col("est_jaccard") - col("exact_jaccard")))
   }
 
+  /** d30's gated truncation width — shared with the oracle mirror so
+    * the two engines move together (the s32 scale lesson).
+    */
+  val BbitB: Int = 2
+
   /** b-bit minwise hashing (d30, Li & König, WWW 2010): keep only the
     * lowest `b` bits of each minhash coordinate and estimate Jaccard
     * with the collision-probability correction
@@ -971,11 +976,6 @@ object Dedup {
     * row-local integer math on already-joined rows. The b-bit column
     * adds NOTHING to the plan beyond 8 codegen'd `%`-comparisons.
     */
-  /** d30's gated truncation width — shared with the oracle mirror so
-    * the two engines move together (the s32 scale lesson).
-    */
-  val BbitB: Int = 2
-
   def bbitMinhashPairs(documents: DataFrame, b: Int = BbitB,
                        nSeeds: Int = 8, k: Int = 3): DataFrame = {
     require(nSeeds == 8,
@@ -1012,6 +1012,9 @@ object Dedup {
         abs(col("est_bbit") - col("exact_jaccard")))
   }
 
+  /** d31's gated similarity threshold — shared with the oracle. */
+  val EditTauPct: Int = 80
+
   /** Edit-distance near-dup verification over the LSH candidate set
     * (d31): per candidate pair, the Levenshtein distance, the
     * normalized similarity 100·(maxlen − lev) div maxlen in EXACT
@@ -1032,9 +1035,6 @@ object Dedup {
     * the verdict, and the skip itself is visible in the output).
     * Candidates are the banded capped LSH set — never all-pairs.
     */
-  /** d31's gated similarity threshold — shared with the oracle. */
-  val EditTauPct: Int = 80
-
   def editDistancePairs(documents: DataFrame, tauPct: Int = EditTauPct)
       : DataFrame = {
     require(tauPct >= 1 && tauPct <= 100,
@@ -1258,32 +1258,6 @@ object Dedup {
         (col("size") * col("n_clusters")).as("n_docs"),
         ((col("size") - 1) * col("n_clusters")).as("n_removable"))
 
-  /** Sketch-only contamination ESTIMATE — the fourth decontamination
-    * rung, and the only one that moves NO shingle data between the
-    * two corpora at all. [[decontaminate]] semi-joins the exact
-    * shingle sets; [[bloomDecontaminate]] broadcasts a fixed bitmap
-    * one way; this ships one Datasketches HLL sketch PER CORPUS
-    * (~2^lgConfigK bytes, built map-side by `hll_sketch_agg`, merged
-    * by register-max — order-insensitive, so the estimate is a pure
-    * function of the input sets) and estimates the distinct-shingle
-    * overlap by inclusion–exclusion:
-    * `|A∩B| ≈ est(A) + est(B) − est(A∪B)`. That is the 100 TB
-    * cross-datacenter form: two corpora that never co-locate can
-    * still answer "how contaminated is the batch vs the benchmark"
-    * by exchanging kilobytes.
-    *
-    * Gate shape (the q20b error-contract pattern): the estimate is
-    * engine-specific (DuckDB has no Datasketches mirror), so the
-    * emitted row carries the EXACT three counts — computed here only
-    * to certify the sketch — plus `within_bound` = whether the
-    * estimated overlap is within `boundScale · rse · (estA+estB+estU)`
-    * of the exact overlap, where `rse = 1.04/√2^lgConfigK` is the
-    * published HLL relative standard error. The oracle mirrors the
-    * exact counts (d10's shingle CTEs) + literal 1; sketch drift past
-    * the bound hash-FAILS. The bound uses the ESTIMATED magnitudes,
-    * not the exact ones, because at 100 TB the exact ones are what
-    * you are avoiding computing.
-    */
   /** Cross-source overlap matrix — the corpus-audit table a dataset
     * card publishes (which sources duplicate which, before mixture
     * weights are chosen): for every unordered source pair, the count
@@ -1329,6 +1303,32 @@ object Dedup {
           .as("jaccard"))
   }
 
+  /** Sketch-only contamination ESTIMATE — the fourth decontamination
+    * rung, and the only one that moves NO shingle data between the
+    * two corpora at all. [[decontaminate]] semi-joins the exact
+    * shingle sets; [[bloomDecontaminate]] broadcasts a fixed bitmap
+    * one way; this ships one Datasketches HLL sketch PER CORPUS
+    * (~2^lgConfigK bytes, built map-side by `hll_sketch_agg`, merged
+    * by register-max — order-insensitive, so the estimate is a pure
+    * function of the input sets) and estimates the distinct-shingle
+    * overlap by inclusion–exclusion:
+    * `|A∩B| ≈ est(A) + est(B) − est(A∪B)`. That is the 100 TB
+    * cross-datacenter form: two corpora that never co-locate can
+    * still answer "how contaminated is the batch vs the benchmark"
+    * by exchanging kilobytes.
+    *
+    * Gate shape (the q20b error-contract pattern): the estimate is
+    * engine-specific (DuckDB has no Datasketches mirror), so the
+    * emitted row carries the EXACT three counts — computed here only
+    * to certify the sketch — plus `within_bound` = whether the
+    * estimated overlap is within `boundScale · rse · (estA+estB+estU)`
+    * of the exact overlap, where `rse = 1.04/√2^lgConfigK` is the
+    * published HLL relative standard error. The oracle mirrors the
+    * exact counts (d10's shingle CTEs) + literal 1; sketch drift past
+    * the bound hash-FAILS. The bound uses the ESTIMATED magnitudes,
+    * not the exact ones, because at 100 TB the exact ones are what
+    * you are avoiding computing.
+    */
   def sketchOverlap(batch: DataFrame, benchmark: DataFrame,
                     k: Int = 5, lgConfigK: Int = 14,
                     boundScale: Double = 5.0): DataFrame = {

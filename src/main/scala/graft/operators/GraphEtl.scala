@@ -171,21 +171,6 @@ object GraphEtl {
         Relational.moneyOut(col("e.amount")).as("amount"),
         col("e.timestamp").as("timestamp"))
 
-  /** PageRank over the materialized adjacency — in FIXED-POINT integer
-    * arithmetic (ranks scaled by 10⁶, damping 0.85 as 850000/10⁶):
-    * floating-point rank sums are partition-order dependent and could
-    * never hash-match an oracle; integer contributions (`rank div
-    * outdeg`) and integer sums are exact under ANY partitioning, so a
-    * distributed PageRank verifies bit-for-bit. Each iteration is one
-    * equi-join (ranks⨝edges on src) + one aggregate (sum per dst) —
-    * the standard scale shape; edges and the degree join are
-    * materialized once, not per iteration. Dangling mass is dropped
-    * (vertices with no out-edges redistribute nothing — the common
-    * simplification; totals are not conserved and that is fine for
-    * ranking). The 850000·sum product bounds the per-vertex inbound
-    * mass at ~2^43 before overflow — ample headroom at any real
-    * in-degree with this scale constant.
-    */
   /** Co-occurrence projection of the order→supplier bipartite relation:
     * an undirected edge (a, b), a < b, between suppliers that fulfil at
     * least `minSupport` common orders. This is the graph-construction
@@ -427,6 +412,21 @@ object GraphEtl {
       edges.select(col("a").as("doc_a"), col("b").as("doc_b")))
       .select(col("doc_id").as("vertex"), col("cluster_rep").as("component"))
 
+  /** PageRank over the materialized adjacency — in FIXED-POINT integer
+    * arithmetic (ranks scaled by 10⁶, damping 0.85 as 850000/10⁶):
+    * floating-point rank sums are partition-order dependent and could
+    * never hash-match an oracle; integer contributions (`rank div
+    * outdeg`) and integer sums are exact under ANY partitioning, so a
+    * distributed PageRank verifies bit-for-bit. Each iteration is one
+    * equi-join (ranks⨝edges on src) + one aggregate (sum per dst) —
+    * the standard scale shape; edges and the degree join are
+    * materialized once, not per iteration. Dangling mass is dropped
+    * (vertices with no out-edges redistribute nothing — the common
+    * simplification; totals are not conserved and that is fine for
+    * ranking). The 850000·sum product bounds the per-vertex inbound
+    * mass at ~2^43 before overflow — ample headroom at any real
+    * in-degree with this scale constant.
+    */
   def pageRankFixedPoint(edges: DataFrame, iters: Int = 3): DataFrame = {
     // Materialize the dedup'd edge list FIRST: outdeg, the degree
     // join, and both vertex branches all re-read it — without this the
@@ -1256,8 +1256,8 @@ object GraphEtl {
     * 28+ min of BigInteger grinding inside the checkpoint stats
     * rewrite without the reset). All three frames are
     * community-graph-sized.
-    */
-  /** `direction` (g27 only; `None` keeps g26's semantics verbatim):
+    *
+    * `direction` (g27 only; `None` keeps g26's semantics verbatim):
     * restrict candidate communities to labc < laba (`Some(true)`,
     * "descending") or labc > laba (`Some(false)`) BEFORE the argmax —
     * the alternating-direction damper for the synchronous swap class.

@@ -450,6 +450,11 @@ object Multimodal {
         bucket.as("bucket"))
   }
 
+  /** m10's gated geometry — shared with the oracle mirror. */
+  val ResizeFactor: Int = 28
+  val ResizeMinPixels: Long = 3136L
+  val ResizeMaxPixels: Long = 15680L
+
   /** Pixel-budget smart resize planning (m10) — the dynamic-
     * resolution preprocessing step of a NaViT-class vision trainer
     * (Dehghani 2023; the Qwen2-VL "smart resize" recipe, Wang 2024):
@@ -474,11 +479,6 @@ object Multimodal {
     * Scale: row-local projection at scan speed — no shuffle, no
     * state; composes with m06's filter and m09's packer unchanged.
     */
-  /** m10's gated geometry — shared with the oracle mirror. */
-  val ResizeFactor: Int = 28
-  val ResizeMinPixels: Long = 3136L
-  val ResizeMaxPixels: Long = 15680L
-
   def smartResize(decoded: DataFrame, factor: Int = ResizeFactor,
                   minPixels: Long = ResizeMinPixels,
                   maxPixels: Long = ResizeMaxPixels): DataFrame = {

@@ -66,12 +66,9 @@ object Pipeline {
     * prefix of any smaller size without re-running.
     *
     * Scale: the in-group rank is TWO-STAGE, never a per-language
-    * window (tokenBudgetSample's rationale, t06's template):
-    * range-repartition by the scan order (lang, ord, doc_id), rank
-    * locally per (partition, lang), offset by the earlier partitions'
-    * per-language COUNTS (one window pass over the tiny (pid, lang)
-    * aggregate, broadcast back). The dominant language never sorts on
-    * one task.
+    * window (tokenBudgetSample's rationale): [[TwoStage.globalRank]]
+    * grouped by lang over the scan order (ord, doc_id). The dominant
+    * language never sorts on one task.
     */
   def samplePerGroup(documents: DataFrame, n: Long,
                      numPartitions: Int = 32): DataFrame = {
@@ -82,27 +79,10 @@ object Pipeline {
     // range partitioning's boundary-sampling job would evaluate it a
     // second time (TwoStage scaladoc); post-pinned for the boundary
     // draw as always
-    val parted = TwoStage.rangeParted(base.materialized, numPartitions,
-      col("lang").asc, col("ord").asc, col("doc_id").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"), col("lang"))
-      .orderBy(col("ord"), col("doc_id"))
-    val local = parted.withColumn("_lrk",
-      row_number().over(wLocal).cast("long"))
-    val sums = parted.groupBy(col("_pid"), col("lang"))
-      .agg(count(lit(1)).as("_pcnt"))
-    // per-language prefix offsets in one window pass over the tiny
-    // (pid, lang) counts table (the q35 fold — no triangular join)
-    val wOff = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    val offsets = sums.select(col("_pid"), col("lang"),
-      coalesce(sum(col("_pcnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid", "lang"))
-      .withColumn("rank", col("_off") + col("_lrk"))
-      .filter(col("rank") <= n)
-      .select(col("doc_id"), col("lang"), col("rank"))
+    TwoStage.globalRank(base.materialized, numPartitions, Seq("lang"),
+      col("ord").asc, col("doc_id").asc)
+      .filter(col("_rank") <= n)
+      .select(col("doc_id"), col("lang"), col("_rank").as("rank"))
   }
 
   /** Token-BUDGET mixture sampling: per language, keep documents — in
@@ -525,10 +505,8 @@ object Pipeline {
     * Scale: the within-language rank is a per-lang window (bounded
     * cardinality — same caveat as p04, languages are few and the window
     * is hash-partitioned across them); the GLOBAL position is the
-    * interleave's total order (round, lang, doc_id) ranked with the
-    * two-stage template (range-repartition, per-partition rank,
-    * partition-count prefix offsets via one window over the tiny
-    * counts table — t06/q35's shape). Round count equals the LARGEST
+    * interleave's total order (round, lang, doc_id) ranked with
+    * [[TwoStage.globalRank]]. Round count equals the LARGEST
     * language's size — corpus-scale, so anything per-round (the old
     * triangular round-offset join was O(rounds²); even a per-round
     * window leaves round-sized single tasks) must not key on it.
@@ -547,21 +525,10 @@ object Pipeline {
     // sampling job (only the window's shuffle MAP side is reused via
     // skipped stages — TwoStage scaladoc); post-pinned for the
     // boundary draw as always
-    val parted = TwoStage.rangeParted(rounds.materialized, numPartitions,
+    TwoStage.globalRank(rounds.materialized, numPartitions, Nil,
       col("round").asc, col("lang").asc, col("doc_id").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("round"), col("lang"), col("doc_id"))
-    val local = parted.withColumn("_r",
-      row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid"))
       .select(col("doc_id"), col("lang"), col("round"),
-        (col("_off") + col("_r")).as("epoch_pos"))
+        col("_rank").as("epoch_pos"))
   }
 
   /** Exact-percentile length gate: keep documents whose token count is
@@ -625,11 +592,9 @@ object Pipeline {
     * broken by content hash then id so the order is total. The
     * curriculum-learning counterpart of [[epochOrder]]'s round-robin.
     *
-    * The GLOBAL position is the two-stage template (t06/q35/p10):
-    * range-repartition by the order key so partition i holds a
-    * contiguous position range, rank within partitions, offset by the
-    * partition-count prefix window over the tiny counts — no partition-less
-    * window, no single-task sort, scales with partitions.
+    * The GLOBAL position is [[TwoStage.globalRank]] — no
+    * partition-less window, no single-task sort, scales with
+    * partitions.
     */
   def curriculumOrder(documents: DataFrame,
                       numPartitions: Int = 32): DataFrame = {
@@ -642,22 +607,10 @@ object Pipeline {
     // aggregate + md5 per doc) that the boundary-sampling job would
     // otherwise compute twice (TwoStage scaladoc); post-pinned for
     // the boundary draw as always
-    val parted = TwoStage.rangeParted(base.materialized, numPartitions,
+    TwoStage.globalRank(base.materialized, numPartitions, Nil,
       col("difficulty").asc, col("_tb").asc, col("doc_id").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("difficulty"), col("_tb"), col("doc_id"))
-    val local = parted.withColumn("_r", row_number().over(wLocal))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    // prefix offsets in one window pass over the ≤ numPartitions-row
-    // counts table (bounded by partition COUNT, not data — q35's fold)
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid"))
       .select(col("doc_id"), col("difficulty"),
-        (col("_off") + col("_r")).as("curriculum_pos"))
+        col("_rank").as("curriculum_pos"))
   }
 
   /** Token-BALANCED output sharding — the writer-planning step before
@@ -673,11 +626,10 @@ object Pipeline {
     * serpentine dealing is rank algebra, embarrassingly parallel, and
     * within a top-document of optimal balance).
     *
-    * Scale: the global rank is the two-stage template (t06/q35/p13 —
-    * range-repartition on the order key, per-partition rank, prefix
-    * offsets from the tiny counts table; no partition-less window, no
-    * single-task sort); the shard assignment is row-local arithmetic
-    * on the rank. Output: (doc_id, shard, n_tokens).
+    * Scale: the global rank is [[TwoStage.globalRank]] (no
+    * partition-less window, no single-task sort); the shard
+    * assignment is row-local arithmetic on the rank. Output:
+    * (doc_id, shard, n_tokens).
     */
   def balancedShards(documents: DataFrame, numShards: Int = 64,
                      numPartitions: Int = 32): DataFrame = {
@@ -687,20 +639,9 @@ object Pipeline {
     // pre-pinned: the child is a shuffle-free words+md5 corpus scan —
     // the boundary-sampling job would re-tokenize the corpus
     // (TwoStage scaladoc); post-pinned for the boundary draw as always
-    val parted = TwoStage.rangeParted(base.materialized, numPartitions,
+    TwoStage.globalRank(base.materialized, numPartitions, Nil,
       col("n_tokens").desc, col("_tb").asc, col("doc_id").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("n_tokens").desc, col("_tb"), col("doc_id"))
-    val local = parted.withColumn("_r", row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid"))
-      .withColumn("_r0", col("_off") + col("_r") - 1L)
+      .withColumn("_r0", col("_rank") - 1L)
       // integer division (Column `/` is double division)
       .select(col("doc_id"),
         when(expr(s"_r0 div ${numShards}L") % 2 === 0,
@@ -758,14 +699,12 @@ object Pipeline {
     * both the Spark and oracle side — identical integer algebra, no
     * floats anywhere.
     *
-    * Scale: the z-value is row-local arithmetic; the global cut uses
-    * the two-stage rank template (range-repartition on z, local rank,
-    * prefix offsets off the tiny counts table — no partition-less
-    * window); the shard id is rank algebra (`(rank−1)·S div N`, sizes
-    * within 1 row of equal); the stats are one map-side-partial
-    * aggregate. N arrives as a 1-row broadcast (the scalar-subquery
-    * class). Nothing data-sized is ever globally sorted on one task —
-    * at 100 TB this is the same plan, just wider.
+    * Scale: the z-value is row-local arithmetic; the global cut is
+    * [[TwoStage.globalRank]] on z (no partition-less window); the
+    * shard id is rank algebra (`(rank−1)·S div N`, sizes within 1 row
+    * of equal, N the rank's `_n`); the stats are one map-side-partial
+    * aggregate. Nothing data-sized is ever globally sorted on one
+    * task — at 100 TB this is the same plan, just wider.
     */
   def zorderLayout(lineitem: DataFrame, numShards: Int = 32,
                    numPartitions: Int = 32): DataFrame = {
@@ -792,27 +731,14 @@ object Pipeline {
     // pre-pinned: the child is a shuffle-free scan (broadcast-join +
     // bit-interleave over lineitem) that the boundary-sampling job
     // would evaluate a second time (TwoStage scaladoc). Post-pinned
-    // ONCE for the boundary draw: three consumers (ranks, counts,
-    // total) read the parted frame — the original site of the
-    // observed boundary-redraw corruption (overlapping shard ranges
-    // and a rank past N at sf0.01), now the shared TwoStage invariant
-    val parted = TwoStage.rangeParted(base.materialized, numPartitions,
+    // ONCE for the boundary draw: the rank and counts branches read
+    // the parted frame — the original site of the observed
+    // boundary-redraw corruption (overlapping shard ranges and a rank
+    // past N at sf0.01), now the shared TwoStage invariant
+    TwoStage.globalRank(base.materialized, numPartitions, Nil,
       col("zval").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("zval"), col("l_orderkey"), col("l_linenumber"))
-    val local = parted.withColumn("_r", row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    val total = counts.agg(sum(col("_cnt")).as("_n"))
-    local.join(broadcast(offsets), Seq("_pid"))
-      .join(broadcast(total))
       .withColumn("shard",
-        expr(s"((_off + _r - 1L) * ${numShards}L) div _n").cast("long"))
+        expr(s"((_rank - 1L) * ${numShards}L) div _n").cast("long"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("zval")).as("z_min"), max(col("zval")).as("z_max"),
@@ -857,24 +783,10 @@ object Pipeline {
     // and the boundary-sampling job's second pruned-columnar read
     // costs less than a checkpoint write+2 reads (TwoStage scaladoc's
     // accepted trade for cheap shuffle-free children)
-    val parted = TwoStage.rangeParted(base, numPartitions,
+    val ns = TwoStage.globalRank(base, numPartitions, Nil,
       col("l_orderkey").asc, col("l_linenumber").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-    val local = parted
-      .withColumn("_r", row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    val total = counts.agg(sum(col("_cnt")).as("_n"))
-    val ns = local.join(broadcast(offsets), Seq("_pid"))
-      .join(broadcast(total))
       .withColumn("shard",
-        expr(s"((_off + _r - 1L) * ${numShards}L) div _n").cast("long"))
+        expr(s"((_rank - 1L) * ${numShards}L) div _n").cast("long"))
       .groupBy(col("shard"))
       .agg(min(col("l_partkey")).as("partkey_min"),
         max(col("l_partkey")).as("partkey_max"),
@@ -1239,6 +1151,9 @@ object Pipeline {
           col("cluster_rep").cast("string"))) % k)
   }
 
+  /** p24's gated grade count — shared with the oracle. */
+  val PruneBuckets: Int = 10
+
   /** Quality-pruning yield curve (p24): rank the corpus by a quality
     * score, cut it into `nBuckets` equal-count grades, and emit per
     * grade the docs/tokens it contributes plus the CUMULATIVE
@@ -1253,17 +1168,12 @@ object Pipeline {
     * integer counts, so both engines produce the identical double and
     * the gate hashes. Ranking ties break on doc_id.
     *
-    * Shape: the global rank is the two-stage template (range-
-    * repartition on (score DESC, doc_id) pinned via
-    * [[TwoStage.rangeParted]], per-partition row_number,
-    * partition-count prefix offsets — t06/q35/p10); totals are a
-    * 1-row broadcast; the cumulative pass is a window over the
-    * nBuckets-row grade table (the bounded counts-table class). No
-    * partition-less window over data, no second corpus pass.
+    * Shape: the global rank is [[TwoStage.globalRank]] on (score
+    * DESC, doc_id), whose `_n` is the doc total; the cumulative pass
+    * and the token total are windows over the nBuckets-row grade
+    * table (the bounded counts-table class). No partition-less window
+    * over data, no second corpus pass.
     */
-  /** p24's gated grade count — shared with the oracle. */
-  val PruneBuckets: Int = 10
-
   def pruningCurve(documents: DataFrame, nBuckets: Int = PruneBuckets,
                    numPartitions: Int = 32): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
@@ -1282,39 +1192,27 @@ object Pipeline {
     // columns (n_tokens rode only the rank side), ReuseExchange never
     // fired, and the sf1eq probe tier showed grade counts of
     // 4776..5429 where the rank algebra guarantees exactly n/10
-    val parted = TwoStage.rangeParted(scored.materialized, numPartitions,
-      col("score").desc, col("doc_id").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val local = parted.withColumn("_r",
-      row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    // totals from the PINNED frame, not `scored` — a third read of
-    // the raw scan would re-run the text scoring for no reason
-    val tot = parted.agg(count(lit(1)).as("_n"),
-      sum(col("n_tokens")).as("_tt"))
-    val perGrade = local.join(broadcast(offsets), Seq("_pid"))
-      .crossJoin(broadcast(tot))
-      .select(expr(s"((_off + _r - 1) * $nBuckets) div _n").as("bucket"),
-        col("score"), col("n_tokens"), col("_tt"))
+    val perGrade = TwoStage.globalRank(scored.materialized, numPartitions,
+      Nil, col("score").desc, col("doc_id").asc)
+      .select(expr(s"((_rank - 1) * $nBuckets) div _n").as("bucket"),
+        col("score"), col("n_tokens"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("bucket_tokens"),
-        min(col("score")).as("score_floor"),
-        max(col("_tt")).as("_tt"))
-    val wCum = org.apache.spark.sql.expressions.Window
+        min(col("score")).as("score_floor"))
+    // one Window node over the grade table: the running sums and the
+    // token total share its ordering
+    val wGrade = org.apache.spark.sql.expressions.Window
       .orderBy(col("bucket"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val wCum = wGrade.rowsBetween(
+      org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val wAll = wGrade.rowsBetween(
+      org.apache.spark.sql.expressions.Window.unboundedPreceding,
+      org.apache.spark.sql.expressions.Window.unboundedFollowing)
     perGrade
       .withColumn("docs_kept", sum(col("n_docs")).over(wCum))
       .withColumn("tokens_kept", sum(col("bucket_tokens")).over(wCum))
+      .withColumn("_tt", sum(col("bucket_tokens")).over(wAll))
       .select(col("bucket"), col("score_floor"), col("n_docs"),
         col("bucket_tokens"), col("docs_kept"), col("tokens_kept"),
         (col("tokens_kept").cast("double") / col("_tt")).as("token_frac"))

@@ -552,51 +552,27 @@ object Relational {
     *
     * A per-group window would sort each group in ONE task (the p04
     * pathology: group cardinality is fixed and small, so one straggler
-    * task sorts a third of 100 TB). Instead the global rank is
-    * DISTRIBUTED: range-repartition by (group, value, tiebreak) —
-    * every task sorts only its slice — then per-(partition, group)
-    * counts (tiny) are prefix-summed and broadcast back, so
-    * global rank = partition offset + local rank. The quantile rows
-    * are then a row-local rank ∈ {⌈q·n⌉} filter and one final
-    * per-group aggregate. Same two-stage template as
-    * Pipeline.tokenBudgetSample; scales with partitions, not groups.
+    * task sorts a third of 100 TB). Instead the in-group rank and the
+    * group size come from [[TwoStage.globalRank]] grouped by flag —
+    * every task sorts only its slice. The quantile rows are then a
+    * row-local rank ∈ {⌈q·n⌉} filter and one final per-group
+    * aggregate; scales with partitions, not groups.
     *
     * ONE corpus pass (plus the boundary-sampling job's second pruned
     * 4-column parquet read — the TwoStage scaladoc's accepted trade
     * for a plain-select child; a pre-pin would cost more than the
-    * re-read): the range shuffle's output is PINNED
-    * ([[TwoStage.rangeParted]]) so the local rank window and the
-    * per-(partition, group) counts read one boundary draw — this site
-    * previously leaned on ReusedExchange (both branches prune to the
-    * identical 4-column schema, so reuse did fire), but that
-    * precondition is invisible and edit-fragile, so the pin is now
-    * uniform across the template. Partition offsets AND group totals
-    * both come from the tiny counts table in one window pass — no
-    * triangular self-join, no second aggregate on the base.
+    * re-read).
     */
   def groupQuantiles(lineitem: DataFrame,
                      numPartitions: Int = 32): DataFrame = {
-    val parted = TwoStage.rangeParted(
+    TwoStage.globalRank(
       lineitem.select(
         col("l_returnflag").as("g"), col("l_quantity").as("v"),
         col("l_orderkey").as("tb1"), col("l_linenumber").as("tb2")),
-      numPartitions,
-      col("g").asc, col("v").asc, col("tb1").asc, col("tb2").asc)
-    val wLocal = Window.partitionBy(col("_pid"), col("g"))
-      .orderBy(col("v"), col("tb1"), col("tb2"))
-    val local = parted.withColumn("_loc", row_number().over(wLocal))
-    val sums = parted.groupBy(col("_pid"), col("g"))
-      .agg(count(lit(1)).as("_psum"))
-    // prefix (earlier partitions' counts) and per-group total in one
-    // window pass over the ≤ partitions×groups-row counts table
-    val wOff = Window.partitionBy(col("g")).orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy(col("g"))
-    val offsets = sums.select(col("_pid"), col("g"),
-      coalesce(sum(col("_psum")).over(wOff), lit(0L)).as("_off"),
-      sum(col("_psum")).over(wTot).as("n"))
-    local.join(broadcast(offsets), Seq("_pid", "g"))
-      .withColumn("rk", col("_off") + col("_loc"))
+      numPartitions, Seq("g"),
+      col("v").asc, col("tb1").asc, col("tb2").asc)
+      .withColumnRenamed("_rank", "rk")
+      .withColumnRenamed("_n", "n")
       .filter(col("rk") === ceil(lit(0.25) * col("n")) ||
         col("rk") === ceil(lit(0.5) * col("n")) ||
         col("rk") === ceil(lit(0.75) * col("n")))

@@ -958,35 +958,6 @@ object Similarity {
         (col("n_hit").cast("double") / col("k_exact")).as("recall"))
   }
 
-  /** IVF-PQ with RESIDUAL encoding — IVFADC as actually published
-    * (Jégou et al. 2011 §IV-A, the structure FAISS's IndexIVFPQ
-    * defaults to): PQ encodes v − centroid(cell) instead of v, and a
-    * candidate scores as dot(q, centroid) — EXACT, one number per
-    * probed cell — plus the ADC fold over the residual codebook.
-    * The shared cell direction, which dominates every member's raw
-    * coordinates, moves into the exact centroid term, so the same
-    * m·nCodes code budget quantizes only the smaller within-cell
-    * variation; s19 vs s17 reports what that buys at identical
-    * (nCells, nProbe, m, nCodes) — measured at sf0.01 the composed
-    * mean recall@3 rises 0.10 → 0.20 (IVF-alone s11 = 0.60). The
-    * bounded gain is the expected shape on RANDOM synthetic
-    * embeddings: with no cluster structure the centroids capture
-    * little shared direction, so the residual is nearly the vector
-    * itself — on real embedding corpora (which cluster hard) the
-    * centroid term carries most of the score and the residual lever
-    * is correspondingly larger. That corpus dependence is exactly why
-    * the lever ships as a GATED measurement, not a claim.
-    *
-    * Scale shape: identical to [[knnIvfPq]]. The packed index is
-    * still 1 int + m codes per vector — the residual is computed
-    * row-locally during indexing against the same one-row broadcast
-    * centroid array and never stored; the query side adds one
-    * nProbe-row centroid-dot per query; search is the same broadcast
-    * cell equi-join with the m-lookup fold inside the scan. Every
-    * stage is fixed-point / left-fold deterministic (centdot first,
-    * then the s-ascending fold), so the doubly-approximate path still
-    * hash-gates (s18).
-    */
   /** The three PERSISTABLE residual-IVFADC index artifacts — exactly
     * what a 100 TB deployment ships from the (one-time) build job to
     * the serving scans: the packed index (vec_id, cell, codes — 1 int
@@ -1062,6 +1033,35 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
+  /** IVF-PQ with RESIDUAL encoding — IVFADC as actually published
+    * (Jégou et al. 2011 §IV-A, the structure FAISS's IndexIVFPQ
+    * defaults to): PQ encodes v − centroid(cell) instead of v, and a
+    * candidate scores as dot(q, centroid) — EXACT, one number per
+    * probed cell — plus the ADC fold over the residual codebook.
+    * The shared cell direction, which dominates every member's raw
+    * coordinates, moves into the exact centroid term, so the same
+    * m·nCodes code budget quantizes only the smaller within-cell
+    * variation; s19 vs s17 reports what that buys at identical
+    * (nCells, nProbe, m, nCodes) — measured at sf0.01 the composed
+    * mean recall@3 rises 0.10 → 0.20 (IVF-alone s11 = 0.60). The
+    * bounded gain is the expected shape on RANDOM synthetic
+    * embeddings: with no cluster structure the centroids capture
+    * little shared direction, so the residual is nearly the vector
+    * itself — on real embedding corpora (which cluster hard) the
+    * centroid term carries most of the score and the residual lever
+    * is correspondingly larger. That corpus dependence is exactly why
+    * the lever ships as a GATED measurement, not a claim.
+    *
+    * Scale shape: identical to [[knnIvfPq]]. The packed index is
+    * still 1 int + m codes per vector — the residual is computed
+    * row-locally during indexing against the same one-row broadcast
+    * centroid array and never stored; the query side adds one
+    * nProbe-row centroid-dot per query; search is the same broadcast
+    * cell equi-join with the m-lookup fold inside the scan. Every
+    * stage is fixed-point / left-fold deterministic (centdot first,
+    * then the s-ascending fold), so the doubly-approximate path still
+    * hash-gates (s18).
+    */
   def knnIvfPqResidual(embeddings: DataFrame, nQueries: Int, k: Int,
                        nCells: Int = 16, nProbe: Int = 4,
                        m: Int = 8, nCodes: Int = 16,
@@ -1701,21 +1701,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Per-label mean embedding (class centroids / cluster prototypes) in
-    * long format: one row per (label, dim). The mean is computed over
-    * FIXED-POINT component sums — floor(x·10⁶) per component, summed
-    * as exact longs — so the aggregate is order-independent and the
-    * distributed result is bit-identical under any partitioning (the
-    * PageRank discipline applied to vector reductions; a naive
-    * sum(double) varies with summation order and cannot hash-gate).
-    *
-    * Shape: posexplode fans each vector into d rows (map-local), the
-    * sum is a partial hash aggregate on (label, dim) — one shuffle of
-    * at most |labels|·d combined rows per partition. 64 components ×
-    * 2^43 max |q| per row leaves exact-long headroom up to ~2^20 rows
-    * per (label, dim) group per the scale constant; raise `scale`
-    * awareness accordingly (10⁶ keeps μ-precision to 6 decimals).
-    */
   /** kNN-graph construction: each vector's top-`k` cosine neighbors
     * WITHIN its label block — the all-nodes generalization of the
     * query-set search above, and the input structure for graph-based
@@ -1841,24 +1826,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** [[nnDescent]]'s pinned graph build over a caller-supplied
-    * prepared corpus `e` and shared ring rank `hr` (r21, guide
-    * §1.2/§2.3/§2.4): the chain operators already hold both pinned,
-    * so the build stops pinning its own copies, and each descent
-    * round is FUSED — the old round paid a reverse-cap window, a
-    * pair-list distinct, a corpus-keyed self-join and a top-k window
-    * (≈6 exchanges + 2 full per-partition sorts); now ONE
-    * neighbor-set aggregate (forward set ∪ row-local top-k of the
-    * collected reverse edges — the same (sim DESC, id ASC) cap order,
-    * computed inside the aggregate instead of a window), a row-local
-    * pair fan, the two vector-fetch joins, and ONE [[topKAgg]]
-    * (which owns the dedup the pair-list distinct used to do — see
-    * its bit-identity argument; carried `g` rows are unioned in with
-    * their existing sims instead of being re-scored, which is exact
-    * because re-scoring a pair is the identical expression over the
-    * identical operands). Returns the materialized (vec_id, nbr_id,
-    * sim) graph, top-k per node, WITHOUT the rank column.
-    */
   /** The exact pair scorer shared by the descent seed and every
     * [[nnDescentRoundFrame]] — one definition, one bit-identical
     * expression (the topKAgg dedup argument).
@@ -1939,6 +1906,24 @@ object Similarity {
       "nn_descent_round" -> nnDescentRoundFrame(e, g, 5))
   }
 
+  /** [[nnDescent]]'s pinned graph build over a caller-supplied
+    * prepared corpus `e` and shared ring rank `hr` (r21, guide
+    * §1.2/§2.3/§2.4): the chain operators already hold both pinned,
+    * so the build stops pinning its own copies, and each descent
+    * round is FUSED — the old round paid a reverse-cap window, a
+    * pair-list distinct, a corpus-keyed self-join and a top-k window
+    * (≈6 exchanges + 2 full per-partition sorts); now ONE
+    * neighbor-set aggregate (forward set ∪ row-local top-k of the
+    * collected reverse edges — the same (sim DESC, id ASC) cap order,
+    * computed inside the aggregate instead of a window), a row-local
+    * pair fan, the two vector-fetch joins, and ONE [[topKAgg]]
+    * (which owns the dedup the pair-list distinct used to do — see
+    * its bit-identity argument; carried `g` rows are unioned in with
+    * their existing sims instead of being re-scored, which is exact
+    * because re-scoring a pair is the identical expression over the
+    * identical operands). Returns the materialized (vec_id, nbr_id,
+    * sim) graph, top-k per node, WITHOUT the rank column.
+    */
   private def nnDescentGraph(embeddings: DataFrame, e: DataFrame,
                              hr: DataFrame, k: Int,
                              rounds: Int): DataFrame = {
@@ -1982,23 +1967,23 @@ object Similarity {
     // links are what let the local join escape locality, exactly the
     // role random initial neighbors play in the published algorithm.
     //
-    // Ranked with [[hashRank]]'s two-stage template, NOT ringPairs'
+    // Ranked with [[hashRankCounted]]'s two-stage template, NOT ringPairs'
     // per-block window (r20, guide §2.5): the global ring's block key
     // is the constant 0, so the window form hashed the ENTIRE corpus
     // into one partition — a corpus-sized single-task sort at 100 TB
     // that the unpartitioned-window plan check cannot see (the window
-    // IS partitioned, by a constant). hashRank ranks by the same
+    // IS partitioned, by a constant). hashRankCounted ranks by the same
     // (hashP(id), id) total order, so the fan produces the identical
     // pair set. `hr` arrives pinned from the caller (r21: the chains
     // share ONE ring-rank pin between this seed ring, searchGraph's
-    // finger table and hierChain's pilots); the _b > 1 filter on the
-    // broadcast count is row-identical pre- or post-pin.
-    val hrF = hr.filter(col("_b") > 1)
+    // finger table and hierChain's pilots); the _n > 1 filter on the
+    // id count is row-identical pre- or post-pin.
+    val hrF = hr.filter(col("_n") > 1)
     val hashRing = hrF
       .withColumn("j",
         explode(sequence(lit(1L), least(lit((2 * k).toLong),
-          col("_b") - 1L))))
-      .withColumn("trn", (col("rn") - 1L + col("j")) % col("_b") + 1L)
+          col("_n") - 1L))))
+      .withColumn("trn", (col("rn") - 1L + col("j")) % col("_n") + 1L)
       .join(hrF.select(col("rn").as("trn"), col("vec_id").as("nbr_id")),
         Seq("trn"))
       .select(col("vec_id"), col("nbr_id"))
@@ -2064,64 +2049,7 @@ object Similarity {
       .unionByName(hits(descended, "descended"))
   }
 
-  /** The beam-search chain shared by s33/s34: the [[nnDescent]] graph
-    * SYMMETRIZED (HNSW/NSG search walks neighborhoods undirected — a
-    * reverse edge is as good a road as a forward one), deterministic
-    * global entry points (the `beam` corpus vectors earliest in
-    * md5-hash order — the fixed entry point of the published graph
-    * searches, made a set so round 0 starts with a full frontier),
-    * then `rounds` FIXED expansion rounds: hop the frontier one edge,
-    * union the frontier itself (monotone — the best-so-far can never
-    * be lost), score exactly against the query, keep the per-query
-    * top-`beam`. Fixed rounds instead of a convergence loop is what
-    * makes the search unrollable for the DuckDB oracle — the
-    * d08/g10/nnDescent discipline.
-    *
-    * Returns (frontier₀, frontier_R): the entry frontier prices what
-    * the graph walk ADDS over its own starting points (s34's dial).
-    *
-    * Scale shape: the graph is the write-once n·k edge list; per
-    * round the candidate volume is ≤ |Q|·beam·(2k+1) rows — QUERY-
-    * sized, never corpus-sized; the corpus is touched only by the
-    * edge-list equi-join and the vector-fetch equi-join (both
-    * key-partitioned), with no IVF probe scan and no corpus
-    * self-join anywhere. Frontiers pin per round (Materialize seam):
-    * each feeds the hop, the union AND the re-rank, and un-pinned
-    * lineage doubles per round.
-    */
-  /** Global rank on the md5 ring: appends `rn` = the 1-based position
-    * of vec_id in (hashP(vec_id), vec_id) order to `base` (which must
-    * carry vec_id; payload columns ride along). The rank is the
-    * two-stage template ([[TwoStage.rangeParted]]: range-repartition
-    * on the ring order, per-partition row_number, partition-count
-    * prefix offsets via one window over the tiny counts table) —
-    * NEVER a one-partition `Window.orderBy` over the corpus, which
-    * was the scaladoc-only promise ADVICE r15 flagged at the
-    * searchGraph and hierChain pilot sites. The offsets window is the
-    * bounded ≤ numPartitions-row counts-table class. No pre-pin: the
-    * callers' bases are cheap selects off an already-materialized
-    * corpus frame (TwoStage scaladoc's accepted double-read trade).
-    */
-  private def hashRank(base: DataFrame,
-                       numPartitions: Int = 32): DataFrame = {
-    val h = base.withColumn("_h", Canon.hashP(col("vec_id").cast("string")))
-    val parted = TwoStage.rangeParted(h, numPartitions,
-      col("_h").asc, col("vec_id").asc)
-    val wLocal = Window.partitionBy(col("_pid"))
-      .orderBy(col("_h"), col("vec_id"))
-    val local = parted.withColumn("_lrk",
-      row_number().over(wLocal).cast("long"))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val wOff = Window.orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid"))
-      .withColumn("rn", col("_off") + col("_lrk"))
-      .drop("_h", "_pid", "_lrk", "_off")
-  }
-
-  /** Pinned (vec_id, rn, _b) global md5-ring rank + corpus count —
+  /** Pinned (vec_id, rn, _n) global md5-ring rank + corpus count —
     * THE shared ring frame of the chain operators (r21, guide §1.2):
     * nnDescent's seed ring, searchGraph's finger table and
     * hierChain's pilot set all rank the SAME id set by the SAME
@@ -2130,13 +2058,22 @@ object Similarity {
     * query (and hierChain's ranked the WIDE (id, v, nrm) corpus
     * through the range exchange; now only ids ride the rank and the
     * pilot payload is fetched back by one id join). One pin, shared
-    * by every consumer; deterministic because hashRank's internal
+    * by every consumer; deterministic because the rank's internal
     * TwoStage pin already fixes the one boundary draw.
+    *
+    * `rn` is the 1-based position of vec_id in (hashP(vec_id), vec_id)
+    * order and `_n` the id count, both from [[TwoStage.globalRank]] —
+    * NEVER a one-partition `Window.orderBy` over the corpus, which
+    * was the scaladoc-only promise ADVICE r15 flagged at the
+    * searchGraph and hierChain pilot sites. No pre-pin: the callers'
+    * ids are cheap selects off an already-materialized corpus frame
+    * (TwoStage scaladoc's accepted double-read trade).
     */
   private def hashRankCounted(ids: DataFrame): DataFrame =
-    hashRank(ids.select(col("vec_id")))
-      .crossJoin(broadcast(ids.select(col("vec_id"))
-        .agg(count(lit(1)).as("_b"))))
+    TwoStage.globalRank(ids.select(col("vec_id"),
+        Canon.hashP(col("vec_id").cast("string")).as("_h")),
+      32, Nil, col("_h").asc, col("vec_id").asc)
+      .select(col("vec_id"), col("_rank").as("rn"), col("_n"))
       .materialized
 
   /** The SEARCH graph over corpus `e` for kNN edge list `g`: g
@@ -2149,7 +2086,7 @@ object Similarity {
     * Chord-style power-of-two fingers on the md5 ring: node at
     * hash-rank rn links to ranks rn + 2^j (wrap) for every
     * 2^j ≤ n − 1 — O(log n) fingers per node, O(log n) ring diameter,
-    * and a pure function of the id set. The rank is [[hashRank]]'s
+    * and a pure function of the id set. The rank is [[hashRankCounted]]'s
     * two-stage global rank (r16 — previously a one-partition window
     * with a "at 100 TB" disclaimer; now the template it promised).
     */
@@ -2160,8 +2097,8 @@ object Similarity {
     val skip = hr
       .withColumn("j", explode(sequence(lit(0L), lit(62L))))
       .withColumn("off", pow(lit(2.0d), col("j")).cast("long"))
-      .filter(col("off") <= col("_b") - 1L)
-      .withColumn("trn", (col("rn") - 1L + col("off")) % col("_b") + 1L)
+      .filter(col("off") <= col("_n") - 1L)
+      .withColumn("trn", (col("rn") - 1L + col("off")) % col("_n") + 1L)
       .join(hr.select(col("rn").as("trn"),
         col("vec_id").as("nbr_id")), Seq("trn"))
       .select(col("vec_id"), col("nbr_id"))
@@ -2188,11 +2125,6 @@ object Similarity {
     (fs.head, fs.last)
   }
 
-  /** [[beamWalk]] exposing EVERY per-round frontier (index r =
-    * frontier after r rounds; index 0 = the entry frontier). Free to
-    * return — each round's frontier is already pinned by the walk —
-    * and what the s50 rounds-curve dial cuts at its sample points.
-    */
   /** The exact-cosine scorer shared by the walk's entry frontier and
     * every [[beamRoundFrame]] — ONE definition so the bit-identity
     * argument (carried sim ≡ re-scored sim) is true by construction.
@@ -2232,6 +2164,11 @@ object Similarity {
       "q_id", "cand_id", "sim", beam)
   }
 
+  /** [[beamWalk]] exposing EVERY per-round frontier (index r =
+    * frontier after r rounds; index 0 = the entry frontier). Free to
+    * return — each round's frontier is already pinned by the walk —
+    * and what the s50 rounds-curve dial cuts at its sample points.
+    */
   private def beamWalkAll(e: DataFrame, gsym: DataFrame, q: DataFrame,
                           beam: Int, rounds: Int,
                           f0Override: Option[DataFrame] = None)
@@ -2255,7 +2192,32 @@ object Similarity {
     fs.result()
   }
 
-  /** Returns (frontier₀, frontier_R, pinned corpus frame) — the pinned
+  /** The beam-search chain shared by s33/s34: the [[nnDescent]] graph
+    * SYMMETRIZED (HNSW/NSG search walks neighborhoods undirected — a
+    * reverse edge is as good a road as a forward one), deterministic
+    * global entry points (the `beam` corpus vectors earliest in
+    * md5-hash order — the fixed entry point of the published graph
+    * searches, made a set so round 0 starts with a full frontier),
+    * then `rounds` FIXED expansion rounds: hop the frontier one edge,
+    * union the frontier itself (monotone — the best-so-far can never
+    * be lost), score exactly against the query, keep the per-query
+    * top-`beam`. Fixed rounds instead of a convergence loop is what
+    * makes the search unrollable for the DuckDB oracle — the
+    * d08/g10/nnDescent discipline.
+    *
+    * Returns (frontier₀, frontier_R): the entry frontier prices what
+    * the graph walk ADDS over its own starting points (s34's dial).
+    *
+    * Scale shape: the graph is the write-once n·k edge list; per
+    * round the candidate volume is ≤ |Q|·beam·(2k+1) rows — QUERY-
+    * sized, never corpus-sized; the corpus is touched only by the
+    * edge-list equi-join and the vector-fetch equi-join (both
+    * key-partitioned), with no IVF probe scan and no corpus
+    * self-join anywhere. Frontiers pin per round (Materialize seam):
+    * each feeds the hop, the union AND the re-rank, and un-pinned
+    * lineage doubles per round.
+    *
+    * Returns (frontier₀, frontier_R, pinned corpus frame) — the pinned
     * `e` rides along so recall callers reuse it for their truth pass
     * instead of pinning a second copy of the same frame (r20, guide
     * §1.2: one corpus pin per query, not two).
@@ -2380,7 +2342,7 @@ object Similarity {
     * Scale shape: the pilot scan is |Q|·√n broadcast-scored rows —
     * the published upper-layer cost, sublinear in the corpus and
     * query-sized per query; everything else is s33's shape. The pilot
-    * RANK is [[hashRank]]'s two-stage template (r16 — previously a
+    * RANK is [[hashRankCounted]]'s two-stage template (r16 — previously a
     * one-partition window with a scaladoc-only "at 100 TB" promise;
     * ADVICE r15 asked for the promise to be enforced, and now it is
     * the code).
@@ -2417,7 +2379,7 @@ object Similarity {
     // two-stage pin both carried every pilot-candidate vector; now
     // the shared id-only `hr` decides membership and only √n rows
     // ever carry vectors
-    val pilots = hr.filter(col("rn") * col("rn") <= col("_b"))
+    val pilots = hr.filter(col("rn") * col("rn") <= col("_n"))
       .select(col("vec_id"))
       .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
       .select(col("vec_id").as("cand_id"), col("v"), col("nrm"))
@@ -2706,6 +2668,21 @@ object Similarity {
       .unionByName(side(newNodes = true, "new_nodes"))
   }
 
+  /** Per-label mean embedding (class centroids / cluster prototypes) in
+    * long format: one row per (label, dim). The mean is computed over
+    * FIXED-POINT component sums — floor(x·10⁶) per component, summed
+    * as exact longs — so the aggregate is order-independent and the
+    * distributed result is bit-identical under any partitioning (the
+    * PageRank discipline applied to vector reductions; a naive
+    * sum(double) varies with summation order and cannot hash-gate).
+    *
+    * Shape: posexplode fans each vector into d rows (map-local), the
+    * sum is a partial hash aggregate on (label, dim) — one shuffle of
+    * at most |labels|·d combined rows per partition. 64 components ×
+    * 2^43 max |q| per row leaves exact-long headroom up to ~2^20 rows
+    * per (label, dim) group per the scale constant; raise `scale`
+    * awareness accordingly (10⁶ keeps μ-precision to 6 decimals).
+    */
   def labelCentroids(embeddings: DataFrame, scale: Long = 1000000L): DataFrame =
     embeddings
       .select(col("label"),
@@ -2718,19 +2695,6 @@ object Similarity {
         (col("qsum").cast("double") / scale / col("n_vecs")).as("centroid"),
         col("n_vecs"))
 
-  /** Exact RADIUS search: every corpus vector with cosine ≥ `tau` to
-    * any query vector (vec_id < nQueries), self excluded — the
-    * "everything similar to these probes" retrieval behind targeted
-    * decontamination, semantic recall sets, and topic extraction.
-    * Unlike top-k there is no rank cutoff, so the answer set is exact
-    * (no window) and its size is data-dependent.
-    *
-    * The best-possible 100 TB shape: the query set is tiny and
-    * BROADCAST, so the whole operator is one corpus scan with a
-    * row-local score-and-filter — ZERO shuffles (knnBrute's top-k needs
-    * a rank shuffle; this doesn't even need that). Matches stream
-    * straight to the sink.
-    */
   /** Nearest-centroid classification: every vector assigned to the
     * [[labelCentroids]] centroid with the highest cosine (lowest label
     * on ties), plus the agreement flag against its true label — the
@@ -2771,6 +2735,19 @@ object Similarity {
         (col("true_label") === -col("best.neg_label")).as("agree"))
   }
 
+  /** Exact RADIUS search: every corpus vector with cosine ≥ `tau` to
+    * any query vector (vec_id < nQueries), self excluded — the
+    * "everything similar to these probes" retrieval behind targeted
+    * decontamination, semantic recall sets, and topic extraction.
+    * Unlike top-k there is no rank cutoff, so the answer set is exact
+    * (no window) and its size is data-dependent.
+    *
+    * The best-possible 100 TB shape: the query set is tiny and
+    * BROADCAST, so the whole operator is one corpus scan with a
+    * row-local score-and-filter — ZERO shuffles (knnBrute's top-k needs
+    * a rank shuffle; this doesn't even need that). Matches stream
+    * straight to the sink.
+    */
   def rangeSearch(embeddings: DataFrame, nQueries: Int,
                   tau: Double): DataFrame = {
     val e = prepared(embeddings)
@@ -2918,6 +2895,13 @@ object Similarity {
         col("nbr_id"), col("rel"), col("score")))
   }
 
+  /** [[centroidDrift]]'s default fixed-point scale — a named constant
+    * because the s32 DuckDB oracle interpolates it (and the derived
+    * 10·scale offset), so entry and oracle can never drift apart the
+    * way a pair of hardcoded literals can (ADVICE r13).
+    */
+  val DriftScale: Long = 1000000L
+
   /** Embedding-distribution drift monitor (s32) — the QA check a
     * corpus-refresh pipeline runs before re-using an ANN index or
     * centroid table built on the previous snapshot: split the corpus
@@ -2942,13 +2926,6 @@ object Similarity {
     * label-keyed join over label×dim rows (dimension-bounded, never
     * corpus-sized) + one per-label rollup.
     */
-  /** [[centroidDrift]]'s default fixed-point scale — a named constant
-    * because the s32 DuckDB oracle interpolates it (and the derived
-    * 10·scale offset), so entry and oracle can never drift apart the
-    * way a pair of hardcoded literals can (ADVICE r13).
-    */
-  val DriftScale: Long = 1000000L
-
   def centroidDrift(embeddings: DataFrame,
                     scale: Long = DriftScale): DataFrame = {
     // positive-shift offset DERIVED from scale (review fix: a

@@ -109,15 +109,10 @@ object TextAnalysis {
   /** Vocabulary frequency table with deterministic rank (count desc,
     * word asc) — the Zipf view used for tokenizer/vocab decisions.
     *
-    * The global rank is TWO-STAGE, never a partition-less window: a
-    * web-corpus vocabulary is 10⁸+ terms, and `Window.orderBy(...)`
-    * with no partition key moves the whole table onto a single task.
-    * Instead: range-repartition by the rank order (so partition i
-    * holds a contiguous rank range), rank within each partition, and
-    * offset by the sizes of earlier partitions (a prefix window over
-    * the tiny per-partition counts — bounded by the partition COUNT,
-    * so no data-sized window and no single-partition sort anywhere).
-    * Rank ties are impossible: `word`
+    * The global rank is TWO-STAGE ([[TwoStage.globalRank]]), never a
+    * partition-less window: a web-corpus vocabulary is 10⁸+ terms,
+    * and `Window.orderBy(...)` with no partition key moves the whole
+    * table onto a single task. Rank ties are impossible: `word`
     * is unique after the aggregate, so (n desc, word asc) is a total
     * order and the result is deterministic for ANY range-boundary
     * placement.
@@ -133,23 +128,9 @@ object TextAnalysis {
     // stages); only the vocabulary-sized reduce tail re-runs in the
     // sampling pass, cheaper than a checkpoint round-trip. The
     // post-pin is vocabulary-sized, never corpus-sized
-    val parted = graft.operators.TwoStage.rangeParted(v, rankPartitions,
+    TwoStage.globalRank(v, rankPartitions, Nil,
       col("n").desc, col("word").asc)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pid"))
-      .orderBy(col("n").desc, col("word").asc)
-    val local = parted.withColumn("_r", row_number().over(wLocal))
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    // prefix offsets in ONE window pass over the ≤ rankPartitions-row
-    // counts table (partition-less, but bounded by the partition COUNT,
-    // never by data — the q35 fold, replacing the triangular self-join)
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_cnt")).over(wOff), lit(0L)).as("_off"))
-    local.join(broadcast(offsets), Seq("_pid"))
-      .select(col("word"), col("n"),
-        (col("_off") + col("_r")).cast("int").as("rank"))
+      .select(col("word"), col("n"), col("_rank").cast("int").as("rank"))
   }
 
   /** Document-frequency table: per term, how many documents contain it
@@ -923,6 +904,10 @@ object TextAnalysis {
           .as("intercept"))
   }
 
+  /** t25's gated cut and floor — shared with the oracle. */
+  val PmiTopK: Int = 50
+  val PmiMinCount: Long = 5L
+
   /** Top-k PMI collocations (t25, Church & Hanks 1990): adjacent word
     * pairs ranked by pointwise mutual information
     * PMI = ln(P(w1,w2) / (P(w1)·P(w2))) = ln(c12·N / (c1·c2)) with N
@@ -946,10 +931,6 @@ object TextAnalysis {
     * the top-k is TakeOrderedAndProject (q06's class) — never a
     * partition-less rank window.
     */
-  /** t25's gated cut and floor — shared with the oracle. */
-  val PmiTopK: Int = 50
-  val PmiMinCount: Long = 5L
-
   def pmiCollocations(documents: DataFrame, k: Int = PmiTopK,
                       minCount: Long = PmiMinCount): DataFrame = {
     val pairs = documents

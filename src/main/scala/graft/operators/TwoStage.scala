@@ -1,17 +1,19 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Materialize.MatOps
 
-/** The repo's two-stage global-rank building block (the t06/q35/p10
-  * template): range-repartition on the order key so partition i holds
-  * a contiguous key range, stamp each row with its partition id, then
-  * let callers rank locally per `_pid` and offset by the
+/** The repo's two-stage global rank ([[TwoStage.globalRank]]; the
+  * t06/q35/p10 shape): range-repartition on the order key so
+  * partition i holds a contiguous key range, stamp each row with its
+  * partition id, rank locally per `_pid`, and offset by the
   * partition-count prefix window over the tiny per-`_pid` counts
   * table — a global total order with no partition-less window and no
-  * single-task sort.
+  * single-task sort. Callers hand in a frame and an order and read
+  * `_rank`/`_n` back; none re-types the algebra.
   *
   * THE PIN IS LOAD-BEARING, not an optimization. Spark's
   * RangePartitioner draws its boundaries from a reservoir SAMPLE
@@ -73,4 +75,37 @@ object TwoStage {
     df.repartitionByRange(numPartitions, order: _*)
       .withColumn("_pid", spark_partition_id())
       .materialized
+
+  /** `df`'s columns plus `_rank`, the 1-based long position of each
+    * row in `order` within its `groups` (the whole frame when `groups`
+    * is empty), and `_n`, the size of the row's group. `order` must be
+    * a total order within each group.
+    *
+    * [[rangeParted]] on `groups ++ order`, a local `row_number` per
+    * (`_pid`, groups), and one window over the ≤ numPartitions×groups
+    * counts table giving each (`_pid`, group) its earlier partitions'
+    * count, broadcast back. `_n` shares that window's partitioning and
+    * order (whole frame instead of the prefix), so it adds no
+    * operator, and Catalyst prunes it where the caller never reads it:
+    * a rank-only caller gets the same plan as without it.
+    */
+  def globalRank(df: DataFrame, numPartitions: Int, groups: Seq[String],
+                 order: Column*): DataFrame = {
+    val g = groups.map(col)
+    val parted = rangeParted(df, numPartitions, g.map(_.asc) ++ order: _*)
+    val local = parted.withColumn("_lrk", row_number()
+      .over(Window.partitionBy(col("_pid") +: g: _*).orderBy(order: _*)))
+    val byPid = Window.partitionBy(g: _*).orderBy(col("_pid"))
+    val offsets = parted.groupBy(col("_pid") +: g: _*)
+      .agg(count(lit(1)).as("_cnt"))
+      .select(col("_pid") +: g :+
+        coalesce(sum(col("_cnt")).over(
+          byPid.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+          .as("_off") :+
+        sum(col("_cnt")).over(byPid.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)).as("_n"): _*)
+    local.join(broadcast(offsets), "_pid" +: groups)
+      .select(df.columns.map(col) :+
+        (col("_off") + col("_lrk")).as("_rank") :+ col("_n"): _*)
+  }
 }

@@ -26,15 +26,6 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanCheck {
 
-  /** The flag classes, single source of truth. Each matches a
-    * structural red flag in the STATIC executed plan; the benign
-    * instances are enumerated in PLANCHECK.json and explained in
-    * BASELINE.md §3.3:
-    * BroadcastNestedLoopJoin = the 1-row-broadcast scalar-anchor
-    * class; no-pushed-filter = derived-column filters above their
-    * producers; stacked-generate = cheap int-sequence generators
-    * (m03/m04). Anything NEW in any class is drift.
-    */
   /** VERDICT r15 #3: the p24 boundary-redraw class, gated structurally
     * instead of by convention. A `repartitionByRange` whose exchange
     * is consumed by more than one plan branch without an interposed
@@ -182,6 +173,15 @@ object PlanCheck {
     if (bad.nonEmpty) Seq("unpartitioned-window") else Seq.empty
   }
 
+  /** The flag classes, single source of truth. Each matches a
+    * structural red flag in the STATIC executed plan; the benign
+    * instances are enumerated in PLANCHECK.json and explained in
+    * BASELINE.md §3.3:
+    * BroadcastNestedLoopJoin = the 1-row-broadcast scalar-anchor
+    * class; no-pushed-filter = derived-column filters above their
+    * producers; stacked-generate = cheap int-sequence generators
+    * (m03/m04). Anything NEW in any class is drift.
+    */
   def flagsOf(plan: String): Seq[String] = Seq(
     "BroadcastNestedLoopJoin" -> plan.contains("BroadcastNestedLoopJoin"),
     "CartesianProduct" -> plan.contains("CartesianProduct"),
@@ -195,14 +195,21 @@ object PlanCheck {
   /** Sweep every registered query's static executed plan. Returns
     * name → flags (flagged queries only) and the error list (a query
     * whose plan fails to even compile is itself a drift failure).
+    * Prints the 10 slowest frame builds: a build runs the query's
+    * eager jobs (pins, collected thresholds), which is where a
+    * plan-only sweep spends its time.
     */
   def sweep(spark: SparkSession, sfDir: String)
       : (Map[String, Seq[String]], Seq[String]) = {
     val errors = scala.collection.mutable.ListBuffer.empty[String]
+    val buildS = scala.collection.mutable.ListBuffer.empty[(String, Double)]
     val flagged = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try {
-          val qe = fn(spark, sfDir).queryExecution
+          val t0 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          buildS += name -> (System.nanoTime() - t0) / 1e9
+          val qe = df.queryExecution
           val fl = flagsOf(qe.executedPlan.toString) ++
             rangeRedrawFlags(qe.optimizedPlan) ++
             unpartitionedWindowFlags(qe.optimizedPlan)
@@ -213,6 +220,11 @@ object PlanCheck {
               String.valueOf(e.getMessage).take(120)}"
             None
         }
+    }
+    println(f"plancheck builds: ${buildS.map(_._2).sum}%.1f s over " +
+      s"${buildS.size} queries; slowest:")
+    buildS.sortBy(-_._2).take(10).foreach { case (n, t) =>
+      println(f"  $t%8.2f s  $n")
     }
     (flagged.toMap, errors.toList)
   }

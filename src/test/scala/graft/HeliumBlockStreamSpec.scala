@@ -227,9 +227,9 @@ class HeliumBlockStreamSpec extends SparkSpec {
   test("capstone kill/restart byte parity with the production " +
     "RocksDB conf set (this query keeps no streaming state — the " +
     "provider's stateful behavior is pinned in StreamingOpsSpec)") {
-    // the production state-store config (Sessions.tuned
-    // rocksdbStateStore = true), set per-query — the conf keys are
-    // read at stream start, the StreamingOpsSpec discipline. The
+    // the RocksDB state-store conf keys (provider + changelog
+    // checkpointing), set per-query — the conf keys are read at
+    // stream start, the StreamingOpsSpec discipline. The
     // follower's dropDuplicates runs batch-locally inside
     // foreachBatch, so no state store is instantiated here (ADVICE
     // r11): this pins that the production conf is HARMLESS to the

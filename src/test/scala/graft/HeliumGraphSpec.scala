@@ -146,4 +146,29 @@ class HeliumGraphSpec extends SparkSpec {
       dave.getAs[Long]("total_in") === 42L)
     assert(dave.getAs[String]("top_counterparty") === "accounts/dave")
   }
+
+  test("a key determines its block: every payment and receipt _key " +
+    "maps to one block, and a payload listed in two blocks gets two keys") {
+    // the precondition for partition-local dedup: if a key could span
+    // blocks, dropping duplicates per block range would keep both
+    def blocksPerKey(edges: org.apache.spark.sql.DataFrame) =
+      edges.groupBy(col("_key"))
+        .agg(countDistinct(col("block")).as("nb"))
+        .select(max(col("nb"))).head().getLong(0)
+    val payments = HeliumGraph.paymentV1Edges(env)
+      .select(col("_key"), col("block"))
+      .unionByName(HeliumGraph.paymentV2Edges(env)
+        .select(col("_key"), col("block")))
+    assert(blocksPerKey(payments) === 1L)
+    assert(blocksPerKey(HeliumGraph.receiptEdges(env)) === 1L)
+    // the same payment_v1 payload re-listed at another height
+    val one = env.filter(col("type") === "payment_v1").limit(1)
+    val relisted = one.unionByName(
+      one.withColumn("block", col("block") + 1L))
+    val keys = HeliumGraph.paymentV1Edges(relisted)
+      .select(col("_key"), col("block")).collect()
+    assert(keys.length === 2)
+    assert(keys.map(_.getLong(1)).distinct.length === 2)
+    assert(keys.map(_.getString(0)).distinct.length === 2)
+  }
 }

@@ -147,18 +147,17 @@ class PlanCheckWindowSpec extends SparkSpec {
   }
 
   test("the TwoStage offsets template (counts-table window) is benign") {
-    // the exact wOff shape every two-stage call site uses: a window
-    // ordered by _pid over the per-_pid counts AGGREGATE — grouping
-    // covers the sort key, output bounded by the partition count
-    val parted = graft.operators.TwoStage.rangeParted(corpus, 4,
+    // the primitive's real plan: a window ordered by _pid over the
+    // per-_pid counts AGGREGATE — grouping covers the sort key, output
+    // bounded by the partition count
+    val ranked = graft.operators.TwoStage.globalRank(corpus, 4, Nil,
       col("k").asc)
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_c"))
-    val wOff = Window.orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts.select(col("_pid"),
-      coalesce(sum(col("_c")).over(wOff), lit(0L)).as("_off"))
-    assert(PlanCheck.unpartitionedWindowFlags(
-      offsets.queryExecution.optimizedPlan) === Seq.empty)
+    val plan = ranked.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+        if w.partitionSpec.isEmpty => w
+    }.nonEmpty, "no counts-table window in the plan")
+    assert(PlanCheck.unpartitionedWindowFlags(plan) === Seq.empty)
   }
 
   test("a non-covering aggregate under a partition-less window is flagged") {
@@ -233,5 +232,57 @@ class PlanCheckWindowSpec extends SparkSpec {
       Seq(SortOrder(sortKey, Ascending)), proj)
     assert(PlanCheck.unpartitionedWindowFlags(win)
       === Seq("unpartitioned-window"))
+  }
+}
+
+/** [[graft.operators.TwoStage.globalRank]] against the partition-less
+  * reference it replaces, on a frame spread over several partitions.
+  */
+class TwoStageRankSpec extends SparkSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.expressions.Window
+  import graft.operators.TwoStage
+
+  // (o_orderkey) is unique, so each order below is total
+  private def frame = table("orders")
+    .select(col("o_orderkey"), col("o_custkey"),
+      col("o_orderstatus").as("g"))
+    .repartition(5)
+
+  private def check(groups: Seq[String], order: Seq[Column]): Unit = {
+    val ranked = TwoStage.globalRank(frame, 6, groups, order: _*)
+    val ref = frame
+      .withColumn("ref_rank",
+        row_number().over(Window.partitionBy(groups.map(col): _*)
+          .orderBy(order: _*)).cast("long"))
+      .withColumn("ref_n",
+        count(lit(1)).over(Window.partitionBy(groups.map(col): _*)))
+    assert(ranked.columns.toSeq ===
+      frame.columns.toSeq ++ Seq("_rank", "_n"))
+    assert(ranked.schema("_rank").dataType ===
+      org.apache.spark.sql.types.LongType)
+    val rows = ranked.join(ref, "o_orderkey").collect()
+    assert(rows.length.toLong === frame.count() && rows.length > 100)
+    rows.foreach { r =>
+      assert(r.getAs[Long]("_rank") === r.getAs[Long]("ref_rank"), r)
+      assert(r.getAs[Long]("_n") === r.getAs[Long]("ref_n"), r)
+    }
+    val plan = ranked.queryExecution.optimizedPlan
+    assert(PlanCheck.rangeRedrawFlags(plan) === Seq.empty)
+    assert(plan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical
+        .RepartitionByExpression => r
+    }.isEmpty)
+    assert(PlanCheck.unpartitionedWindowFlags(plan) === Seq.empty)
+  }
+
+  test("globalRank ungrouped: rank and size equal the reference") {
+    check(Nil, Seq(col("o_custkey").desc, col("o_orderkey").asc))
+  }
+
+  test("globalRank grouped: in-group rank and group size equal the " +
+    "reference") {
+    check(Seq("g"), Seq(col("o_custkey").asc, col("o_orderkey").desc))
   }
 }
