@@ -47,10 +47,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** Sign-bit sketch over the first `bits` components: the bucketed
@@ -116,13 +113,10 @@ object Similarity {
     val q = indexed.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
-    val probes = q.join(broadcast(centersDf))
-      .select(col("q_id"), col("qv"), col("qnrm"), col("cell"),
-        Canon.dot(col("qv"), col("cv")).as("cdot"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdot").desc,
-          col("cell").asc)))
-      .filter(col("rk") <= nProbe)
+    val probes = topK(q.join(broadcast(centersDf))
+        .select(col("q_id"), col("qv"), col("qnrm"), col("cell"),
+          Canon.dot(col("qv"), col("cv")).as("cdot")),
+        nProbe, "rk")(col("q_id"))(col("cdot").desc, col("cell").asc)
       .select(col("q_id"), col("qv"), col("qnrm"), col("cell"))
     val scored = indexed.join(broadcast(probes),
       indexed("cell") === probes("cell") &&
@@ -130,10 +124,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** The deterministic coarse-quantizer centroid set as ONE broadcast
@@ -464,10 +455,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** Recall@k of the deterministic IVF path against the exact
@@ -483,18 +471,10 @@ object Similarity {
     * searches, not the compare.
     */
   def annRecall(embeddings: DataFrame, nQueries: Int, k: Int,
-                nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val exact = knnBrute(embeddings, nQueries, k)
-      .select(col("q_id"), col("nbr_id"))
-    val approx = knnIvfDeterministic(embeddings, nQueries, k, nCells,
-      nProbe).select(col("q_id").as("_q"), col("nbr_id").as("_n"))
-    exact.join(approx,
-      col("q_id") === col("_q") && col("nbr_id") === col("_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k_exact"), count(col("_n")).as("n_hit"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_exact")).as("recall"))
-  }
+                nCells: Int = 16, nProbe: Int = 4): DataFrame =
+    recallVsExact(knnBrute(embeddings, nQueries, k),
+      knnIvfDeterministic(embeddings, nQueries, k, nCells, nProbe),
+      Seq("q_id"))
 
   /** The nProbe TUNING CURVE in one pass — mean recall@k at every
     * probe budget in `thresholds`, the d19-detection-curve pattern
@@ -536,21 +516,11 @@ object Similarity {
       .select(col("q_id"), col("nbr_id"), col("pr"), col("sim"),
         explode(thArr).as("n_probe"))
       .filter(col("pr") <= col("n_probe"))
-    val w = Window.partitionBy(col("n_probe"), col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    val topk = fanned.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("n_probe").as("_np"), col("q_id").as("_q"),
-        col("nbr_id").as("_n"))
+    val topk = topK(fanned, k, "rank")(col("n_probe"), col("q_id"))(
+      col("sim").desc, col("nbr_id").asc)
     val exactTh = knnBrute(embeddings, nQueries, k)
       .select(col("q_id"), col("nbr_id"), explode(thArr).as("n_probe"))
-    exactTh.join(topk,
-      col("n_probe") === col("_np") && col("q_id") === col("_q") &&
-        col("nbr_id") === col("_n"), "left")
-      .groupBy(col("n_probe"))
-      .agg(count(lit(1)).as("k_total"), count(col("_n")).as("n_hit"))
-      .select(col("n_probe"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_total")).as("recall"))
+    recallVsExact(exactTh, topk, Seq("n_probe"))
   }
 
   /** `prepared` keeping the metadata column the filtered search
@@ -607,10 +577,7 @@ object Similarity {
         col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** The filtered-search STRATEGY dial — the measurement behind the
@@ -642,16 +609,13 @@ object Similarity {
       .select(col("vec_id").as("q_id"),
         pmod(col("vec_id"), lit(nLabels)).as("target_label"),
         col("v").as("qv"), col("nrm").as("qnrm"))
-    val truth = el.join(broadcast(q),
-      col("vec_id") =!= col("q_id") &&
-        col("label") === col("target_label"))
-      .select(col("q_id"), col("vec_id").as("nbr_id"),
-        Canon.cosine(Canon.dot(col("qv"), col("v")),
-          col("qnrm"), col("nrm")).as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("nbr_id").asc)))
-      .filter(col("rank") <= k)
+    val truth = topK(el.join(broadcast(q),
+        col("vec_id") =!= col("q_id") &&
+          col("label") === col("target_label"))
+        .select(col("q_id"), col("vec_id").as("nbr_id"),
+          Canon.cosine(Canon.dot(col("qv"), col("v")),
+            col("qnrm"), col("nrm")).as("sim")),
+        k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
       .select(col("q_id"), col("nbr_id"))
       .materialized
     val pre = filteredIvfSearch(embeddings, nQueries, k, nCells,
@@ -660,13 +624,10 @@ object Similarity {
     val un = knnIvfDeterministic(embeddings, nQueries, expand * k,
       nCells, nProbe)
       .select(col("q_id"), col("nbr_id"), col("sim"))
-    val post = embeddings.select(col("vec_id"), col("label"))
-      .join(broadcast(un), col("vec_id") === col("nbr_id"))
-      .filter(col("label") === pmod(col("q_id"), lit(nLabels)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("nbr_id").asc)))
-      .filter(col("rank") <= k)
+    val post = topK(embeddings.select(col("vec_id"), col("label"))
+        .join(broadcast(un), col("vec_id") === col("nbr_id"))
+        .filter(col("label") === pmod(col("q_id"), lit(nLabels))),
+        k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
       .select(col("q_id"), col("nbr_id")).materialized
     val nq = lit(nQueries).cast("long")
     def armRow(name: String, arm: DataFrame): DataFrame = {
@@ -727,14 +688,11 @@ object Similarity {
           col("qnrm"), col("nrm")).as("sim"))
       .materialized
     val thArr = array(thresholds.map(lit): _*)
-    def topkPerThr(scored: DataFrame): DataFrame = scored
-      .select(col("q_id"), col("label"), col("nbr_id"), col("sim"),
-        explode(thArr).as("thr"))
-      .filter(col("label") <= col("thr"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("thr"), col("q_id"))
-          .orderBy(col("sim").desc, col("nbr_id").asc)))
-      .filter(col("rank") <= k)
+    def topkPerThr(scored: DataFrame): DataFrame = topK(scored
+        .select(col("q_id"), col("label"), col("nbr_id"), col("sim"),
+          explode(thArr).as("thr"))
+        .filter(col("label") <= col("thr")),
+        k, "rank")(col("thr"), col("q_id"))(col("sim").desc, col("nbr_id").asc)
       .select(col("thr"), col("q_id"), col("nbr_id"))
     val bq = el.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -745,11 +703,8 @@ object Similarity {
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))).materialized
     val pre = topkPerThr(cand).materialized
-    val un = cand
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("nbr_id").asc)))
-      .filter(col("rank") <= expand * k)
+    val un = topK(cand, expand * k, "rank")(col("q_id"))(
+        col("sim").desc, col("nbr_id").asc)
       .select(col("q_id"), col("label"), col("nbr_id"), col("sim"))
     val post = topkPerThr(un).materialized
     // per-threshold summary off a complete grid: an arm with zero
@@ -789,10 +744,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** Product-quantization codes (the 32× memory lever of the ANN
@@ -866,10 +818,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("q.q_id"))
       .select(col("q.q_id").as("q_id"), col("vec_id").as("nbr_id"),
         approx.as("approx_dot"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dot").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(
+      col("approx_dot").desc, col("nbr_id").asc)
   }
 
   /** IVF-PQ search — the IVFADC composition (Jégou et al. 2011, the
@@ -927,10 +877,8 @@ object Similarity {
       col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         approx.as("approx_dot"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dot").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(
+      col("approx_dot").desc, col("nbr_id").asc)
   }
 
   /** Recall@k of the doubly-approximate IVF-PQ composition against the
@@ -945,18 +893,10 @@ object Similarity {
   def annRecallIvfPq(embeddings: DataFrame, nQueries: Int, k: Int,
                      nCells: Int = 16, nProbe: Int = 4,
                      m: Int = 8, nCodes: Int = 16,
-                     dim: Int = 64): DataFrame = {
-    val exact = knnBrute(embeddings, nQueries, k)
-      .select(col("q_id"), col("nbr_id"))
-    val approx = knnIvfPq(embeddings, nQueries, k, nCells, nProbe, m,
-      nCodes, dim).select(col("q_id").as("_q"), col("nbr_id").as("_n"))
-    exact.join(approx,
-      col("q_id") === col("_q") && col("nbr_id") === col("_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k_exact"), count(col("_n")).as("n_hit"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_exact")).as("recall"))
-  }
+                     dim: Int = 64): DataFrame =
+    recallVsExact(knnBrute(embeddings, nQueries, k),
+      knnIvfPq(embeddings, nQueries, k, nCells, nProbe, m, nCodes, dim),
+      Seq("q_id"))
 
   /** The three PERSISTABLE residual-IVFADC index artifacts — exactly
     * what a 100 TB deployment ships from the (one-time) build job to
@@ -1027,10 +967,8 @@ object Similarity {
       col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         approx.as("approx_dot"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dot").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(
+      col("approx_dot").desc, col("nbr_id").asc)
   }
 
   /** IVF-PQ with RESIDUAL encoding — IVFADC as actually published
@@ -1292,19 +1230,11 @@ object Similarity {
   def annRecallIvfPqResidual(embeddings: DataFrame, nQueries: Int,
                              k: Int, nCells: Int = 16, nProbe: Int = 4,
                              m: Int = 8, nCodes: Int = 16,
-                             dim: Int = 64): DataFrame = {
-    val exact = knnBrute(embeddings, nQueries, k)
-      .select(col("q_id"), col("nbr_id"))
-    val approx = knnIvfPqResidual(embeddings, nQueries, k, nCells,
-      nProbe, m, nCodes, dim)
-      .select(col("q_id").as("_q"), col("nbr_id").as("_n"))
-    exact.join(approx,
-      col("q_id") === col("_q") && col("nbr_id") === col("_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k_exact"), count(col("_n")).as("n_hit"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_exact")).as("recall"))
-  }
+                             dim: Int = 64): DataFrame =
+    recallVsExact(knnBrute(embeddings, nQueries, k),
+      knnIvfPqResidual(embeddings, nQueries, k, nCells, nProbe, m,
+        nCodes, dim),
+      Seq("q_id"))
 
   /** Exact re-ranking over the residual IVF-PQ shortlist — the final
     * stage of the production ANN pipeline (FAISS's
@@ -1350,10 +1280,7 @@ object Similarity {
       .select(col("q_id"), col("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(rescored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** Recall@k of the re-ranked pipeline (coarse quantize → ADC
@@ -1366,19 +1293,11 @@ object Similarity {
                            k: Int, shortlist: Int = 9,
                            nCells: Int = 16, nProbe: Int = 4,
                            m: Int = 8, nCodes: Int = 16,
-                           dim: Int = 64): DataFrame = {
-    val exact = knnBrute(embeddings, nQueries, k)
-      .select(col("q_id"), col("nbr_id"))
-    val approx = knnIvfPqRerank(embeddings, nQueries, k, shortlist,
-      nCells, nProbe, m, nCodes, dim)
-      .select(col("q_id").as("_q"), col("nbr_id").as("_n"))
-    exact.join(approx,
-      col("q_id") === col("_q") && col("nbr_id") === col("_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k_exact"), count(col("_n")).as("n_hit"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_exact")).as("recall"))
-  }
+                           dim: Int = 64): DataFrame =
+    recallVsExact(knnBrute(embeddings, nQueries, k),
+      knnIvfPqRerank(embeddings, nQueries, k, shortlist, nCells, nProbe,
+        m, nCodes, dim),
+      Seq("q_id"))
 
   /** The shortlist-size TUNING CURVE in one pass — mean re-ranked
     * recall@k at every shortlist budget k′ in `shortlists`, the
@@ -1425,21 +1344,11 @@ object Similarity {
       .select(col("q_id"), col("nbr_id"), col("sr"), col("sim"),
         explode(ksArr).as("k_short"))
       .filter(col("sr") <= col("k_short"))
-    val w = Window.partitionBy(col("k_short"), col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    val topk = fanned.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("k_short").as("_ks"), col("q_id").as("_q"),
-        col("nbr_id").as("_n"))
+    val topk = topK(fanned, k, "rank")(col("k_short"), col("q_id"))(
+      col("sim").desc, col("nbr_id").asc)
     val exactTh = knnBrute(embeddings, nQueries, k)
       .select(col("q_id"), col("nbr_id"), explode(ksArr).as("k_short"))
-    exactTh.join(topk,
-      col("k_short") === col("_ks") && col("q_id") === col("_q") &&
-        col("nbr_id") === col("_n"), "left")
-      .groupBy(col("k_short"))
-      .agg(count(lit(1)).as("k_total"), count(col("_n")).as("n_hit"))
-      .select(col("k_short"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_total")).as("recall"))
+    recallVsExact(exactTh, topk, Seq("k_short"))
   }
 
   /** Deterministic Gaussian-mixture embedding VIEW over the corpus
@@ -1641,10 +1550,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("rv")),
           col("qnrm"), col("rnrm")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** Recall@k of the SQ8 path vs the exact baseline — the ladder's
@@ -1654,18 +1560,9 @@ object Similarity {
     * storage from).
     */
   def annRecallSq8(embeddings: DataFrame, nQueries: Int,
-                   k: Int): DataFrame = {
-    val exact = knnBrute(embeddings, nQueries, k)
-      .select(col("q_id"), col("nbr_id"))
-    val approx = knnSq8(embeddings, nQueries, k)
-      .select(col("q_id").as("_q"), col("nbr_id").as("_n"))
-    exact.join(approx,
-      col("q_id") === col("_q") && col("nbr_id") === col("_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k_exact"), count(col("_n")).as("n_hit"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_exact")).as("recall"))
-  }
+                   k: Int): DataFrame =
+    recallVsExact(knnBrute(embeddings, nQueries, k),
+      knnSq8(embeddings, nQueries, k), Seq("q_id"))
 
   /** Binary (sign-bit) quantization + Hamming top-k: each dim-64
     * vector compresses to ONE long (bit i = sign of component i — the
@@ -1695,10 +1592,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("nbr_id"),
         bit_count(col("bits").bitwiseXOR(col("q_bits")))
           .cast("long").as("hamming"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming").asc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("q_id"))(col("hamming").asc, col("nbr_id").asc)
   }
 
   /** kNN-graph construction: each vector's top-`k` cosine neighbors
@@ -1740,10 +1634,7 @@ object Similarity {
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
           col("a.nrm"), col("b.nrm")).as("sim"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank")(col("vec_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** Row-local per-key top-`k` — the fused "dedup + rank + cut" the
@@ -1781,6 +1672,83 @@ object Similarity {
       .select(col(keyCol), explode(col("_top")).as("_t"))
       .select(col(keyCol), (-col("_t._ni")).as(idCol),
         col("_t._s").as(scoreCol))
+
+  /** Windowed per-key top-`k`: `df` plus the int `row_number` column
+    * `rankCol` over `partition`, ordered by `order`, kept to
+    * `rankCol ≤ k`. The cut every search, truth pass and curve in this
+    * file shares; callers keep or drop `rankCol` as their output shape
+    * needs. [[topKAgg]] is the aggregate form for deduping rounds.
+    */
+  private[graft] def topK(df: DataFrame, k: Int, rankCol: String)(
+      partition: Column*)(order: Column*): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(partition: _*).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
+
+  /** Recall of `approx` against `exact` per `by` group, both frames
+    * holding (by…, q_id, nbr_id) pairs: one left join of the exact
+    * pairs, n_hit = those `approx` also holds, recall = n_hit over the
+    * group's exact pair count. That count is `k_exact` when grouped by
+    * query and `k_total` when a curve pools its queries per point.
+    */
+  private[graft] def recallVsExact(exact: DataFrame, approx: DataFrame,
+                                   by: Seq[String]): DataFrame = {
+    val keys = (by ++ Seq("q_id", "nbr_id")).distinct
+    val tag = Map("q_id" -> "_q", "nbr_id" -> "_n").withDefault("_" + _)
+    val kCol = if (by == Seq("q_id")) "k_exact" else "k_total"
+    // `exact` keeps its callers' (q_id, nbr_id, by…) column order
+    exact.select((Seq("q_id", "nbr_id") ++ by).distinct.map(col): _*)
+      .join(approx.select(keys.map(c => col(c).as(tag(c))): _*),
+        keys.map(c => col(c) === col(tag(c))).reduce(_ && _), "left")
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as(kCol), count(col("_n")).as("n_hit"))
+      .select(by.map(col) ++ Seq(col("n_hit"),
+        (col("n_hit").cast("double") / col(kCol)).as("recall")): _*)
+  }
+
+  /** Pinned exact top-`k` (vec_id, nbr_id) pairs of the sampled query
+    * rows `q` (vec_id, v, nrm) over corpus `e`, self excluded: the
+    * truth pass of the graph recall dials. An unhinted self-join, where
+    * [[knnBrute]] broadcasts its query side.
+    */
+  private[graft] def sampledTruth(q: DataFrame, e: DataFrame,
+                                  k: Int): DataFrame =
+    topK(q.as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+        .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nbr_id"),
+          Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
+            col("a.nrm"), col("b.nrm")).as("sim")),
+        k, "rank")(col("vec_id"))(col("sim").desc, col("nbr_id").asc)
+      .select(col("vec_id"), col("nbr_id")).materialized
+
+  /** (n_queries, n_hits, recall) of the `found` (vec_id, nbr_id) pairs
+    * against [[sampledTruth]]'s `truth`, over the one-row query count
+    * `nQ`: n_hits / (n_queries·k). An empty sample (possible on tiny
+    * fixtures) reads recall 0, not an ANSI divide-by-zero.
+    */
+  private[graft] def sampledRecall(truth: DataFrame, found: DataFrame,
+                                   nQ: DataFrame, k: Int): DataFrame =
+    truth.join(found, Seq("vec_id", "nbr_id"), "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .crossJoin(broadcast(nQ))
+      .select(col("n_queries"), col("n_hits"),
+        when(col("n_queries") > 0L,
+          col("n_hits").cast("double") /
+            (col("n_queries") * k).cast("double"))
+          .otherwise(lit(0.0d)).as("recall"))
+
+  /** A beam frontier's (q_id, cand_id, sim) per-query top-`k` by
+    * (sim DESC, cand_id ASC), ranked into `rankCol`.
+    */
+  private def frontierTopK(f: DataFrame, k: Int, rankCol: String)
+      : DataFrame =
+    topK(f, k, rankCol)(col("q_id"))(col("sim").desc, col("cand_id").asc)
+
+  /** A frontier's top-`k` as the (vec_id, nbr_id) pairs
+    * [[sampledRecall]] reads.
+    */
+  private def frontierPairs(f: DataFrame, k: Int): DataFrame =
+    frontierTopK(f, k, "_rk")
+      .select(col("q_id").as("vec_id"), col("cand_id").as("nbr_id"))
 
   /** NN-descent KNN-graph construction (Dong et al. 2011, WWW — the
     * standard distributed KNN-graph builder): [[knnGraph]] can only
@@ -1820,10 +1788,7 @@ object Similarity {
     // the graph is already top-k per node; this final window only
     // re-derives the rank column for the s28 output shape (chain
     // callers read the pinned graph directly and skip it — r21)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    g.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(g, k, "rank")(col("vec_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
   /** The exact pair scorer shared by the descent seed and every
@@ -2014,31 +1979,15 @@ object Similarity {
     val e = prepared(embeddings).materialized
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val wT = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
     // truth pass built CONCURRENTLY with the descended graph (r21,
     // guide §2.6): both branches read only the pinned `e`
     val (descended, truth) = Par.concurrently(
       nnDescentGraph(embeddings, e, hashRankCounted(e), k, rounds),
-      q.as("a").join(e.as("b"),
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"),
-          col("b.vec_id").as("nbr_id"),
-          Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm")).as("sim"))
-        .withColumn("rank", row_number().over(wT))
-        .filter(col("rank") <= k)
-        .select(col("vec_id"), col("nbr_id")).materialized)
+      sampledTruth(q, e, k))
     val nQ = q.select(countDistinct(col("vec_id")).as("n_queries"))
     def hits(graph: DataFrame, variant: String): DataFrame =
-      truth.join(graph.select(col("vec_id"), col("nbr_id")),
-          Seq("vec_id", "nbr_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nQ))
-        .select(lit(variant).as("variant"), col("n_queries"),
-          col("n_hits"),
-          (col("n_hits").cast("double") /
-            (col("n_queries") * k).cast("double")).as("recall"))
+      sampledRecall(truth, graph.select(col("vec_id"), col("nbr_id")), nQ, k)
+        .select(lit(variant).as("variant"), col("*"))
     // the descended arm reads the pinned graph directly (r21): its
     // pair set IS nnDescent's output pair set (the public wrapper's
     // final window only re-derives the rank column, a no-op filter on
@@ -2269,10 +2218,7 @@ object Similarity {
                       rounds: Int = 4, graphK: Int = 5,
                       descentRounds: Int = 4): DataFrame = {
     val (_, f, _) = beamChain(embeddings, beam, rounds, graphK, descentRounds)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    f.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    frontierTopK(f, k, "rank")
       .select(col("q_id"), col("cand_id").as("nbr_id"), col("sim"),
         col("rank"))
   }
@@ -2291,36 +2237,15 @@ object Similarity {
     val e = prepared(embeddings).materialized
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val wT = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
     // chain build and truth pass overlapped (r21, guide §2.6): both
     // branches read only the pinned `e`
     val ((f0, f), truth) = Par.concurrently(
       beamChainOn(embeddings, e, beam, rounds, graphK, descentRounds),
-      q.as("a").join(e.as("b"),
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"),
-          col("b.vec_id").as("nbr_id"),
-          Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm")).as("sim"))
-        .withColumn("rank", row_number().over(wT))
-        .filter(col("rank") <= k)
-        .select(col("vec_id"), col("nbr_id")).materialized)
+      sampledTruth(q, e, k))
     val nQ = q.select(countDistinct(col("vec_id")).as("n_queries"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
     def hits(frontier: DataFrame, variant: String): DataFrame =
-      truth.join(frontier
-          .withColumn("_rk", row_number().over(wK))
-          .filter(col("_rk") <= k)
-          .select(col("q_id").as("vec_id"), col("cand_id").as("nbr_id")),
-          Seq("vec_id", "nbr_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nQ))
-        .select(lit(variant).as("variant"), col("n_queries"),
-          col("n_hits"),
-          (col("n_hits").cast("double") /
-            (col("n_queries") * k).cast("double")).as("recall"))
+      sampledRecall(truth, frontierPairs(frontier, k), nQ, k)
+        .select(lit(variant).as("variant"), col("*"))
     hits(f0, "entry").unionByName(hits(f, "beam"))
   }
 
@@ -2384,15 +2309,12 @@ object Similarity {
       .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
       .select(col("vec_id").as("cand_id"), col("v"), col("nrm"))
       .materialized
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    val f1 = q.crossJoin(broadcast(pilots))
-      .filter(col("cand_id") =!= col("q_id"))
-      .select(col("q_id"), col("cand_id"),
-        Canon.cosine(Canon.dot(col("qv"), col("v")),
-          col("qnrm"), col("nrm")).as("sim"))
-      .withColumn("_rk", row_number().over(wB))
-      .filter(col("_rk") <= beam).drop("_rk")
+    val f1 = frontierTopK(q.crossJoin(broadcast(pilots))
+        .filter(col("cand_id") =!= col("q_id"))
+        .select(col("q_id"), col("cand_id"),
+          Canon.cosine(Canon.dot(col("qv"), col("v")),
+            col("qnrm"), col("nrm")).as("sim")),
+        beam, "_rk").drop("_rk")
     beamWalk(e, gsym, q, beam, rounds, Some(f1))
   }
 
@@ -2405,10 +2327,7 @@ object Similarity {
                      descentRounds: Int = 4): DataFrame = {
     val (_, f, _) = hierChain(embeddings, beam, rounds, graphK,
       descentRounds)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    f.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    frontierTopK(f, k, "rank")
       .select(col("q_id"), col("cand_id").as("nbr_id"), col("sim"),
         col("rank"))
   }
@@ -2425,35 +2344,14 @@ object Similarity {
     val e = prepared(embeddings).materialized
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val wT = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
     // chain and truth overlapped (r21, guide §2.6)
     val ((f0, f), truth) = Par.concurrently(
       hierChainOn(embeddings, e, beam, rounds, graphK, descentRounds),
-      q.as("a").join(e.as("b"),
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"),
-          col("b.vec_id").as("nbr_id"),
-          Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm")).as("sim"))
-        .withColumn("rank", row_number().over(wT))
-        .filter(col("rank") <= k)
-        .select(col("vec_id"), col("nbr_id")).materialized)
+      sampledTruth(q, e, k))
     val nQ = q.select(countDistinct(col("vec_id")).as("n_queries"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
     def hits(frontier: DataFrame, variant: String): DataFrame =
-      truth.join(frontier
-          .withColumn("_rk", row_number().over(wK))
-          .filter(col("_rk") <= k)
-          .select(col("q_id").as("vec_id"), col("cand_id").as("nbr_id")),
-          Seq("vec_id", "nbr_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nQ))
-        .select(lit(variant).as("variant"), col("n_queries"),
-          col("n_hits"),
-          (col("n_hits").cast("double") /
-            (col("n_queries") * k).cast("double")).as("recall"))
+      sampledRecall(truth, frontierPairs(frontier, k), nQ, k)
+        .select(lit(variant).as("variant"), col("*"))
     hits(f0, "entry").unionByName(hits(f, "beam"))
   }
 
@@ -2481,8 +2379,6 @@ object Similarity {
     val e = prepared(embeddings).materialized
     val qv = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val wT = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
     // chain + walk and the truth pass overlapped (r21, guide §2.6)
     val (fs, truth) = Par.concurrently(
       {
@@ -2495,30 +2391,11 @@ object Similarity {
             col("nrm").as("qnrm")).materialized
         beamWalkAll(e, gsym, q, beam, cuts.max)
       },
-      qv.as("a").join(e.as("b"),
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"),
-          col("b.vec_id").as("nbr_id"),
-          Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm")).as("sim"))
-        .withColumn("rank", row_number().over(wT))
-        .filter(col("rank") <= k)
-        .select(col("vec_id"), col("nbr_id")).materialized)
+      sampledTruth(qv, e, k))
     val nQ = qv.select(countDistinct(col("vec_id")).as("n_queries"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
     def hitsAt(r: Int): DataFrame =
-      truth.join(fs(r)
-          .withColumn("_rk", row_number().over(wK))
-          .filter(col("_rk") <= k)
-          .select(col("q_id").as("vec_id"), col("cand_id").as("nbr_id")),
-          Seq("vec_id", "nbr_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nQ))
-        .select(lit(r.toLong).as("rounds"), col("n_queries"),
-          col("n_hits"),
-          (col("n_hits").cast("double") /
-            (col("n_queries") * k).cast("double")).as("recall"))
+      sampledRecall(truth, frontierPairs(fs(r), k), nQ, k)
+        .select(lit(r.toLong).as("rounds"), col("*"))
     cuts.map(hitsAt).reduce(_.unionByName(_))
   }
 
@@ -2620,8 +2497,6 @@ object Similarity {
                              beam: Int = 16, rounds: Int = 4,
                              descentRounds: Int = 4): DataFrame = {
     val eAll = prepared(embeddings).materialized
-    val wT = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
     // insert chain and truth pass overlapped (r21, guide §2.6); the
     // truth branch pins its own query frame from the shared `eAll`
     val ((patched, newFwd), (q, truth)) = Par.concurrently(
@@ -2631,41 +2506,19 @@ object Similarity {
         val qb = eAll.filter(col("vec_id") % 50 === 0 ||
             col("vec_id") % 50 === 49)
           .select(col("vec_id"), col("v"), col("nrm")).materialized
-        (qb, qb.as("a").join(eAll.as("b"),
-            col("a.vec_id") =!= col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_id"),
-            col("b.vec_id").as("nbr_id"),
-            Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
-              col("a.nrm"), col("b.nrm")).as("sim"))
-          .withColumn("rank", row_number().over(wT))
-          .filter(col("rank") <= k)
-          .select(col("vec_id"), col("nbr_id")).materialized)
+        (qb, sampledTruth(qb, eAll, k))
       })
     val graph = patched.unionByName(newFwd)
       .select(col("vec_id"), col("nbr_id"))
-    def side(newNodes: Boolean, variant: String): DataFrame = {
-      val pred =
-        if (newNodes) col("vec_id") % 50 === 49
-        else col("vec_id") % 50 === 0
-      val nQ = q.filter(
-          if (newNodes) col("vec_id") % 50 === 49
-          else col("vec_id") % 50 === 0)
+    // node class = vec_id % 50: 0 for old nodes, 49 for new ones
+    def side(residue: Int, variant: String): DataFrame = {
+      val inClass = col("vec_id") % 50 === residue
+      val nQ = q.filter(inClass)
         .select(countDistinct(col("vec_id")).as("n_queries"))
-      truth.filter(pred)
-        .join(graph, Seq("vec_id", "nbr_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nQ))
-        .select(lit(variant).as("variant"), col("n_queries"),
-          col("n_hits"),
-          // empty node class (possible on tiny fixtures) → recall 0,
-          // not an ANSI divide-by-zero
-          when(col("n_queries") > 0L,
-            col("n_hits").cast("double") /
-              (col("n_queries") * k).cast("double"))
-            .otherwise(lit(0.0d)).as("recall"))
+      sampledRecall(truth.filter(inClass), graph, nQ, k)
+        .select(lit(variant).as("variant"), col("*"))
     }
-    side(newNodes = false, "old_nodes")
-      .unionByName(side(newNodes = true, "new_nodes"))
+    side(0, "old_nodes").unionByName(side(49, "new_nodes"))
   }
 
   /** Per-label mean embedding (class centroids / cluster prototypes) in
@@ -2789,29 +2642,19 @@ object Similarity {
     */
   def truncatedRecall(embeddings: DataFrame, nQueries: Int, k: Int,
                       dims: Int = 16): DataFrame = {
-    val exact = knnBrute(embeddings, nQueries, k)
-      .select(col("q_id"), col("nbr_id"))
     val te = prepared(embeddings)
       .select(col("vec_id"), slice(col("v"), 1, dims).as("v"))
       .withColumn("nrm", sqrt(Canon.dot(col("v"), col("v"))))
     val q = te.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("_q"), col("v").as("qv"),
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
-    val scored = te.join(broadcast(q), col("vec_id") =!= col("_q"))
-      .select(col("_q"), col("vec_id").as("_n"),
+    val scored = te.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("nbr_id"),
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("_q"))
-      .orderBy(col("sim").desc, col("_n").asc)
-    val approx = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("_q"), col("_n"))
-    exact.join(approx,
-      col("q_id") === col("_q") && col("nbr_id") === col("_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k_exact"), count(col("_n")).as("n_hit"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k_exact")).as("recall"))
+    recallVsExact(knnBrute(embeddings, nQueries, k),
+      topK(scored, k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc),
+      Seq("q_id"))
   }
 
   /** MMR-diversified top-k retrieval (Carbonell & Goldstein 1998) —
@@ -2846,10 +2689,8 @@ object Similarity {
         Canon.cosine(Canon.dot(col("qv"), col("v")),
           col("qnrm"), col("nrm")).as("rel"),
         col("v").as("cv"), col("nrm").as("cnrm"))
-    val wRel = Window.partitionBy(col("q_id"))
-      .orderBy(col("rel").desc, col("nbr_id").asc)
-    val short = scored.withColumn("rank", row_number().over(wRel))
-      .filter(col("rank") <= kCand).materialized
+    val short = topK(scored, kCand, "rank")(col("q_id"))(
+      col("rel").desc, col("nbr_id").asc).materialized
     // candidate-candidate sims: ≤ kCand² rows per query, never corpus²
     val lhs = short.select(col("q_id"), col("nbr_id").as("ca"),
       col("cv").as("va"), col("cnrm").as("na"))
@@ -3107,19 +2948,15 @@ object Similarity {
     * cosines against the query set, per-query top-k with ranks.
     */
   private def rerankExact(f: DataFrame, e: DataFrame, q: DataFrame,
-                          k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
-    f.select(col("q_id"), col("cand_id"))
-      .join(e.select(col("vec_id").as("cand_id"), col("v"), col("nrm")),
-        "cand_id")
-      .join(q, "q_id")
-      .select(col("q_id"), col("cand_id").as("nbr_id"),
-        Canon.cosine(Canon.dot(col("qv"), col("v")),
-          col("qnrm"), col("nrm")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                          k: Int): DataFrame =
+    topK(f.select(col("q_id"), col("cand_id"))
+        .join(e.select(col("vec_id").as("cand_id"), col("v"), col("nrm")),
+          "cand_id")
+        .join(q, "q_id")
+        .select(col("q_id"), col("cand_id").as("nbr_id"),
+          Canon.cosine(Canon.dot(col("qv"), col("v")),
+            col("qnrm"), col("nrm")).as("sim")),
+      k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
 
   /** DiskANN-style PQ-scored graph search (s44): the s33 beam walk
     * with ADC scoring + exact re-rank of the final frontier — see
@@ -3148,8 +2985,6 @@ object Similarity {
                         descentRounds: Int = 4, m: Int = 8,
                         nCodes: Int = 16, dim: Int = 64): DataFrame = {
     val e = prepared(embeddings).materialized
-    val wT = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("nbr_id").asc)
     // PQ chain and truth pass overlapped (r21, guide §2.6); the truth
     // branch derives the query rows from the shared pinned `e` with
     // the same % 50 filter — identical rows to the chain's q, the
@@ -3157,35 +2992,16 @@ object Similarity {
     val ((fpq, gsym, q), truth) = Par.concurrently(
       pqBeamChainOn(embeddings, e, beam, rounds, graphK,
         descentRounds, m, nCodes, dim),
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("v"), col("nrm")).as("a")
-        .join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"),
-          col("b.vec_id").as("nbr_id"),
-          Canon.cosine(Canon.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm")).as("sim"))
-        .withColumn("rank", row_number().over(wT))
-        .filter(col("rank") <= k)
-        .select(col("vec_id"), col("nbr_id")).materialized)
+      sampledTruth(e.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id"), col("v"), col("nrm")), e, k))
     val (_, fex) = beamWalk(e, gsym, q, beam, rounds)
     val nQ = q.select(countDistinct(col("q_id")).as("n_queries"))
-    def hits(topk: DataFrame, variant: String): DataFrame =
-      truth.join(topk
-          .select(col("q_id").as("vec_id"), col("nbr_id")),
-          Seq("vec_id", "nbr_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nQ))
-        .select(lit(variant).as("variant"), col("n_queries"),
-          col("n_hits"),
-          (col("n_hits").cast("double") /
-            (col("n_queries") * k).cast("double")).as("recall"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    val exTop = fex.withColumn("_rk", row_number().over(wK))
-      .filter(col("_rk") <= k)
-      .select(col("q_id"), col("cand_id").as("nbr_id"))
-    hits(exTop, "beam")
-      .unionByName(hits(rerankExact(fpq, e, q, k), "pq_beam"))
+    def hits(found: DataFrame, variant: String): DataFrame =
+      sampledRecall(truth, found, nQ, k)
+        .select(lit(variant).as("variant"), col("*"))
+    hits(frontierPairs(fex, k), "beam")
+      .unionByName(hits(rerankExact(fpq, e, q, k)
+        .select(col("q_id").as("vec_id"), col("nbr_id")), "pq_beam"))
   }
 }
 

@@ -189,11 +189,8 @@ object TextAnalysis {
       .select(col("doc_id"), col("word"),
         (col("tf") * (col("n_docs") + lit(1.0d)) / (col("df") + lit(1.0d)))
           .as("tfidf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("word").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topK(scored, k, "rank")(col("doc_id"))(
+      col("tfidf").desc, col("word").asc)
   }
 
   /** Repetition / boilerplate signals (the Gopher-/C4-style quality
@@ -269,11 +266,8 @@ object TextAnalysis {
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
     val counted = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n"))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("w1"))
-      .orderBy(col("n").desc, col("w2").asc)
-    counted.withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
+    Similarity.topK(counted, k, "rank")(col("w1"))(
+      col("n").desc, col("w2").asc)
   }
 
   /** PII patterns shared with the oracle generator: (name, regex,
@@ -411,13 +405,9 @@ object TextAnalysis {
           " i -> struct(w[i] as w1, w[i+1] as w2))")).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
       .materialized
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("w1"))
-      .orderBy(col("n").desc, col("w2").asc)
-    val lm = pairs.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("_rk", row_number().over(win))
-      .filter(col("_rk") <= k)
+    val lm = Similarity.topK(pairs.groupBy(col("w1"), col("w2"))
+        .agg(count(lit(1)).as("n")), k, "_rk")(col("w1"))(
+        col("n").desc, col("w2").asc)
       .select(col("w1"), col("w2"), lit(1).as("_in"))
     pairs.join(lm, Seq("w1", "w2"), "left")
       .groupBy(col("doc_id"))

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Sink boundary (SURVEY.md §2.1 S5-S7, §2.8 F8): the engine-internal
@@ -14,28 +14,18 @@ import org.apache.spark.sql.functions._
   * follower.py:194-198) from plain nullable columns — the N4
   * semantics bridge called out in SURVEY §7.4(3).
   *
-  * A real ArangoDB connector would replace the parquet/json writers
-  * behind the same three verbs; idempotency never depends on the
-  * store: content-hash keys + in-batch dedup (+ the follower's
-  * overwrite-by-epoch-partition) give insert-ignore semantics on any
-  * sink.
+  * The follower's own commit (in-batch `_key` dedup, then overwrite
+  * of the epoch partition) is the insert-ignore sink; this object
+  * holds the document shape and the ArangoDB importBulk wire verb a
+  * real store would receive. Idempotency never depends on the store:
+  * content-hash keys + in-batch dedup + overwrite-by-epoch-partition
+  * give insert-ignore semantics on any sink.
   */
 object GraphSink {
 
   /** Typed rows → one JSON document string per row (F8). */
   def toDocuments(df: DataFrame): DataFrame =
     df.select(to_json(struct(df.columns.map(col): _*)).as("doc"))
-
-  /** S5: bulk insert-ignore — dedup on the content key inside the
-    * batch, then append. The reference's onDuplicate="ignore" across
-    * batches is HeliumStreamFollower's overwrite-by-batch-partition.
-    */
-  def insertIgnore(df: DataFrame, path: String): Unit =
-    df.dropDuplicates("_key").write.mode(SaveMode.Append).parquet(path)
-
-  /** S6: full dimension snapshot replace. */
-  def replaceSnapshot(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** The ArangoDB bulk-import request path the reference's sink hits
     * (follower.py:205-207 via pyArango importBulk): one POST per
@@ -44,10 +34,9 @@ object GraphSink {
     * exists, which with content-hash keys is exactly the engine's
     * idempotency contract (T5).
     */
-  def importBulkPath(database: String, collection: String,
-                     onDuplicate: String = "ignore"): String =
+  def importBulkPath(database: String, collection: String): String =
     s"/_db/$database/_api/import?collection=$collection" +
-      s"&type=list&onDuplicate=$onDuplicate"
+      "&type=list&onDuplicate=ignore"
 
   /** importBulk JSON-array bodies, one per ≤`batchSize` documents,
     * built EXECUTOR-side (each task groups its own partition's rows —
@@ -89,10 +78,9 @@ object GraphSink {
     * race-free because every document carries its content-hash _key).
     */
   def importBulkPost(df: DataFrame, target: ImportTarget,
-                     collection: String,
-                     onDuplicate: String = "ignore"): Unit = {
+                     collection: String): Unit = {
     val url = target.baseUrl.stripSuffix("/") +
-      importBulkPath(target.database, collection, onDuplicate)
+      importBulkPath(target.database, collection)
     val post = target.post
     importBulkBodies(df, target.batchSize)
       .foreachPartition { it: Iterator[String] =>

@@ -647,11 +647,8 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"),
         col("event_type"), col("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"))
-      .orderBy(col("n").desc, col("event_type").asc)
-    counts.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    graft.operators.Similarity.topK(counts, k, "rank")(col("window_start"))(
+      col("n").desc, col("event_type").asc)
   }
 
   /** One bucketed event for the windowed top-k pair (st15). */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.HeliumGraph
 import graft.sinks.GraphSink
 import graft.sources.HeliumFixtures
@@ -19,14 +17,6 @@ class GraphSinkSpec extends SparkSpec {
     assert(withReceipt.contains("\"processing_time_s\":0.25"))
     assert(!noReceipt.contains("tx_power")) // absent, not null
     assert(!noReceipt.contains("processing_time_s"))
-  }
-
-  test("S5: insert-ignore dedups on the content key within the batch") {
-    val out = Files.createTempDirectory("sink").toString + "/edges"
-    val edges = HeliumGraph.paymentV1Edges(
-      HeliumFixtures.txnEnvelopes(spark)) // 3 rows, 2 distinct keys
-    GraphSink.insertIgnore(edges, out)
-    assert(spark.read.parquet(out).count() === 2)
   }
 
   test("importBulk: request path + golden byte-shape of the body") {
@@ -51,15 +41,5 @@ class GraphSinkSpec extends SparkSpec {
     val bodies = GraphSink.importBulkBodies(df, batchSize = 3).collect()
     assert(bodies.length === 3) // 3 + 3 + 1
     assert(bodies.map(b => b.count(_ == '{')).toSeq === Seq(3, 3, 1))
-  }
-
-  test("S6: snapshot replace overwrites, not appends") {
-    val out = Files.createTempDirectory("sink").toString + "/dim"
-    val inv = graft.sources.Inventory.processInventory(
-      graft.sources.Inventory.readCsv(spark,
-        HeliumFixtures.inventoryCsv.toDS()))
-    GraphSink.replaceSnapshot(inv, out)
-    GraphSink.replaceSnapshot(inv, out)
-    assert(spark.read.parquet(out).count() === 3)
   }
 }

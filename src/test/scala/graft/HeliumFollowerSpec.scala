@@ -66,6 +66,32 @@ class HeliumFollowerSpec extends SparkSpec {
     }
   }
 
+  test("S5: a block listing tx1 twice commits each payment key once") {
+    // block 100 lists tx1 twice, as the fixture envelopes carry it, so
+    // the epoch holds 3 payment_v1 rows with 2 content keys; the commit
+    // must keep one row per key (insert-ignore within the batch)
+    val dupListing = Map(100L ->
+      ("""{"hash":"bh100","height":100,"prev_hash":"bh99",""" +
+        """"time":1700000000,"transactions":[""" +
+        """{"hash":"tx1","type":"payment_v1"},""" +
+        """{"hash":"tx1","type":"payment_v1"},""" +
+        """{"hash":"tx2","type":"payment_v1"}]}"""))
+    StubNode.withServer(extraBlocks = dupListing) { endpoint =>
+      val dir = Files.createTempDirectory("hfollowdup").toString
+      val q = drain(endpoint, dir, 0L)
+      val env = envelopes(spark, 99L, 102L)
+      // the stream read every envelope row, the duplicate included
+      assert(q.recentProgress.map(_.numInputRows).sum === env.count())
+      val v1 = graft.operators.HeliumGraph.paymentV1Edges(env)
+      assert(v1.count() === 3 && v1.dropDuplicates("_key").count() === 2)
+      val payments = committed(spark, s"$dir/sink", "payments")
+      assert(payments === rows(collection(env, "payments")))
+      assert(payments.size === 5)
+      assert(spark.read.parquet(s"$dir/sink/payments")
+        .filter("hash = 'tx1'").count() === 1)
+    }
+  }
+
   test("maxHeightsPerTrigger forces multi-batch backfill, same tables") {
     StubNode.withServer() { endpoint =>
       def backfill(cap: Long) = {

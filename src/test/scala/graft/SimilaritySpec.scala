@@ -1104,4 +1104,77 @@ class SimilaritySpec extends SparkSpec {
     assert(got === Set((1L, 10L, 0.9), (1L, 11L, 0.9), (1L, 12L, 0.5),
       (2L, 22L, 0.7), (2L, 20L, 0.0), (2L, 21L, -0.5)))
   }
+
+  test("topK equals a reference row_number window filter, with score " +
+    "ties broken on id and k past the group size") {
+    import org.apache.spark.sql.expressions.Window
+    val scored = Seq(
+      (1L, 12L, 0.5), (1L, 10L, 0.9), (1L, 11L, 0.9), (1L, 13L, 0.5),
+      (1L, 14L, 0.1), (2L, 21L, 0.7), (2L, 20L, 0.7)
+    ).toDF("q_id", "nbr_id", "sim")
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc, col("nbr_id").asc)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double, Int)].collect().toSet
+    for (k <- Seq(1, 3, 10)) {
+      val got = Similarity.topK(scored, k, "rk")(col("q_id"))(
+        col("sim").desc, col("nbr_id").asc)
+      val want = scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+      assert(got.schema === want.schema)
+      assert(rows(got) === rows(want), s"k=$k")
+    }
+    val top3 = rows(Similarity.topK(scored, 3, "rk")(col("q_id"))(
+      col("sim").desc, col("nbr_id").asc))
+    // the 0.9 tie ranks 10 before 11, the 0.5 tie keeps 12 over 13
+    assert(top3.filter(_._1 == 1L).map(r => r._2 -> r._4) ===
+      Set(10L -> 1, 11L -> 2, 12L -> 3))
+    // a group smaller than k is kept whole
+    assert(top3.filter(_._1 == 2L).map(r => r._2 -> r._4) ===
+      Set(20L -> 1, 21L -> 2))
+  }
+
+  test("recallVsExact: zero-hit query, query with fewer than k exact " +
+    "rows, and a two-value curve grouping") {
+    // q1 has 3 exact pairs, q2 has 2 and none found, q3 has only 1
+    val exact = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 20L), (2L, 21L),
+      (3L, 30L)).toDF("q_id", "nbr_id")
+    val approx = Seq((1L, 10L, 0.9), (1L, 12L, 0.8), (1L, 99L, 0.7),
+      (2L, 22L, 0.9), (2L, 23L, 0.8), (3L, 30L, 0.9))
+      .toDF("q_id", "nbr_id", "sim")
+    val perQ = Similarity.recallVsExact(exact, approx, Seq("q_id"))
+    assert(perQ.columns.toSeq === Seq("q_id", "n_hit", "recall"))
+    assert(perQ.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq ===
+      Seq((1L, 2L, 2.0 / 3), (2L, 0L, 0.0), (3L, 1L, 1.0)))
+    // curve: every exact pair at both budgets, pooled per budget
+    val exactTh = exact.crossJoin(Seq(1, 2).toDF("n_probe"))
+    val approxTh = Seq((1, 1L, 10L), (2, 1L, 10L), (2, 1L, 12L),
+      (2, 2L, 20L), (2, 3L, 30L)).toDF("n_probe", "q_id", "nbr_id")
+    val curve = Similarity.recallVsExact(exactTh, approxTh, Seq("n_probe"))
+    assert(curve.columns.toSeq === Seq("n_probe", "n_hit", "recall"))
+    assert(curve.as[(Int, Long, Double)].collect().sortBy(_._1).toSeq ===
+      Seq((1, 1L, 1.0 / 6), (2, 4L, 4.0 / 6)))
+  }
+
+  test("sampledRecall: an empty node class reads 0.0, not an ANSI " +
+    "divide-by-zero") {
+    val truth = Seq((0L, 1L), (0L, 2L), (50L, 3L), (50L, 4L))
+      .toDF("vec_id", "nbr_id")
+    val found = Seq((0L, 1L), (50L, 3L), (50L, 4L), (7L, 8L))
+      .toDF("vec_id", "nbr_id")
+    def nQ(ids: Seq[Long]) = ids.toDF("vec_id")
+      .select(countDistinct(col("vec_id")).as("n_queries"))
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val empty = Similarity.sampledRecall(
+        truth.filter(col("vec_id") === 49L), found, nQ(Nil), 2)
+      assert(empty.columns.toSeq === Seq("n_queries", "n_hits", "recall"))
+      assert(empty.as[(Long, Long, Double)].collect().toSeq ===
+        Seq((0L, 0L, 0.0)))
+      val both = Similarity.sampledRecall(truth, found, nQ(Seq(0L, 50L)), 2)
+      assert(both.as[(Long, Long, Double)].collect().toSeq ===
+        Seq((2L, 3L, 0.75)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
 }
