@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 import graft.sources.HeliumSchemas
 
@@ -19,10 +20,12 @@ import graft.sources.HeliumSchemas
   *     processes ONLY the first path element; preserved deliberately
   *   - P2/P3/P4 projections, F1 concat keys, F5 content-hash _key
   *
-  * Scale: every transform is a map-side projection/generate — the only
-  * shuffle in the whole slice is accountVertices' distinct. At 100 TB
+  * Scale: every edge transform is a map-side projection/generate, one
+  * pass per collection (both payment types parse and explode together);
+  * only the batch API's accountVertices ends in a distinct. At 100 TB
   * the per-block loop becomes per-epoch height ranges of the block
-  * stream (graft.streaming.HeliumStreamFollower) with these same plans.
+  * stream (graft.streaming.HeliumStreamFollower), which runs these same
+  * plans and dedups within each envelope partition (no shuffle).
   */
 object HeliumGraph {
 
@@ -42,30 +45,48 @@ object HeliumGraph {
       .select(col("height"), col("time"),
         col("txn.hash").as("hash"), col("txn.type").as("type"))
 
-  /** payment_v1 → edge docs (follower.py:145-158). Drops fee/nonce. */
-  def paymentV1Edges(envelopes: DataFrame): DataFrame = {
-    val p = envelopes.filter(col("type") === "payment_v1")
-      .select(col("block"), col("block_time"),
-        from_json(col("payload"), HeliumSchemas.paymentV1).as("t"))
-      .select(col("block"), col("block_time"),
-        col("t.hash").as("hash"), col("t.amount").as("amount"),
-        col("t.payer").as("payer"), col("t.payee").as("payee"))
-    edgeProjection(p)
-  }
+  /** One parse schema for both payment versions: payment_v1's fields
+    * plus payment_v2's `payments` legs (memo dropped: no document
+    * carries it). A payload of either type parses under it; the fields
+    * of the other type come back null.
+    */
+  private val paymentPayload: StructType = StructType(
+    HeliumSchemas.paymentV1.fields :+ StructField("payments",
+      ArrayType(StructType(
+        HeliumSchemas.paymentV2Payment.filterNot(_.name == "memo")))))
 
-  /** payment_v2 → one edge per inner payment (N1, follower.py:160-176). */
-  def paymentV2Edges(envelopes: DataFrame): DataFrame = {
-    val p = envelopes.filter(col("type") === "payment_v2")
-      .select(col("block"), col("block_time"),
-        from_json(col("payload"), HeliumSchemas.paymentV2).as("t"))
-      .select(col("block"), col("block_time"),
-        col("t.hash").as("hash"), col("t.payer").as("payer"),
-        explode(col("t.payments")).as("p"))
+  /** Both payment types' envelopes, parsed once into `t`. */
+  private def payments(envelopes: DataFrame): DataFrame =
+    envelopes.filter(col("type").isin("payment_v1", "payment_v2"))
+      .select(col("block"), col("block_time"), col("type"),
+        from_json(col("payload"), paymentPayload).as("t"))
+
+  /** A payment's legs as one list: a payment_v1 is a one-leg payment,
+    * a payment_v2 lists its own (N1, follower.py:163).
+    */
+  private val legs: Column =
+    when(col("type") === "payment_v1",
+      array(struct(col("t.amount").as("amount"), col("t.payee").as("payee"))))
+      .otherwise(col("t.payments"))
+
+  /** payment_v1 and payment_v2 → edge docs in one pass: one edge per
+    * leg (follower.py:145-176). Drops fee/nonce/memo.
+    */
+  def paymentEdges(envelopes: DataFrame): DataFrame =
+    edgeProjection(payments(envelopes)
+      .select(col("block"), col("block_time"), col("t.hash").as("hash"),
+        col("t.payer").as("payer"), explode(legs).as("p"))
       .select(col("block"), col("block_time"), col("hash"),
         col("p.amount").as("amount"), col("payer"),
-        col("p.payee").as("payee"))
-    edgeProjection(p)
-  }
+        col("p.payee").as("payee")))
+
+  /** payment_v1 → edge docs (follower.py:145-158). */
+  def paymentV1Edges(envelopes: DataFrame): DataFrame =
+    paymentEdges(envelopes.filter(col("type") === "payment_v1"))
+
+  /** payment_v2 → one edge per inner payment (N1, follower.py:160-176). */
+  def paymentV2Edges(envelopes: DataFrame): DataFrame =
+    paymentEdges(envelopes.filter(col("type") === "payment_v2"))
 
   /** Shared payment-edge projection (P2/F1/F5): memo/fee/nonce dropped,
     * timestamp = block time in unix seconds.
@@ -216,19 +237,18 @@ object HeliumGraph {
         col("t.cp_total").as("top_total"))
   }
 
+  /** P4/U1: one `_key` row per account mention — each payment's payer
+    * plus every payee of its legs, repeats kept. A payment_v2 with no
+    * legs still names its payer.
+    */
+  private[graft] def accountMentions(envelopes: DataFrame): DataFrame =
+    payments(envelopes).select(explode(concat(array(col("t.payer")),
+      coalesce(legs.getField("payee"), array().cast("array<string>"))))
+      .as("_key"))
+
   /** P4/U1/A3: bare account vertices from both payment families —
     * payer ∪ payee, sink-side insert-ignore becomes distinct.
     */
-  def accountVertices(envelopes: DataFrame): DataFrame = {
-    def parsed(tpe: String, schema: org.apache.spark.sql.types.StructType) =
-      envelopes.filter(col("type") === tpe)
-        .select(from_json(col("payload"), schema).as("t"))
-    val v1 = parsed("payment_v1", HeliumSchemas.paymentV1)
-    val v2 = parsed("payment_v2", HeliumSchemas.paymentV2)
-    v1.select(col("t.payer").as("addr"))
-      .union(v1.select(col("t.payee").as("addr")))
-      .union(v2.select(col("t.payer").as("addr")))
-      .union(v2.select(explode(col("t.payments.payee")).as("addr")))
-      .select(col("addr").as("_key")).distinct()
-  }
+  def accountVertices(envelopes: DataFrame): DataFrame =
+    accountMentions(envelopes).distinct()
 }

@@ -14,12 +14,13 @@ import org.apache.spark.sql.functions._
   * follower.py:194-198) from plain nullable columns — the N4
   * semantics bridge called out in SURVEY §7.4(3).
   *
-  * The follower's own commit (in-batch `_key` dedup, then overwrite
-  * of the epoch partition) is the insert-ignore sink; this object
-  * holds the document shape and the ArangoDB importBulk wire verb a
-  * real store would receive. Idempotency never depends on the store:
-  * content-hash keys + in-batch dedup + overwrite-by-epoch-partition
-  * give insert-ignore semantics on any sink.
+  * The follower's own commit (first row per `_key` within each
+  * envelope partition, then overwrite of the epoch partition) is the
+  * insert-ignore sink; this object holds the document shape and the
+  * ArangoDB importBulk wire verb a real store would receive.
+  * Idempotency never depends on the store: content-hash keys +
+  * partition-local dedup + overwrite-by-epoch-partition give
+  * insert-ignore semantics on any sink.
   */
 object GraphSink {
 

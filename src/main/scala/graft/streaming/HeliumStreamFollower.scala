@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Par
@@ -43,19 +43,25 @@ import graft.sources.HeliumBlockStreamProvider
   * keeps the reference's insert-ignore collapse deferred to read (the
   * A3 distinct view).
   *
+  * In-epoch dedup moves no data: a content `_key` hashes its block, and
+  * every envelope partition holds whole heights, so two rows with one
+  * key always share a partition and [[keepFirstPerKey]] drops the
+  * repeat where it sits (DECISIONS DR-7). An epoch runs no shuffle.
+  *
   * Per epoch, where the reference bulk-loads its three collections one
   * after another (follower.py:205-207), [[commitBatch]] runs the three
   * write-then-import legs concurrently and its housekeeping strictly
-  * after all three. The source still runs ONCE per epoch: every leg
-  * reads one persisted envelope, and the block manager's per-block
-  * lock lets only one task compute each cached partition. The import
-  * read-back uses the schema each leg wrote.
+  * after all three. Each block and transaction is still fetched once
+  * per epoch: every leg reads one persisted envelope, and the block
+  * manager's per-block lock lets only one task compute each cached
+  * partition. The import read-back uses the schema each leg wrote.
   */
 object HeliumStreamFollower {
 
   /** One epoch's transform + commit — the follower.py:145-207 body
     * over an envelope micro-batch: the three collections, each
-    * content-keyed, in-batch deduped, and committed by overwriting the
+    * content-keyed, deduped within its envelope partition
+    * ([[keepFirstPerKey]]), and committed by overwriting the
     * epoch's `batch=hi` partition (idempotent under epoch replay);
     * `hi` is the epoch's committed offset end ([[epochEndHeight]]).
     *
@@ -95,13 +101,14 @@ object HeliumStreamFollower {
       receiptRetentionBlocks: Option[Long],
       inventoryHeight: () => Option[Long],
       onInventoryRefresh: () => Unit, inventoryLag: Long): Unit = {
-    // ONE source evaluation per epoch: the transforms read the
-    // envelope four ways (two payment variants, receipts, accounts),
+    // Each block fetched once per epoch: three legs read the envelope,
     // and an un-persisted micro-batch re-runs its partition readers
     // per action — i.e. refetches every block over HTTP and burns the
-    // per-task retry budget three extra times. The legs below read the
-    // cache concurrently: a task that finds a cached partition being
+    // per-task retry budget twice more. The legs below read the cache
+    // concurrently: a task that finds a cached partition being
     // computed by another waits on its block lock, then reads the copy.
+    // With no shuffle in a leg, the first task to reach a partition
+    // fills it; no separate fill job runs.
     //
     // Raw `persist()` here, NOT the Materialize seam used by the batch
     // operators: the seam exists to TRUNCATE LINEAGE under iteration
@@ -126,12 +133,11 @@ object HeliumStreamFollower {
       }
       // returns only once all three legs have finished
       Par.concurrently3(
-        leg(HeliumGraph.paymentV1Edges(cached)
-          .unionByName(HeliumGraph.paymentV2Edges(cached))
-          .dropDuplicates("_key"), "payments"),
-        leg(HeliumGraph.receiptEdges(cached).dropDuplicates("_key"),
+        leg(keepFirstPerKey(HeliumGraph.paymentEdges(cached)), "payments"),
+        leg(keepFirstPerKey(HeliumGraph.receiptEdges(cached)),
           "poc_receipts"),
-        leg(HeliumGraph.accountVertices(cached), "accounts"))
+        leg(keepFirstPerKey(HeliumGraph.accountMentions(cached)),
+          "accounts"))
       // reference loop housekeeping, strictly after all three legs:
       // receipt retention partition drop (T7, follower.py:210-214) and
       // the inventory-lag refresh trigger (T6, follower.py:61-62)
@@ -141,6 +147,23 @@ object HeliumStreamFollower {
       if (shouldRefreshInventory(hi, inventoryHeight(), inventoryLag))
         onInventoryRefresh()
     } finally { cached.unpersist(); () } // after every leg has ended
+  }
+
+  /** The epoch's insert-ignore (follower.py:205-207): the first row per
+    * `_key`, kept within each partition, in order. Exact with no
+    * shuffle while two invariants hold (DECISIONS DR-7): every edge
+    * `_key` hashes its `block` (HeliumGraphSpec), and the source gives
+    * each partition whole, contiguous heights (HeliumBlockStreamSpec).
+    * Account `_key`s repeat across partitions; the A3 distinct view
+    * collapses them at read. The key set holds one partition's keys,
+    * which the admission cap bounds.
+    */
+  private[streaming] def keepFirstPerKey(df: DataFrame): DataFrame = {
+    val k = df.schema.fieldIndex("_key")
+    df.mapPartitions { rows =>
+      val seen = new java.util.HashSet[String]
+      rows.filter(r => seen.add(r.getString(k)))
+    }(Encoders.row(df.schema))
   }
 
   /** T7 partition drop on a batch=N-partitioned directory: removes

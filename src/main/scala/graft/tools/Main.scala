@@ -98,15 +98,31 @@ object Main {
 
   private def badUsage(): Int = { println(usage); 2 }
 
+  private val lambdaId = """\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""".r
+  private val exprId = """#(\d+)""".r
+
+  /** A plan text that is the same wherever and whenever it is planned.
+    * A typed-Dataset lambda prints as its class and object id
+    * (`…$$Lambda$6848/0x00007f8abe00d8d8@4383d762`); only the `$$Lambda`
+    * stem is kept. exprIds come from a JVM-wide counter; they are
+    * renumbered 1, 2, … in order of first appearance, so references
+    * between operators still read the same.
+    */
+  private def stable(plan: String): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    exprId.replaceAllIn(lambdaId.replaceAllIn(plan, "\\$\\$Lambda"),
+      m => "#" + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+  }
+
   /** Static formatted plan (AQE not final: reproducible without running
-    * the query; exchanges, join strategies and PushedFilters all show)
-    * → `<outDir>/<name>_<suffix>.txt`.
+    * the query; exchanges, join strategies and PushedFilters all show),
+    * made [[stable]] → `<outDir>/<name>_<suffix>.txt`.
     */
   private def write(outDir: String, name: String, suffix: String,
                     df: DataFrame): Unit = {
     val out = Files.createDirectories(Paths.get(outDir))
       .resolve(s"${name}_$suffix.txt")
-    val txt = df.queryExecution.explainString(FormattedMode)
+    val txt = stable(df.queryExecution.explainString(FormattedMode))
     Files.writeString(out, txt)
     println(s"wrote $out (${txt.length} chars)")
   }

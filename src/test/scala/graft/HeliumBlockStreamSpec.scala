@@ -375,4 +375,95 @@ class HeliumBlockStreamSpec extends SparkSpec {
       intercept[UnsupportedOperationException](stream.latestOffset())
     }
   }
+
+  test("planInputPartitions gives each task whole, contiguous heights: " +
+    "disjoint slices that cover (lo, hi]") {
+    // the partition-local dedup's second invariant (DECISIONS DR-7):
+    // no height is split across two partitions
+    for ((n, parts) <- Seq((1L, 1), (1L, 4), (3L, 2), (3L, 3), (3L, 8),
+        (10L, 4), (10L, 3), (500L, 4), (7L, 7))) {
+      val lo = 99L
+      val stream = new HeliumBlockMicroBatchStream("http://127.0.0.1:1/",
+        startHeight = lo, maxHeightsPerTrigger = 0L,
+        numPartitions = parts, maxRetries = 0, sleepMs = 0L)
+      val slices = stream.planInputPartitions(HeightOffset(lo),
+        HeightOffset(lo + n)).toSeq.map(
+        _.asInstanceOf[graft.sources.HeliumBlockInputPartition])
+      val what = s"(n=$n, numPartitions=$parts)"
+      assert(slices.size === math.min(n, parts.toLong), what)
+      assert(slices.forall(p => p.toInclusive > p.fromExclusive), what)
+      assert(slices.head.fromExclusive === lo, what)
+      assert(slices.last.toInclusive === lo + n, what)
+      slices.zip(slices.tail).foreach { case (a, b) =>
+        assert(a.toInclusive === b.fromExclusive, what)
+      }
+      val heights = slices.flatMap(p => (p.fromExclusive + 1) to p.toInclusive)
+      assert(heights === ((lo + 1) to (lo + n)), what)
+    }
+    val empty = new HeliumBlockMicroBatchStream("http://127.0.0.1:1/",
+      startHeight = 99L, maxHeightsPerTrigger = 0L, numPartitions = 4,
+      maxRetries = 0, sleepMs = 0L)
+    assert(empty.planInputPartitions(HeightOffset(99L), HeightOffset(99L))
+      .isEmpty)
+  }
+
+  test("job floor: a one-height epoch runs at most 6 jobs and writes " +
+    "no shuffle bytes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
+    // (job group, streaming batch id, stage ids) per job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, Seq[Int])]
+    val shuffleBytes =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("<none>")
+        jobs.add((prop("spark.jobGroup.id"), prop("streaming.sql.batchId"),
+          e.stageIds))
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        shuffleBytes.put(e.stageInfo.stageId, Option(e.stageInfo.taskMetrics)
+          .fold(0L)(_.shuffleWriteMetrics.bytesWritten))
+    }
+    StubNode.withServer() { endpoint =>
+      val dir = Files.createTempDirectory("hsf-floor").toString
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      val marker = "hsf-floor-drained"
+      try {
+        val q = HeliumStreamFollower.start(spark, endpoint,
+          s"$dir/sink", s"$dir/ckpt", startHeight = 99L,
+          maxHeightsPerTrigger = 1L, numPartitions = 2,
+          maxRetries = 2, sleepMs = 0L,
+          importTarget = Some(
+            graft.sinks.GraphSink.ImportTarget(endpoint, "helium")))
+        val runId =
+          try { q.processAllAvailable(); q.runId.toString }
+          finally q.stop()
+        val dataBatches = q.recentProgress.filter(_.numInputRows > 0)
+          .map(_.batchId.toString).toSeq
+        assert(dataBatches.size === 3)
+        // flush the listener bus: once the marker job is seen, every
+        // epoch job and stage before it has been recorded
+        sc.setJobGroup(marker, marker)
+        try spark.range(1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30000000000L
+        while (!jobs.asScala.exists(_._1 == marker) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+        val recorded = jobs.asScala.toSeq
+        for (b <- dataBatches) {
+          val epoch = recorded.filter(j => j._1 == runId && j._2 == b)
+          assert(epoch.nonEmpty, s"no job recorded for epoch $b")
+          assert(epoch.size <= 6,
+            s"epoch $b ran ${epoch.size} jobs, above the floor of 6")
+          val bytes = epoch.flatMap(_._3)
+            .map(id => Option(shuffleBytes.get(id)).fold(0L)(_.longValue)).sum
+          assert(bytes === 0L, s"epoch $b wrote $bytes shuffle bytes")
+        }
+      } finally sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -17,6 +17,7 @@ import graft.streaming.HeliumStreamFollower
   * ([[FixtureReference]]).
   */
 class HeliumFollowerSpec extends SparkSpec {
+  import spark.implicits._
 
   private val collections = Seq("payments", "poc_receipts", "accounts")
 
@@ -211,6 +212,54 @@ class HeliumFollowerSpec extends SparkSpec {
       // ...and overwrote its own partitions: same names, same rows
       assert(state() === before, "replayed epoch must replace, not append")
       assert(before.forall(_._2.nonEmpty))
+    }
+  }
+
+  test("partition-local dedup: a 3-height epoch over 3 partitions " +
+    "commits what a global dropDuplicates commits") {
+    // block 100 lists tx1 twice; block 101 adds a payment_v2 whose two
+    // legs are identical (one content key). One uncapped epoch, one
+    // height per partition: every repeat must be dropped inside the
+    // partition that holds it.
+    val tx7 = """{"hash":"tx7","fee":1,"nonce":4,"payer":"erin",""" +
+      """"payments":[{"amount":9,"memo":"a","payee":"bob"},""" +
+      """{"amount":9,"memo":"b","payee":"bob"},""" +
+      """{"amount":11,"memo":null,"payee":"frank"}]}"""
+    val blocks = Map(
+      100L -> ("""{"hash":"bh100","height":100,"prev_hash":"bh99",""" +
+        """"time":1700000000,"transactions":[""" +
+        """{"hash":"tx1","type":"payment_v1"},""" +
+        """{"hash":"tx1","type":"payment_v1"},""" +
+        """{"hash":"tx2","type":"payment_v1"}]}"""),
+      101L -> ("""{"hash":"bh101","height":101,"prev_hash":"bh100",""" +
+        """"time":1700000060,"transactions":[""" +
+        """{"hash":"tx3","type":"payment_v2"},""" +
+        """{"hash":"tx4","type":"poc_receipts_v1"},""" +
+        """{"hash":"tx7","type":"payment_v2"}]}"""))
+    StubNode.withServer(extraBlocks = blocks,
+        extraPayloads = Map("tx7" -> tx7)) { endpoint =>
+      val dir = Files.createTempDirectory("hfollow-local").toString
+      val q = HeliumStreamFollower.start(spark, endpoint, s"$dir/sink",
+        s"$dir/ckpt", startHeight = 99L, numPartitions = 3,
+        maxRetries = 2, sleepMs = 0L)
+      try q.processAllAvailable() finally q.stop()
+      assert(dataEpochs(q) === 1)
+      val env = envelopes(spark, 99L, 102L).unionByName(
+        Seq((101L, 1700000060L, "tx7", "payment_v2", tx7)).toDF(
+          "block", "block_time", "hash", "type", "payload"))
+      assert(q.recentProgress.map(_.numInputRows).sum === env.count())
+      // the repeats really are there: 2 tx1 rows, 2 equal tx7 legs
+      val edges = graft.operators.HeliumGraph.paymentEdges(env)
+      assert(edges.count() === 9 &&
+        edges.dropDuplicates("_key").count() === 7)
+      for (c <- Seq("payments", "poc_receipts"))
+        assert(committed(spark, s"$dir/sink", c) === rows(collection(env, c)),
+          s"collection $c differs from the global dropDuplicates")
+      assert(committed(spark, s"$dir/sink", "payments").size === 7)
+      val accounts = accountKeys(spark.read.parquet(s"$dir/sink/accounts"))
+      assert(accounts === accountKeys(collection(env, "accounts")))
+      assert(accounts === Set("alice", "bob", "carol", "dave", "erin",
+        "frank"))
     }
   }
 }

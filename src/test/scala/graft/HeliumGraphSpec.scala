@@ -171,4 +171,44 @@ class HeliumGraphSpec extends SparkSpec {
     assert(keys.map(_.getLong(1)).distinct.length === 2)
     assert(keys.map(_.getString(0)).distinct.length === 2)
   }
+
+  test("one pass: paymentEdges is paymentV1Edges ∪ paymentV2Edges, and " +
+    "the one-explode account keys are the four-branch union's set") {
+    import org.apache.spark.sql.DataFrame
+    import graft.sources.HeliumSchemas
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // the account vertex set as four union branches, one per
+    // (payment type, side) — the shape accountMentions folds into one
+    def fourBranchKeys(e: DataFrame): Set[String] = {
+      def parsed(tpe: String, schema: org.apache.spark.sql.types.StructType) =
+        e.filter(col("type") === tpe)
+          .select(from_json(col("payload"), schema).as("t"))
+      val v1 = parsed("payment_v1", HeliumSchemas.paymentV1)
+      val v2 = parsed("payment_v2", HeliumSchemas.paymentV2)
+      v1.select(col("t.payer")).union(v1.select(col("t.payee")))
+        .union(v2.select(col("t.payer")))
+        .union(v2.select(explode(col("t.payments.payee"))))
+        .as[String].collect().toSet
+    }
+    // a payment_v2 with an empty payments list: no edge, but its payer
+    // is still an account
+    val noLegs = Seq((103L, 1700000180L, "tx8", "payment_v2",
+      """{"hash":"tx8","fee":1,"nonce":3,"payer":"erin","payments":[]}"""))
+      .toDF("block", "block_time", "hash", "type", "payload")
+    for (e <- Seq(env, env.unionByName(noLegs))) {
+      val onePass = HeliumGraph.paymentEdges(e)
+      assert(onePass.columns.toSeq ===
+        HeliumGraph.paymentV1Edges(e).columns.toSeq)
+      assert(rows(onePass) === rows(HeliumGraph.paymentV1Edges(e)
+        .unionByName(HeliumGraph.paymentV2Edges(e))))
+      assert(rows(onePass).size === 6) // tx1 twice, tx2, 3 legs of tx3
+      val mentions = HeliumGraph.accountMentions(e).as[String].collect()
+      assert(mentions.toSet === fourBranchKeys(e))
+      assert(HeliumGraph.accountVertices(e).as[String].collect().sorted
+        .toSeq === mentions.toSet.toSeq.sorted)
+    }
+    assert(HeliumGraph.accountMentions(noLegs).as[String].collect()
+      .toSeq === Seq("erin"))
+  }
 }

@@ -34,4 +34,18 @@ class ToolsSpec extends SparkSpec {
     assert(Files.readString(plan).contains("== Physical Plan =="))
     assert(!spark.sparkContext.isStopped)
   }
+
+  test("explain is byte-stable: a typed-Dataset query explained twice " +
+    "in one JVM writes identical files") {
+    val out = Files.createTempDirectory("tools-explain-twice")
+    for (suffix <- Seq("a", "b")) {
+      val (code, _) = captured(Main.run(spark, "explain",
+        Seq(sf0001, "m02_decode_stub", out.toString, suffix)))
+      assert(code === 0)
+    }
+    val Seq(a, b) = Seq("a", "b").map(x =>
+      Files.readString(out.resolve(s"m02_decode_stub_$x.txt")))
+    assert(a.contains("$$Lambda")) // the typed lambda is still named
+    assert(a === b)
+  }
 }
