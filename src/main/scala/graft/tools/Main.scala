@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -99,20 +101,25 @@ object Main {
   private def badUsage(): Int = { println(usage); 2 }
 
   private val lambdaId = """\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""".r
-  private val exprId = """#(\d+)""".r
+  // JVM-wide counters a plan prints: exprIds, Exchange plan ids, RDD ids
+  private val counters = Seq("""(#)(\d+)""".r, """(plan_id=)(\d+)""".r,
+    """(RDD\[)(\d+)""".r)
 
   /** A plan text that is the same wherever and whenever it is planned.
     * A typed-Dataset lambda prints as its class and object id
     * (`…$$Lambda$6848/0x00007f8abe00d8d8@4383d762`); only the `$$Lambda`
-    * stem is kept. exprIds come from a JVM-wide counter; they are
-    * renumbered 1, 2, … in order of first appearance, so references
-    * between operators still read the same.
+    * stem is kept. exprIds, Exchange `plan_id`s and RDD ids come from
+    * JVM-wide counters; each kind is renumbered 1, 2, … in order of
+    * first appearance, so references between operators still read the
+    * same.
     */
-  private def stable(plan: String): String = {
-    val ids = scala.collection.mutable.Map.empty[String, Int]
-    exprId.replaceAllIn(lambdaId.replaceAllIn(plan, "\\$\\$Lambda"),
-      m => "#" + ids.getOrElseUpdate(m.group(1), ids.size + 1))
-  }
+  private def stable(plan: String): String =
+    counters.foldLeft(lambdaId.replaceAllIn(plan, "\\$\\$Lambda")) {
+      (txt, counter) =>
+        val ids = scala.collection.mutable.Map.empty[String, Int]
+        counter.replaceAllIn(txt, m => Regex.quoteReplacement(
+          m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
 
   /** Static formatted plan (AQE not final: reproducible without running
     * the query; exchanges, join strategies and PushedFilters all show),

@@ -35,17 +35,28 @@ class ToolsSpec extends SparkSpec {
     assert(!spark.sparkContext.isStopped)
   }
 
-  test("explain is byte-stable: a typed-Dataset query explained twice " +
-    "in one JVM writes identical files") {
+  test("explain is byte-stable: typed-Dataset, Exchange-bearing and " +
+    "materialized-input queries explained twice in one JVM write " +
+    "identical files") {
     val out = Files.createTempDirectory("tools-explain-twice")
+    val qs = Seq("m02_decode_stub", "h01_payment_v1_edges",
+      "h04_account_vertices", "h08_account_flow")
     for (suffix <- Seq("a", "b")) {
-      val (code, _) = captured(Main.run(spark, "explain",
-        Seq(sf0001, "m02_decode_stub", out.toString, suffix)))
+      val (code, text) = captured(Main.run(spark, "explain",
+        Seq(sf0001, qs.mkString(","), out.toString, suffix)))
       assert(code === 0)
+      assert(!text.contains("EXPLAIN ERROR"), text)
     }
-    val Seq(a, b) = Seq("a", "b").map(x =>
-      Files.readString(out.resolve(s"m02_decode_stub_$x.txt")))
-    assert(a.contains("$$Lambda")) // the typed lambda is still named
-    assert(a === b)
+    val plans = qs.map { q =>
+      val Seq(a, b) = Seq("a", "b").map(x =>
+        Files.readString(out.resolve(s"${q}_$x.txt")))
+      assert(a === b, q)
+      q -> a
+    }.toMap
+    // what each query brings that a JVM-wide counter would number
+    assert(plans("m02_decode_stub").contains("$$Lambda"))
+    Seq("h01_payment_v1_edges", "h04_account_vertices", "h08_account_flow")
+      .foreach(q => assert(plans(q).contains("[plan_id=1]"), q))
+    assert(plans("h08_account_flow").contains("RDD[1]"))
   }
 }
