@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 object Bench {
   /** Fixture-only calibration queries (they read no sf-scaled
     * testdata — BASELINE.md §3.1): their medians separate machine
@@ -13,49 +17,30 @@ object Bench {
     "h07_witness_graph", "h08_account_flow",
     "q30_null_semantics", "j01_jsonl_docs", "st07_stream_static")
 
-  /** Parse the frozen-anchor medians map out of a baseline file
-    * (writer-controlled format — flat regex read, same stance as
-    * PlanCheck.committedPairs). The anchor is an sf0.1 run, so a
-    * ratio against another SF's wall-clock is noise: off-SF files
-    * disarm the guard entirely (empty map). The medians OBJECT is
-    * sliced by a balanced-brace scan from its opening '{', NOT
-    * medians-to-EOF: BENCH_LOCAL-format files carry host.cpu_mhz
-    * numerics and baseline_ratios keyed by the SAME query names
-    * after the medians map, and a regex-to-EOF read would let later
-    * ratio values overwrite median values (ADVICE r16) — so a
-    * baseline captured verbatim from a committed closing artifact
-    * (BENCH_R17_CLOSING.json and successors) parses correctly.
-    * Throws on a missing medians key; the caller's catch maps any
-    * failure to "no anchor".
+  /** Parse the frozen-anchor medians map out of a baseline file. The
+    * anchor is an sf0.1 run, so a ratio against another SF's
+    * wall-clock is noise: a file whose top-level `sf` is not `sfDir`
+    * disarms the guard entirely (empty map). Only the top-level
+    * `medians` OBJECT is read, and only its numeric values:
+    * BENCH_LOCAL-format files carry host numerics and baseline_ratios
+    * keyed by the SAME query names after it, so a baseline captured
+    * verbatim from a committed closing artifact (BENCH_R17_CLOSING.json
+    * and successors) parses correctly. Throws on a missing or
+    * non-object medians value; the caller's catch maps any failure to
+    * "no anchor".
     */
   private[graft] def parseBaseline(txt: String,
                                    sfDir: String): Map[String, Double] = {
-    val sfOk = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-      .exists(_.group(1) == sfDir)
-    if (!sfOk) Map.empty
+    val root = new ObjectMapper().readTree(txt)
+    val sf = root.path("sf")
+    if (!sf.isTextual || sf.asText != sfDir) Map.empty
     else {
-      // ADVICE r17: anchor the key with a regex through its ':' and
-      // require the value to OPEN with '{' — a bare indexOf('{', mk)
-      // would slice whatever brace follows a "medians" occurrence,
-      // so the literal word inside an earlier free-text source
-      // narrative, or a null/numeric medians value, silently armed
-      // the guard against the WRONG object. Non-object medians now
-      // throw, which the caller already maps to "no anchor".
-      val start = """"medians"\s*:\s*""".r.findAllMatchIn(txt)
-        .map(_.end).find(e => e < txt.length && txt.charAt(e) == '{')
-        .getOrElse(throw new NoSuchElementException(
-          "no medians object (missing key or non-object value)"))
-      var depth = 0
-      var end = start
-      while (end < txt.length && (depth > 0 || end == start)) {
-        if (txt.charAt(end) == '{') depth += 1
-        else if (txt.charAt(end) == '}') depth -= 1
-        end += 1
-      }
-      val sect = txt.substring(start, end)
-      """"([A-Za-z0-9_]+)"\s*:\s*([0-9][0-9.eE+-]*)""".r
-        .findAllMatchIn(sect)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      val medians = root.path("medians")
+      if (!medians.isObject) throw new NoSuchElementException(
+        "no medians object (missing key or non-object value)")
+      medians.properties.asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap
     }
   }
 
@@ -167,9 +152,8 @@ object Bench {
     // Belt and braces for the harness parse: also persist the FULL line
     // (with the complete per-query median map) to a file
     // (BENCH_LOCAL.json or args(0)).
-    // Frozen per-query anchor (flat writer-controlled JSON; the regex
-    // reads only the map after the "medians" key, so the metadata
-    // fields can't contaminate it).
+    // Frozen per-query anchor: only its top-level medians object is
+    // read, so the metadata fields can't contaminate it.
     val baseline: Map[String, Double] = try {
       parseBaseline(Files.readString(Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE",

@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,27 +33,19 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val errJson = errors
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    writeJson(s"$outDir/_errors.json", errors)
     errors.toMap
   }
 
-  /** JSON string escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
-    * the driver's json.load fail and silently zero the round's
-    * correctness.
+  /** Writes `m` as one flat JSON object of strings, in `m`'s order.
+    * Jackson escapes every quote, backslash and control char, so a tab
+    * or CR in a message or in builder-authored SQL cannot break the
+    * driver's json.load.
     */
-  def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private def writeJson(path: String,
+                        m: scala.collection.Map[String, String]): Unit =
+    Files.writeString(Paths.get(path),
+      new ObjectMapper().writeValueAsString(m.asJava))
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -63,10 +57,8 @@ object Verify {
     val spark = Sessions.local()
     val errors =
       dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => keep(kv._1)))
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson(s"$outDir/oracle_sql.json",
+      SparkEntry.oracleSql.filter(kv => keep(kv._1)))
     spark.stop()
     if (errors.nonEmpty)
       println(s"WARN verify-failed: ${errors.keys.mkString(",")}")

@@ -1736,6 +1736,51 @@ object Similarity {
             (col("n_queries") * k).cast("double"))
           .otherwise(lit(0.0d)).as("recall"))
 
+  /** The graph chains' dial query subset: the rows with
+    * vec_id % 50 = 0.
+    */
+  private def dial(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") % 50 === 0)
+
+  /** A recall dial's sampled query rows `q` (id column first) and their
+    * pinned exact top-`k` `truth` ([[sampledTruth]]).
+    */
+  private final case class Dial(q: DataFrame, truth: DataFrame, k: Int) {
+    private val nQ =
+      q.select(countDistinct(col(q.columns.head)).as("n_queries"))
+
+    /** [[sampledRecall]] of the (vec_id, nbr_id, …) pairs `found` over
+      * `q`'s query count, as one row led by the column
+      * `label._1` = `label._2`.
+      */
+    def arm(label: (String, Any), found: DataFrame): DataFrame =
+      sampledRecall(truth, found.select(col("vec_id"), col("nbr_id")), nQ, k)
+        .select(lit(label._2).as(label._1), col("*"))
+
+    /** This dial restricted to the queries matching `c`. */
+    def within(c: Column): Dial = Dial(q.filter(c), truth.filter(c), k)
+  }
+
+  /** The recall-dial harness of the graph chains (the s11/s17
+    * discipline): pins the prepared corpus, runs `build` over the pin
+    * CONCURRENTLY with the exact truth pass of the query rows
+    * `queries` draws from it — both read only the pin, and
+    * the queries×corpus truth is priced only here, never in a build —
+    * then unions the labelled recall rows `arms` draws from the built
+    * chain.
+    */
+  private def dialRecall[A](embeddings: DataFrame, k: Int,
+                            queries: DataFrame => DataFrame = dial)(
+      build: DataFrame => A)(arms: (Dial, A) => Seq[DataFrame])
+      : DataFrame = {
+    val e = prepared(embeddings).materialized
+    val (built, d) = Par.concurrently(build(e), {
+      val q = queries(e)
+      Dial(q, sampledTruth(q, e, k), k)
+    })
+    arms(d, built).reduce(_.unionByName(_))
+  }
+
   /** A beam frontier's (q_id, cand_id, sim) per-query top-`k` by
     * (sim DESC, cand_id ASC), ranked into `rankCol`.
     */
@@ -1780,14 +1825,12 @@ object Similarity {
     */
   def nnDescent(embeddings: DataFrame, k: Int = 5,
                 rounds: Int = 4): DataFrame = {
-    // pin the prepared corpus (r21): the per-round vector-fetch joins
-    // read it ~2× per round, and un-pinned each read re-derived the
-    // scan + norm — the same one-corpus-pin discipline as the chains
+    // the corpus is pinned: the per-round vector-fetch joins read it
+    // ~2× per round
     val g = nnDescentGraph(embeddings, prepared(embeddings).materialized,
       hashRankCounted(embeddings), k, rounds)
-    // the graph is already top-k per node; this final window only
-    // re-derives the rank column for the s28 output shape (chain
-    // callers read the pinned graph directly and skip it — r21)
+    // the graph is already top-k per node; this window only derives
+    // the rank column of the s28 output shape
     topK(g, k, "rank")(col("vec_id"))(col("sim").desc, col("nbr_id").asc)
   }
 
@@ -1805,23 +1848,18 @@ object Similarity {
           col("nrm"), col("wnrm")).as("sim"))
 
   /** ONE fused NN-descent round as a LAZY frame over the pinned
-    * round-input graph `g` (r21, guide §2.3/§2.4): one neighbor-set
-    * aggregate builds each pivot's candidate neighborhood — forward
-    * edges as a set, reverse edges capped to the deterministic top-k
-    * by the SAME (sim DESC, id ASC) order the old reverse window used
+    * round-input graph `g`: one neighbor-set aggregate builds each
+    * pivot's candidate neighborhood — forward edges as a set, reverse
+    * edges capped to the deterministic top-k by (sim DESC, id ASC)
     * (ids are non-negative longs, so sorting struct(sim, −id) DESC is
     * that order exactly — topKAgg scaladoc) — then the local join's
     * pair fan row-local (all ordered pairs among the pivot's ≤2k
-    * candidate neighbors; the pivot id itself drops out, exactly like
-    * the old u⋈u self-join), the two vector-fetch joins score only
-    * the fan (carried `g` rows ride with their existing bit-identical
-    * sims), and ONE [[topKAgg]] owns the dedup + rank + cut the old
-    * round spelled as a reverse-cap window + pair distinct +
-    * corpus-keyed self-join + top-k window (≈6 exchanges and 2 full
-    * per-partition sorts → 3 exchanges + the two fetch joins, no
-    * sort). Extracted as a named builder so the descent loop and the
-    * plans/rNN round-plan evidence (`tools.Main rounds`) compose the
-    * identical frame.
+    * candidate neighbors, the pivot id itself excluded), the two
+    * vector-fetch joins score only the fan (carried `g` rows ride
+    * with their existing bit-identical sims), and ONE [[topKAgg]]
+    * owns the dedup + rank + cut: 3 exchanges + the two fetch joins,
+    * no sort. The descent loop and the round-plan evidence
+    * (`tools.Main rounds`) compose this identical frame.
     */
   private[graft] def nnDescentRoundFrame(e: DataFrame, g: DataFrame,
                                          k: Int): DataFrame = {
@@ -1845,49 +1883,27 @@ object Similarity {
       "vec_id", "nbr_id", "sim", k)
   }
 
-  /** Dev-only (`tools.Main rounds`, r21): the two fused round frames,
-    * LAZY, over a minimal eagerly-built chain prefix — the committed
-    * per-round plan evidence for the exchange counts the static query
-    * plans cannot show (the rounds materialize eagerly). Composes the
-    * EXACT builders the loops call. Not a query path.
+  /** Dev-only (`tools.Main rounds`): the two fused round frames, LAZY,
+    * over a minimal eagerly-built chain prefix — the per-round plan
+    * evidence for the exchange counts the static query plans cannot
+    * show (the rounds materialize eagerly). Composes the EXACT
+    * builders the loops call. Not a query path.
     */
   private[graft] def debugRoundFrames(embeddings: DataFrame)
       : Seq[(String, DataFrame)] = {
     val e = prepared(embeddings).materialized
-    val hr = hashRankCounted(e)
-    val g = nnDescentGraph(embeddings, e, hr, 5, 1)
-    val gsym = searchGraphOn(hr, g.select(col("vec_id"), col("nbr_id")))
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")).materialized
-    val entries = e.select(col("vec_id").as("cand_id"),
-        Canon.hashP(col("vec_id").cast("string")).as("_h"))
-      .orderBy(col("_h"), col("cand_id")).limit(16)
-      .select(col("cand_id"))
-    val f0 = scoreCand(e, q)(q.select(col("q_id"))
-      .crossJoin(broadcast(entries))
-      .filter(col("cand_id") =!= col("q_id"))).materialized
-    Seq("beam_round" -> beamRoundFrame(e, gsym, q, f0, 16),
-      "nn_descent_round" -> nnDescentRoundFrame(e, g, 5))
+    val sg = searchGraph(embeddings, e, 5, 1, dial(e))
+    val f0 = beamWalk(sg, 16, 0)().head
+    Seq("beam_round" ->
+        beamRoundFrame(sg.gsym, f0, 16, scoreCand(e, sg.q), "sim"),
+      "nn_descent_round" -> nnDescentRoundFrame(e, sg.g, 5))
   }
 
-  /** [[nnDescent]]'s pinned graph build over a caller-supplied
-    * prepared corpus `e` and shared ring rank `hr` (r21, guide
-    * §1.2/§2.3/§2.4): the chain operators already hold both pinned,
-    * so the build stops pinning its own copies, and each descent
-    * round is FUSED — the old round paid a reverse-cap window, a
-    * pair-list distinct, a corpus-keyed self-join and a top-k window
-    * (≈6 exchanges + 2 full per-partition sorts); now ONE
-    * neighbor-set aggregate (forward set ∪ row-local top-k of the
-    * collected reverse edges — the same (sim DESC, id ASC) cap order,
-    * computed inside the aggregate instead of a window), a row-local
-    * pair fan, the two vector-fetch joins, and ONE [[topKAgg]]
-    * (which owns the dedup the pair-list distinct used to do — see
-    * its bit-identity argument; carried `g` rows are unioned in with
-    * their existing sims instead of being re-scored, which is exact
-    * because re-scoring a pair is the identical expression over the
-    * identical operands). Returns the materialized (vec_id, nbr_id,
-    * sim) graph, top-k per node, WITHOUT the rank column.
+  /** [[nnDescent]]'s pinned graph build over the caller's pinned
+    * prepared corpus `e` and ring rank `hr`: the seed, then `rounds`
+    * fused [[nnDescentRoundFrame]]s, each pinned. Returns the
+    * materialized (vec_id, nbr_id, sim) graph, top-k per node,
+    * WITHOUT the rank column.
     */
   private def nnDescentGraph(embeddings: DataFrame, e: DataFrame,
                              hr: DataFrame, k: Int,
@@ -1932,17 +1948,12 @@ object Similarity {
     // links are what let the local join escape locality, exactly the
     // role random initial neighbors play in the published algorithm.
     //
-    // Ranked with [[hashRankCounted]]'s two-stage template, NOT ringPairs'
-    // per-block window (r20, guide §2.5): the global ring's block key
-    // is the constant 0, so the window form hashed the ENTIRE corpus
-    // into one partition — a corpus-sized single-task sort at 100 TB
-    // that the unpartitioned-window plan check cannot see (the window
-    // IS partitioned, by a constant). hashRankCounted ranks by the same
-    // (hashP(id), id) total order, so the fan produces the identical
-    // pair set. `hr` arrives pinned from the caller (r21: the chains
-    // share ONE ring-rank pin between this seed ring, searchGraph's
-    // finger table and hierChain's pilots); the _n > 1 filter on the
-    // id count is row-identical pre- or post-pin.
+    // Ranked with [[hashRankCounted]]'s two-stage template, NOT
+    // ringPairs' per-block window: the global ring's block key is the
+    // constant 0, so a window would hash the ENTIRE corpus into one
+    // partition — a corpus-sized single-task sort at 100 TB that the
+    // unpartitioned-window plan check cannot see (the window IS
+    // partitioned, by a constant).
     val hrF = hr.filter(col("_n") > 1)
     val hashRing = hrF
       .withColumn("j",
@@ -1952,9 +1963,8 @@ object Similarity {
       .join(hrF.select(col("rn").as("trn"), col("vec_id").as("nbr_id")),
         Seq("trn"))
       .select(col("vec_id"), col("nbr_id"))
-    // no pair distinct before scoring (r21): cross-ring duplicates
-    // score bit-identically and topKAgg's array_distinct removes them
-    // — one exchange fewer, same selected set (topKAgg scaladoc)
+    // no pair distinct before scoring: cross-ring duplicates score
+    // bit-identically and topKAgg's array_distinct removes them
     val seedCand = ringPairs(byLabel, 2 * k)
       .union(ringPairs(byCell, 2 * k))
       .union(hashRing)
@@ -1967,56 +1977,34 @@ object Similarity {
   }
 
   /** s29 — [[nnDescent]]'s recall dial (the s11/s17 discipline): for
-    * the deterministic query subset `vec_id % 50 == 0`, recall@k of
-    * the label-blocked seed graph versus the descended graph against
-    * the EXACT top-k over the whole corpus. The seed's misses are
+    * the dial query subset `vec_id % 50 == 0`, recall@k of the
+    * label-blocked seed graph versus the descended graph against the
+    * EXACT top-k over the whole corpus. The seed's misses are
     * structural (cross-block neighbors it cannot represent), so the
-    * descended variant must dominate it; the exact truth pass is
-    * queries×corpus, priced only here, never in the build.
+    * descended variant must dominate it. The descended arm reads the
+    * pinned graph: its pair set IS [[nnDescent]]'s output pair set.
     */
   def nnDescentRecall(embeddings: DataFrame, k: Int = 5,
-                      rounds: Int = 4): DataFrame = {
-    val e = prepared(embeddings).materialized
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    // truth pass built CONCURRENTLY with the descended graph (r21,
-    // guide §2.6): both branches read only the pinned `e`
-    val (descended, truth) = Par.concurrently(
-      nnDescentGraph(embeddings, e, hashRankCounted(e), k, rounds),
-      sampledTruth(q, e, k))
-    val nQ = q.select(countDistinct(col("vec_id")).as("n_queries"))
-    def hits(graph: DataFrame, variant: String): DataFrame =
-      sampledRecall(truth, graph.select(col("vec_id"), col("nbr_id")), nQ, k)
-        .select(lit(variant).as("variant"), col("*"))
-    // the descended arm reads the pinned graph directly (r21): its
-    // pair set IS nnDescent's output pair set (the public wrapper's
-    // final window only re-derives the rank column, a no-op filter on
-    // an already-top-k graph), and the graph build shares this dial's
-    // pinned corpus frame instead of re-deriving prepared(embeddings)
-    // at every per-round vector fetch
-    hits(knnGraph(embeddings, k), "seed")
-      .unionByName(hits(descended, "descended"))
-  }
+                      rounds: Int = 4): DataFrame =
+    dialRecall(embeddings, k)(e =>
+        nnDescentGraph(embeddings, e, hashRankCounted(e), k, rounds)) {
+      (d, g) => Seq(d.arm("variant" -> "seed", knnGraph(embeddings, k)),
+        d.arm("variant" -> "descended", g))
+    }
 
   /** Pinned (vec_id, rn, _n) global md5-ring rank + corpus count —
-    * THE shared ring frame of the chain operators (r21, guide §1.2):
-    * nnDescent's seed ring, searchGraph's finger table and
-    * hierChain's pilot set all rank the SAME id set by the SAME
-    * (hashP(id), id) total order, and before this seam each built and
-    * pinned its own copy — up to three two-stage ranks per chain
-    * query (and hierChain's ranked the WIDE (id, v, nrm) corpus
-    * through the range exchange; now only ids ride the rank and the
-    * pilot payload is fetched back by one id join). One pin, shared
-    * by every consumer; deterministic because the rank's internal
-    * TwoStage pin already fixes the one boundary draw.
+    * THE shared ring frame of the chain operators: nnDescent's seed
+    * ring, the search graph's finger table and hierChain's pilot set
+    * all rank the SAME id set by the SAME (hashP(id), id) total order
+    * off this one pin (deterministic because the rank's internal
+    * TwoStage pin already fixes the one boundary draw).
     *
     * `rn` is the 1-based position of vec_id in (hashP(vec_id), vec_id)
     * order and `_n` the id count, both from [[TwoStage.globalRank]] —
-    * NEVER a one-partition `Window.orderBy` over the corpus, which
-    * was the scaladoc-only promise ADVICE r15 flagged at the
-    * searchGraph and hierChain pilot sites. No pre-pin: the callers'
-    * ids are cheap selects off an already-materialized corpus frame
-    * (TwoStage scaladoc's accepted double-read trade).
+    * NEVER a one-partition `Window.orderBy` over the corpus. No
+    * pre-pin: the callers' ids are cheap selects off an
+    * already-materialized corpus frame (TwoStage scaladoc's accepted
+    * double-read trade).
     */
   private def hashRankCounted(ids: DataFrame): DataFrame =
     TwoStage.globalRank(ids.select(col("vec_id"),
@@ -2025,24 +2013,39 @@ object Similarity {
       .select(col("vec_id"), col("_rank").as("rn"), col("_n"))
       .materialized
 
-  /** The SEARCH graph over corpus `e` for kNN edge list `g`: g
-    * symmetrized, plus long-range links. A pure kNN graph is
-    * CLUSTER-CONFINED (its symmetric closure rarely leaves a tight
-    * cluster — measured: beam recall 0.38 on the clustered fixture vs
-    * the descended graph's own 0.92), which is exactly why the
-    * published structures add long edges (HNSW's upper layers,
-    * DiskANN's random links). The deterministic analog here is
-    * Chord-style power-of-two fingers on the md5 ring: node at
-    * hash-rank rn links to ranks rn + 2^j (wrap) for every
-    * 2^j ≤ n − 1 — O(log n) fingers per node, O(log n) ring diameter,
-    * and a pure function of the id set. The rank is [[hashRankCounted]]'s
-    * two-stage global rank (r16 — previously a one-partition window
-    * with a "at 100 TB" disclaimer; now the template it promised).
+  /** The search structure every graph chain walks, built once over the
+    * pinned prepared corpus `e`:
+    *  - `hr`: the pinned global md5-ring rank ([[hashRankCounted]]);
+    *  - `g`: the pinned NN-descent graph (vec_id, nbr_id, sim), top-k
+    *    per node ([[nnDescentGraph]]);
+    *  - `gsym`: the pinned SEARCH graph — `g` symmetrized, plus
+    *    long-range links. A pure kNN graph is CLUSTER-CONFINED (its
+    *    symmetric closure rarely leaves a tight cluster — measured:
+    *    beam recall 0.38 on the clustered fixture vs the descended
+    *    graph's own 0.92), which is exactly why the published
+    *    structures add long edges (HNSW's upper layers, DiskANN's
+    *    random links). The deterministic analog here is Chord-style
+    *    power-of-two fingers on the md5 ring: node at hash-rank rn
+    *    links to ranks rn + 2^j (wrap) for every 2^j ≤ n − 1 —
+    *    O(log n) fingers per node, O(log n) ring diameter, and a pure
+    *    function of the id set;
+    *  - `q`: the walk's pinned query rows (q_id, qv, qnrm).
     */
-  private def searchGraphOn(hr: DataFrame, g: DataFrame): DataFrame = {
-    // `hr` = the caller's shared [[hashRankCounted]] pin (r21): the
-    // fan and the rank-target join both read it, and nnDescent's seed
-    // ring + hierChain's pilots read the SAME frame
+  private final case class SearchGraph(e: DataFrame, hr: DataFrame,
+                                       g: DataFrame, gsym: DataFrame,
+                                       q: DataFrame)
+
+  /** Builds the [[SearchGraph]] over corpus `e` (whose raw rows
+    * `embeddings` seed the descent blockings) with a `k`-NN graph
+    * descended `descentRounds` times, and pins the (vec_id, v, nrm)
+    * rows `queries` as its query set.
+    */
+  private def searchGraph(embeddings: DataFrame, e: DataFrame, k: Int,
+                          descentRounds: Int,
+                          queries: DataFrame): SearchGraph = {
+    val hr = hashRankCounted(e)
+    val g = nnDescentGraph(embeddings, e, hr, k, descentRounds)
+    val knn = g.select(col("vec_id"), col("nbr_id"))
     val skip = hr
       .withColumn("j", explode(sequence(lit(0L), lit(62L))))
       .withColumn("off", pow(lit(2.0d), col("j")).cast("long"))
@@ -2051,32 +2054,60 @@ object Similarity {
       .join(hr.select(col("rn").as("trn"),
         col("vec_id").as("nbr_id")), Seq("trn"))
       .select(col("vec_id"), col("nbr_id"))
-    g.union(skip)
-      .union(g.select(col("nbr_id").as("vec_id"), col("vec_id").as("nbr_id")))
+    val gsym = knn.union(skip)
+      .union(knn.select(col("nbr_id").as("vec_id"),
+        col("vec_id").as("nbr_id")))
       .union(skip.select(col("nbr_id").as("vec_id"),
         col("vec_id").as("nbr_id")))
       .distinct().materialized
+    SearchGraph(e, hr, g, gsym, queries.select(col("vec_id").as("q_id"),
+      col("v").as("qv"), col("nrm").as("qnrm")).materialized)
   }
 
-  /** The walk itself: `rounds` hop-union-score-rank rounds of query
-    * set `q` (q_id, qv, qnrm — MUST be pinned by the caller) over
-    * `gsym` within corpus `e`, starting from the `beam` earliest
-    * corpus vectors in md5 order — or, when `f0Override` is given, a
-    * caller-supplied scored entry frontier (q_id, cand_id, sim): the
-    * s47 hierarchical ladder feeds its level-1 winners here. Returns
-    * (frontier₀, frontier_R).
+  /** The beam walk — the one walk every graph search runs: `rounds`
+    * hop-union-score-rank rounds of the query set over `sg.gsym`
+    * (HNSW/NSG search walks neighborhoods undirected — a reverse edge
+    * is as good a road as a forward one). It starts from the `beam`
+    * corpus vectors earliest in md5-hash order (the fixed entry point
+    * of the published graph searches, made a set so round 0 starts
+    * with a full frontier), or from the scored frontier `entry`
+    * (q_id, cand_id, score) when given. Each round hops the frontier
+    * one edge, unions the frontier itself (monotone — the best-so-far
+    * can never be lost), scores with `score` into `scoreCol` and keeps
+    * the per-query top-`beam`. Fixed rounds instead of a convergence
+    * loop make the search unrollable for the DuckDB oracle — the
+    * d08/g10/nnDescent discipline.
+    *
+    * Returns every pinned frontier: index r = the frontier after r
+    * rounds, index 0 = the entry frontier.
+    *
+    * Scale shape: per round the candidate volume is ≤ |Q|·beam·(2k+1)
+    * rows — QUERY-sized, never corpus-sized; the corpus is touched
+    * only by the edge-list and vector-fetch equi-joins. Frontiers pin
+    * per round: each feeds the hop, the union AND the re-rank, and
+    * un-pinned lineage doubles per round.
     */
-  private def beamWalk(e: DataFrame, gsym: DataFrame, q: DataFrame,
-                       beam: Int, rounds: Int,
-                       f0Override: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val fs = beamWalkAll(e, gsym, q, beam, rounds, f0Override)
-    (fs.head, fs.last)
+  private def beamWalk(sg: SearchGraph, beam: Int, rounds: Int,
+                       entry: Option[DataFrame] = None)(
+      score: DataFrame => DataFrame = scoreCand(sg.e, sg.q),
+      scoreCol: String = "sim"): Vector[DataFrame] = {
+    val md5First = sg.e
+      .select(col("vec_id").as("cand_id"),
+        Canon.hashP(col("vec_id").cast("string")).as("_h"))
+      .orderBy(col("_h"), col("cand_id")).limit(beam)
+      .select(col("cand_id"))
+    val f0 = entry.getOrElse(
+      score(sg.q.select(col("q_id")).crossJoin(broadcast(md5First))
+        .filter(col("cand_id") =!= col("q_id"))))
+      .materialized
+    (1 to rounds).scanLeft(f0) { (f, _) =>
+      beamRoundFrame(sg.gsym, f, beam, score, scoreCol).materialized
+    }.toVector
   }
 
-  /** The exact-cosine scorer shared by the walk's entry frontier and
-    * every [[beamRoundFrame]] — ONE definition so the bit-identity
-    * argument (carried sim ≡ re-scored sim) is true by construction.
+  /** The exact-cosine scorer of (q_id, cand_id) candidates against
+    * query set `q` — ONE definition so the bit-identity argument
+    * (carried sim ≡ re-scored sim) is true by construction.
     */
   private def scoreCand(e: DataFrame, q: DataFrame)(cand: DataFrame)
       : DataFrame = cand
@@ -2087,122 +2118,42 @@ object Similarity {
       Canon.cosine(Canon.dot(col("qv"), col("v")),
         col("qnrm"), col("nrm")).as("sim"))
 
-  /** ONE fused beam-walk round as a LAZY frame (r21, guide
-    * §2.3/§2.4): hop the frontier one edge, score only the hop
-    * candidates — the frontier's own rows already carry the
-    * bit-identical sim from the round that ranked them (re-scoring a
-    * (q, cand) pair is the identical expression over identical
-    * operands) — and let ONE [[topKAgg]] own the dedup + rank + beam
-    * cut the old round spelled as a pair distinct + a row_number
-    * window (two exchanges and a full per-partition sort, now one
-    * aggregate exchange; the hop⋈frontier duplicates are
-    * bit-identical rows that array_distinct removes). Extracted as a
-    * named builder so the walk loop and the plans/rNN round-plan
-    * evidence (`tools.Main rounds`) compose the identical frame.
+  /** ONE beam-walk round as a LAZY frame: hop the frontier one edge,
+    * score only the hop candidates — the frontier's own rows already
+    * carry the bit-identical score from the round that ranked them —
+    * and let ONE [[topKAgg]] own the dedup + rank + beam cut (the
+    * hop⋈frontier duplicates are bit-identical rows that
+    * array_distinct removes). The walk loop and the round-plan
+    * evidence (`tools.Main rounds`) compose this identical frame.
     */
-  private[graft] def beamRoundFrame(e: DataFrame, gsym: DataFrame,
-                                    q: DataFrame, frontier: DataFrame,
-                                    beam: Int): DataFrame = {
+  private def beamRoundFrame(gsym: DataFrame, frontier: DataFrame,
+                             beam: Int, score: DataFrame => DataFrame,
+                             scoreCol: String): DataFrame = {
     val hops = frontier.select(col("q_id"), col("cand_id"))
       .join(gsym.withColumnRenamed("vec_id", "cand_id"), "cand_id")
       .select(col("q_id"), col("nbr_id").as("cand_id"))
       .filter(col("cand_id") =!= col("q_id"))
-    topKAgg(scoreCand(e, q)(hops)
+    topKAgg(score(hops)
         .unionByName(frontier.select(col("q_id"), col("cand_id"),
-          col("sim"))),
-      "q_id", "cand_id", "sim", beam)
+          col(scoreCol))),
+      "q_id", "cand_id", scoreCol, beam)
   }
 
-  /** [[beamWalk]] exposing EVERY per-round frontier (index r =
-    * frontier after r rounds; index 0 = the entry frontier). Free to
-    * return — each round's frontier is already pinned by the walk —
-    * and what the s50 rounds-curve dial cuts at its sample points.
+  /** The s33/s34/s50 chain: the [[beamWalk]] of the dial queries over
+    * the [[nnDescent]] search graph of the pinned corpus `e`; every
+    * per-round frontier.
     */
-  private def beamWalkAll(e: DataFrame, gsym: DataFrame, q: DataFrame,
-                          beam: Int, rounds: Int,
-                          f0Override: Option[DataFrame] = None)
-      : Vector[DataFrame] = {
-    val entries = e
-      .select(col("vec_id").as("cand_id"),
-        Canon.hashP(col("vec_id").cast("string")).as("_h"))
-      .orderBy(col("_h"), col("cand_id")).limit(beam)
-      .select(col("cand_id"))
-    val f0 = f0Override.getOrElse(
-      scoreCand(e, q)(q.select(col("q_id")).crossJoin(broadcast(entries))
-        .filter(col("cand_id") =!= col("q_id"))))
-      .materialized
-    val fs = Vector.newBuilder[DataFrame]
-    var frontier = f0
-    fs += f0
-    (1 to rounds).foreach { _ =>
-      frontier = beamRoundFrame(e, gsym, q, frontier, beam).materialized
-      fs += frontier
-    }
-    fs.result()
-  }
-
-  /** The beam-search chain shared by s33/s34: the [[nnDescent]] graph
-    * SYMMETRIZED (HNSW/NSG search walks neighborhoods undirected — a
-    * reverse edge is as good a road as a forward one), deterministic
-    * global entry points (the `beam` corpus vectors earliest in
-    * md5-hash order — the fixed entry point of the published graph
-    * searches, made a set so round 0 starts with a full frontier),
-    * then `rounds` FIXED expansion rounds: hop the frontier one edge,
-    * union the frontier itself (monotone — the best-so-far can never
-    * be lost), score exactly against the query, keep the per-query
-    * top-`beam`. Fixed rounds instead of a convergence loop is what
-    * makes the search unrollable for the DuckDB oracle — the
-    * d08/g10/nnDescent discipline.
-    *
-    * Returns (frontier₀, frontier_R): the entry frontier prices what
-    * the graph walk ADDS over its own starting points (s34's dial).
-    *
-    * Scale shape: the graph is the write-once n·k edge list; per
-    * round the candidate volume is ≤ |Q|·beam·(2k+1) rows — QUERY-
-    * sized, never corpus-sized; the corpus is touched only by the
-    * edge-list equi-join and the vector-fetch equi-join (both
-    * key-partitioned), with no IVF probe scan and no corpus
-    * self-join anywhere. Frontiers pin per round (Materialize seam):
-    * each feeds the hop, the union AND the re-rank, and un-pinned
-    * lineage doubles per round.
-    *
-    * Returns (frontier₀, frontier_R, pinned corpus frame) — the pinned
-    * `e` rides along so recall callers reuse it for their truth pass
-    * instead of pinning a second copy of the same frame (r20, guide
-    * §1.2: one corpus pin per query, not two).
-    */
-  private def beamChain(embeddings: DataFrame, beam: Int, rounds: Int,
-                        graphK: Int, descentRounds: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val e = prepared(embeddings).materialized
-    val (f0, f) = beamChainOn(embeddings, e, beam, rounds, graphK,
-      descentRounds)
-    (f0, f, e)
-  }
-
-  /** [[beamChain]] over an already-pinned prepared corpus `e` — the
-    * seam that lets the recall dials run the chain build CONCURRENTLY
-    * with their truth pass (r21, guide §2.6: both read only `e`).
-    */
-  private def beamChainOn(embeddings: DataFrame, e: DataFrame,
-                          beam: Int, rounds: Int,
-                          graphK: Int, descentRounds: Int)
-      : (DataFrame, DataFrame) = {
-    val hr = hashRankCounted(e)
-    val gsym = searchGraphOn(hr,
-      nnDescentGraph(embeddings, e, hr, graphK, descentRounds)
-        .select(col("vec_id"), col("nbr_id")))
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")).materialized
-    beamWalk(e, gsym, q, beam, rounds)
-  }
+  private def beamChain(embeddings: DataFrame, e: DataFrame, beam: Int,
+                        rounds: Int, graphK: Int,
+                        descentRounds: Int): Vector[DataFrame] =
+    beamWalk(searchGraph(embeddings, e, graphK, descentRounds, dial(e)),
+      beam, rounds)()
 
   /** Graph-ANN beam search (s33) — the missing rung above the s28
     * KNN-graph build: HNSW/NSG-style search (Malkov & Yashunin 2018;
     * Fu et al. 2019) over the [[nnDescent]] graph, reduced to its
-    * deterministic set-at-a-time core by [[beamChain]]. For each
-    * query in the s29 dial subset (vec_id % 50 = 0), the final
+    * deterministic set-at-a-time core by [[beamWalk]]. For each
+    * query in the dial subset (vec_id % 50 = 0), the final
     * frontier's top-`k` with ranks — the same output shape as the
     * IVF ladder's searches, at a fraction of the probe cost: IVF
     * scores nProbe/nCells of the corpus per query; the walk scores
@@ -2217,8 +2168,9 @@ object Similarity {
   def graphBeamSearch(embeddings: DataFrame, k: Int = 5, beam: Int = 16,
                       rounds: Int = 4, graphK: Int = 5,
                       descentRounds: Int = 4): DataFrame = {
-    val (_, f, _) = beamChain(embeddings, beam, rounds, graphK, descentRounds)
-    frontierTopK(f, k, "rank")
+    val fs = beamChain(embeddings, prepared(embeddings).materialized, beam,
+      rounds, graphK, descentRounds)
+    frontierTopK(fs.last, k, "rank")
       .select(col("q_id"), col("cand_id").as("nbr_id"), col("sim"),
         col("rank"))
   }
@@ -2233,89 +2185,47 @@ object Similarity {
     */
   def graphBeamRecall(embeddings: DataFrame, k: Int = 5, beam: Int = 16,
                       rounds: Int = 4, graphK: Int = 5,
-                      descentRounds: Int = 4): DataFrame = {
-    val e = prepared(embeddings).materialized
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    // chain build and truth pass overlapped (r21, guide §2.6): both
-    // branches read only the pinned `e`
-    val ((f0, f), truth) = Par.concurrently(
-      beamChainOn(embeddings, e, beam, rounds, graphK, descentRounds),
-      sampledTruth(q, e, k))
-    val nQ = q.select(countDistinct(col("vec_id")).as("n_queries"))
-    def hits(frontier: DataFrame, variant: String): DataFrame =
-      sampledRecall(truth, frontierPairs(frontier, k), nQ, k)
-        .select(lit(variant).as("variant"), col("*"))
-    hits(f0, "entry").unionByName(hits(f, "beam"))
-  }
+                      descentRounds: Int = 4): DataFrame =
+    dialRecall(embeddings, k)(e =>
+        beamChain(embeddings, e, beam, rounds, graphK, descentRounds)) {
+      (d, fs) => Seq(d.arm("variant" -> "entry", frontierPairs(fs.head, k)),
+        d.arm("variant" -> "beam", frontierPairs(fs.last, k)))
+    }
 
-  /** The s47/s48 shared chain — the 2-level HIERARCHICAL ENTRY ladder
-    * for the beam search (the HNSW upper-layer idea, Malkov &
-    * Yashunin 2018 §4, reduced to two deterministic levels): s33's
-    * md5-order entry points are pure luck on a uniform corpus
-    * (Similarity's measured 0.555 uniform recall floor is geometry —
-    * the fixed entries start the walk far from most queries, and
-    * `rounds` hops can't always close the distance). Level 1 here
-    * brute-scores each query against the ⌊√n⌋ PILOT vectors earliest
-    * in md5-hash order (the same ordering hrk/searchGraph already
-    * rank by, so the oracle reuses that table) and takes the
-    * per-query top-`beam` as the walk's scored entry frontier; the
-    * level-2 walk is [[beamWalk]] unchanged, at the SAME beam and
-    * rounds as s33 — the recall delta is the ladder's, not a wider
-    * beam's.
+  /** The s47/s48 chain — the 2-level HIERARCHICAL ENTRY ladder for the
+    * beam search (the HNSW upper-layer idea, Malkov & Yashunin 2018 §4,
+    * reduced to two deterministic levels): s33's md5-order entry
+    * points are pure luck on a uniform corpus (the measured 0.555
+    * uniform recall floor is geometry — the fixed entries start the
+    * walk far from most queries, and `rounds` hops can't always close
+    * the distance). Level 1 brute-scores each query against the ⌊√n⌋
+    * PILOT vectors earliest in md5-hash order (the `hr` ring rank the
+    * search graph already holds) and takes the per-query top-`beam` as
+    * the walk's scored entry frontier; level 2 is [[beamWalk]]
+    * unchanged, at the SAME beam and rounds as s33 — the recall delta
+    * is the ladder's, not a wider beam's. Every per-round frontier.
     *
     * Scale shape: the pilot scan is |Q|·√n broadcast-scored rows —
-    * the published upper-layer cost, sublinear in the corpus and
-    * query-sized per query; everything else is s33's shape. The pilot
-    * RANK is [[hashRankCounted]]'s two-stage template (r16 — previously a
-    * one-partition window with a scaladoc-only "at 100 TB" promise;
-    * ADVICE r15 asked for the promise to be enforced, and now it is
-    * the code).
+    * the published upper-layer cost, sublinear in the corpus; only
+    * the √n pilot rows ever carry vectors (membership is decided on
+    * the id-only ring rank); everything else is s33's shape.
     */
-  private def hierChain(embeddings: DataFrame, beam: Int, rounds: Int,
-                        graphK: Int, descentRounds: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val e = prepared(embeddings).materialized
-    val (f0, f) = hierChainOn(embeddings, e, beam, rounds, graphK,
-      descentRounds)
-    // the pinned corpus rides along for the recall caller's truth
-    // pass — one corpus pin per query, not two (r20, the beamChain
-    // convention)
-    (f0, f, e)
-  }
-
-  /** [[hierChain]] over an already-pinned prepared corpus `e` (r21,
-    * guide §2.6 — the beamChainOn seam).
-    */
-  private def hierChainOn(embeddings: DataFrame, e: DataFrame,
-                          beam: Int, rounds: Int,
-                          graphK: Int, descentRounds: Int)
-      : (DataFrame, DataFrame) = {
-    val hr = hashRankCounted(e)
-    val gsym = searchGraphOn(hr,
-      nnDescentGraph(embeddings, e, hr, graphK, descentRounds)
-        .select(col("vec_id"), col("nbr_id")))
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")).materialized
-    // pilots = the √n lowest ring ranks, payload fetched back from
-    // the pinned corpus by ONE id join (r21): the old shape ranked
-    // the WIDE (id, v, nrm) rows — the range exchange and the
-    // two-stage pin both carried every pilot-candidate vector; now
-    // the shared id-only `hr` decides membership and only √n rows
-    // ever carry vectors
-    val pilots = hr.filter(col("rn") * col("rn") <= col("_n"))
+  private def hierChain(embeddings: DataFrame, e: DataFrame, beam: Int,
+                        rounds: Int, graphK: Int,
+                        descentRounds: Int): Vector[DataFrame] = {
+    val sg = searchGraph(embeddings, e, graphK, descentRounds, dial(e))
+    val pilots = sg.hr.filter(col("rn") * col("rn") <= col("_n"))
       .select(col("vec_id"))
       .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
       .select(col("vec_id").as("cand_id"), col("v"), col("nrm"))
       .materialized
-    val f1 = frontierTopK(q.crossJoin(broadcast(pilots))
+    val f1 = frontierTopK(sg.q.crossJoin(broadcast(pilots))
         .filter(col("cand_id") =!= col("q_id"))
         .select(col("q_id"), col("cand_id"),
           Canon.cosine(Canon.dot(col("qv"), col("v")),
             col("qnrm"), col("nrm")).as("sim")),
         beam, "_rk").drop("_rk")
-    beamWalk(e, gsym, q, beam, rounds, Some(f1))
+    beamWalk(sg, beam, rounds, Some(f1))()
   }
 
   /** Hierarchical beam search (s47): [[hierChain]]'s final frontier,
@@ -2325,9 +2235,9 @@ object Similarity {
   def hierBeamSearch(embeddings: DataFrame, k: Int = 5, beam: Int = 16,
                      rounds: Int = 4, graphK: Int = 5,
                      descentRounds: Int = 4): DataFrame = {
-    val (_, f, _) = hierChain(embeddings, beam, rounds, graphK,
-      descentRounds)
-    frontierTopK(f, k, "rank")
+    val fs = hierChain(embeddings, prepared(embeddings).materialized, beam,
+      rounds, graphK, descentRounds)
+    frontierTopK(fs.last, k, "rank")
       .select(col("q_id"), col("cand_id").as("nbr_id"), col("sim"),
         col("rank"))
   }
@@ -2340,20 +2250,12 @@ object Similarity {
     */
   def hierBeamRecall(embeddings: DataFrame, k: Int = 5, beam: Int = 16,
                      rounds: Int = 4, graphK: Int = 5,
-                     descentRounds: Int = 4): DataFrame = {
-    val e = prepared(embeddings).materialized
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    // chain and truth overlapped (r21, guide §2.6)
-    val ((f0, f), truth) = Par.concurrently(
-      hierChainOn(embeddings, e, beam, rounds, graphK, descentRounds),
-      sampledTruth(q, e, k))
-    val nQ = q.select(countDistinct(col("vec_id")).as("n_queries"))
-    def hits(frontier: DataFrame, variant: String): DataFrame =
-      sampledRecall(truth, frontierPairs(frontier, k), nQ, k)
-        .select(lit(variant).as("variant"), col("*"))
-    hits(f0, "entry").unionByName(hits(f, "beam"))
-  }
+                     descentRounds: Int = 4): DataFrame =
+    dialRecall(embeddings, k)(e =>
+        hierChain(embeddings, e, beam, rounds, graphK, descentRounds)) {
+      (d, fs) => Seq(d.arm("variant" -> "entry", frontierPairs(fs.head, k)),
+        d.arm("variant" -> "beam", frontierPairs(fs.last, k)))
+    }
 
   /** Beam-search ROUNDS curve (s50) — the dial the s47 ladder's
     * measured verdict demands: with entry quality shown NOT to move
@@ -2376,48 +2278,33 @@ object Similarity {
                       cuts: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
     require(cuts.nonEmpty && cuts.forall(_ >= 1),
       s"cuts must be >= 1, got $cuts")
-    val e = prepared(embeddings).materialized
-    val qv = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    // chain + walk and the truth pass overlapped (r21, guide §2.6)
-    val (fs, truth) = Par.concurrently(
-      {
-        val hr = hashRankCounted(e)
-        val gsym = searchGraphOn(hr,
-          nnDescentGraph(embeddings, e, hr, graphK, descentRounds)
-            .select(col("vec_id"), col("nbr_id")))
-        val q = e.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"),
-            col("nrm").as("qnrm")).materialized
-        beamWalkAll(e, gsym, q, beam, cuts.max)
-      },
-      sampledTruth(qv, e, k))
-    val nQ = qv.select(countDistinct(col("vec_id")).as("n_queries"))
-    def hitsAt(r: Int): DataFrame =
-      sampledRecall(truth, frontierPairs(fs(r), k), nQ, k)
-        .select(lit(r.toLong).as("rounds"), col("*"))
-    cuts.map(hitsAt).reduce(_.unionByName(_))
+    dialRecall(embeddings, k)(e => beamChain(embeddings, e, beam,
+        cuts.max, graphK, descentRounds)) {
+      (d, fs) => cuts.map(r =>
+        d.arm("rounds" -> r.toLong, frontierPairs(fs(r), k)))
+    }
   }
 
-  /** The s36/s37 shared chain — incremental KNN-graph maintenance,
-    * the FreshDiskANN insert discipline (Singh et al. 2021): a
-    * production corpus grows daily, and rebuilding the graph per
-    * batch prices the WHOLE corpus every time; the incremental path
-    * prices only the batch. The deterministic batch split is
-    * vec_id % 10 == 9 (10% insert batch; in production, the day's
-    * arrivals). Insert = (1) [[nnDescent]] builds the graph on the
-    * OLD corpus only; (2) each NEW vector [[beamWalk]]s that graph
-    * (the s33 search, with the old corpus's fingers) and keeps its
-    * top-k hits as its FORWARD edges; (3) the REVERSE PATCH: each
-    * forward edge (new → old, cosine symmetric so the sim is reused,
-    * never rescored) becomes an (old → new) candidate, and each old
-    * node keeps the top-k of its existing edges ∪ reverse candidates
-    * — without this step new content is UNREACHABLE from old nodes
-    * and silently absent from every graph-served answer (s37's
-    * old-node row measures exactly this reachability). Within-batch
-    * (new ↔ new) edges are deliberately absent from a single insert
-    * batch — successive batches see earlier inserts, and the dial
-    * prices the omission honestly.
+  /** The s36/s37 chain over the pinned prepared corpus `eAll` —
+    * incremental KNN-graph maintenance, the FreshDiskANN insert
+    * discipline (Singh et al. 2021): a production corpus grows daily,
+    * and rebuilding the graph per batch prices the WHOLE corpus every
+    * time; the incremental path prices only the batch. The
+    * deterministic batch split is vec_id % 10 == 9 (10% insert batch;
+    * in production, the day's arrivals). Insert = (1) [[nnDescent]]
+    * builds the search graph on the OLD corpus only; (2) each NEW
+    * vector [[beamWalk]]s that graph (the s33 search, with the old
+    * corpus's fingers) and keeps its top-k hits as its FORWARD edges;
+    * (3) the REVERSE PATCH: each forward edge (new → old, cosine
+    * symmetric so the sim is reused, never rescored) becomes an
+    * (old → new) candidate, and each old node keeps the top-k of its
+    * existing edges ∪ reverse candidates — without this step new
+    * content is UNREACHABLE from old nodes and silently absent from
+    * every graph-served answer (s37's old-node row measures exactly
+    * this reachability). Within-batch (new ↔ new) edges are
+    * deliberately absent from a single insert batch — successive
+    * batches see earlier inserts, and the dial prices the omission
+    * honestly.
     *
     * Returns (patchedOldGraph, newForwardEdges), both top-k per node.
     *
@@ -2426,45 +2313,21 @@ object Similarity {
     * term is batch-sized (|B| beam walks + one top-k over n·k ∪ |B|·k
     * edges); nothing corpus² anywhere.
     */
-  private def incrementalParts(embeddings: DataFrame, k: Int,
-                               beam: Int, rounds: Int,
+  private def incrementalParts(embeddings: DataFrame, eAll: DataFrame,
+                               k: Int, beam: Int, rounds: Int,
                                descentRounds: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val eAll = prepared(embeddings).materialized
-    val (patched, newFwd) =
-      incrementalPartsOn(embeddings, eAll, k, beam, rounds, descentRounds)
-    // eAll rides along so the recall caller reuses the pin (r20)
-    (patched, newFwd, eAll)
-  }
-
-  /** [[incrementalParts]] over an already-pinned prepared corpus
-    * `eAll` (r21, guide §2.6 — the beamChainOn seam).
-    */
-  private def incrementalPartsOn(embeddings: DataFrame, eAll: DataFrame,
-                                 k: Int, beam: Int, rounds: Int,
-                                 descentRounds: Int)
       : (DataFrame, DataFrame) = {
-    val eOld = eAll.filter(col("vec_id") % 10 =!= 9).materialized
-    val hrOld = hashRankCounted(eOld)
-    // nnDescentGraph returns the pinned top-k graph directly (r21):
-    // the old path re-ranked the already-ranked graph through
-    // nnDescent's output window and pinned the same rows a second time
-    val gOld = nnDescentGraph(embeddings.filter(col("vec_id") % 10 =!= 9),
-      eOld, hrOld, k, descentRounds)
-    val gsym = searchGraphOn(hrOld,
-      gOld.select(col("vec_id"), col("nbr_id")))
-    val qNew = eAll.filter(col("vec_id") % 10 === 9)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")).materialized
-    val (_, fr) = beamWalk(eOld, gsym, qNew, beam, rounds)
-    val newFwd = topKAgg(fr, "q_id", "cand_id", "sim", k)
+    val old = col("vec_id") % 10 =!= 9
+    val sg = searchGraph(embeddings.filter(old),
+      eAll.filter(old).materialized, k, descentRounds,
+      eAll.filter(col("vec_id") % 10 === 9))
+    val newFwd = topKAgg(beamWalk(sg, beam, rounds)().last,
+        "q_id", "cand_id", "sim", k)
       .select(col("q_id").as("vec_id"), col("cand_id").as("nbr_id"),
         col("sim")).materialized // feeds the output AND the reverse patch
     val rev = newFwd.select(col("nbr_id").as("vec_id"),
       col("vec_id").as("nbr_id"), col("sim"))
-    val patched = topKAgg(gOld.unionByName(rev),
-      "vec_id", "nbr_id", "sim", k)
-    (patched, newFwd)
+    (topKAgg(sg.g.unionByName(rev), "vec_id", "nbr_id", "sim", k), newFwd)
   }
 
   /** Incremental graph insert (s36): the maintained graph itself —
@@ -2474,8 +2337,8 @@ object Similarity {
   def incrementalGraphInsert(embeddings: DataFrame, k: Int = 5,
                              beam: Int = 16, rounds: Int = 4,
                              descentRounds: Int = 4): DataFrame = {
-    val (patched, newFwd, _) =
-      incrementalParts(embeddings, k, beam, rounds, descentRounds)
+    val (patched, newFwd) = incrementalParts(embeddings,
+      prepared(embeddings).materialized, k, beam, rounds, descentRounds)
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("nbr_id").asc)
     patched.unionByName(newFwd)
@@ -2495,31 +2358,17 @@ object Similarity {
     */
   def incrementalGraphRecall(embeddings: DataFrame, k: Int = 5,
                              beam: Int = 16, rounds: Int = 4,
-                             descentRounds: Int = 4): DataFrame = {
-    val eAll = prepared(embeddings).materialized
-    // insert chain and truth pass overlapped (r21, guide §2.6); the
-    // truth branch pins its own query frame from the shared `eAll`
-    val ((patched, newFwd), (q, truth)) = Par.concurrently(
-      incrementalPartsOn(embeddings, eAll, k, beam, rounds,
-        descentRounds),
-      {
-        val qb = eAll.filter(col("vec_id") % 50 === 0 ||
-            col("vec_id") % 50 === 49)
-          .select(col("vec_id"), col("v"), col("nrm")).materialized
-        (qb, sampledTruth(qb, eAll, k))
-      })
-    val graph = patched.unionByName(newFwd)
-      .select(col("vec_id"), col("nbr_id"))
-    // node class = vec_id % 50: 0 for old nodes, 49 for new ones
-    def side(residue: Int, variant: String): DataFrame = {
-      val inClass = col("vec_id") % 50 === residue
-      val nQ = q.filter(inClass)
-        .select(countDistinct(col("vec_id")).as("n_queries"))
-      sampledRecall(truth.filter(inClass), graph, nQ, k)
-        .select(lit(variant).as("variant"), col("*"))
+                             descentRounds: Int = 4): DataFrame =
+    dialRecall(embeddings, k, e => e.filter(col("vec_id") % 50 === 0 ||
+        col("vec_id") % 50 === 49).materialized)(e =>
+        incrementalParts(embeddings, e, k, beam, rounds, descentRounds)) {
+      case (d, (patched, newFwd)) =>
+        // node class = vec_id % 50: 0 for old nodes, 49 for new ones
+        Seq(0 -> "old_nodes", 49 -> "new_nodes").map { case (r, v) =>
+          d.within(col("vec_id") % 50 === r)
+            .arm("variant" -> v, patched.unionByName(newFwd))
+        }
     }
-    side(0, "old_nodes").unionByName(side(49, "new_nodes"))
-  }
 
   /** Per-label mean embedding (class centroids / cluster prototypes) in
     * long format: one row per (label, dim). The mean is computed over
@@ -2855,48 +2704,27 @@ object Similarity {
         when(col("_d").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
   }
 
-  /** The s44/s45 shared chain — the DiskANN composition (Subramanya
-    * et al. 2019): [[graphBeamSearch]]'s walk over the s33 search
-    * graph, but every hop scored with PQ-ADC lookups instead of the
-    * full d-dimensional multiply. The point at 100 TB is MEMORY: the
-    * walk's per-candidate reads shrink from d floats to the packed
-    * index row (1 int + m byte codes — the s16 index), so the
-    * frontier expansion runs entirely against an in-memory structure
-    * 32× smaller than the vectors, and full-precision vectors are
-    * touched only for the final |Q|·beam re-rank (the s20
-    * discipline) — exactly DiskANN's split of compressed-in-RAM /
-    * exact-on-SSD. Returns (pq-scored frontier_R, e, gsym, q) so s44
-    * can re-rank exact and s45 can run the exact-scored walk over
-    * the SAME graph.
+  /** The s44/s45 chain — the DiskANN composition (Subramanya et al.
+    * 2019): s33's [[beamWalk]] over the search graph of the pinned
+    * corpus `e`, but every hop scored with PQ-ADC lookups instead of
+    * the full d-dimensional multiply. The point at 100 TB is MEMORY:
+    * the walk's per-candidate reads shrink from d floats to the packed
+    * index row (1 int + m byte codes — the s16 index), so the frontier
+    * expansion runs entirely against an in-memory structure 32×
+    * smaller than the vectors, and full-precision vectors are touched
+    * only for the final |Q|·beam re-rank (the s20 discipline) —
+    * exactly DiskANN's split of compressed-in-RAM / exact-on-SSD.
+    * Returns (pq-scored frontier_R, search graph) so s44 can re-rank
+    * exact and s45 can walk the SAME graph exact-scored.
     *
     * Determinism: the ADC score is the fixed s-ascending lookup fold
     * (knnPqAdc's convention); frontier ranks tie-break on cand_id.
     */
-  private def pqBeamChain(embeddings: DataFrame, beam: Int, rounds: Int,
-                          graphK: Int, descentRounds: Int, m: Int,
-                          nCodes: Int, dim: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val e = prepared(embeddings).materialized
-    val (f, gsym, q) = pqBeamChainOn(embeddings, e, beam, rounds,
-      graphK, descentRounds, m, nCodes, dim)
-    (f, e, gsym, q)
-  }
-
-  /** [[pqBeamChain]] over an already-pinned prepared corpus `e` (r21,
-    * guide §2.6 — the beamChainOn seam).
-    */
-  private def pqBeamChainOn(embeddings: DataFrame, e: DataFrame,
-                            beam: Int, rounds: Int,
-                            graphK: Int, descentRounds: Int, m: Int,
-                            nCodes: Int, dim: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val hr = hashRankCounted(e)
-    val gsym = searchGraphOn(hr,
-      nnDescentGraph(embeddings, e, hr, graphK, descentRounds)
-        .select(col("vec_id"), col("nbr_id")))
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")).materialized
+  private def pqBeamChain(embeddings: DataFrame, e: DataFrame, beam: Int,
+                          rounds: Int, graphK: Int, descentRounds: Int,
+                          m: Int, nCodes: Int, dim: Int)
+      : (DataFrame, SearchGraph) = {
+    val sg = searchGraph(embeddings, e, graphK, descentRounds, dial(e))
     val cbArr = pqCodebook(e, nCodes, m, dim)
     // the packed index: the ONLY per-candidate data the walk reads
     val codes = e.join(broadcast(cbArr))
@@ -2908,7 +2736,7 @@ object Similarity {
       transform(col("cb"), c =>
         Canon.dot(slice(col("qv"), s * sub + 1, lit(sub)),
           slice(c.getField("cv"), s * sub + 1, lit(sub)))))
-    val qtab = q.join(broadcast(cbArr))
+    val qtab = sg.q.join(broadcast(cbArr))
       .select(col("q_id"), parts.as("parts")).materialized
     val approx = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0d),
       (acc, s) => acc + element_at(element_at(col("parts"), s + 1),
@@ -2917,45 +2745,17 @@ object Similarity {
       .join(codes, "cand_id")
       .join(broadcast(qtab), "q_id")
       .select(col("q_id"), col("cand_id"), approx.as("approx_dot"))
-    val entries = e
-      .select(col("vec_id").as("cand_id"),
-        Canon.hashP(col("vec_id").cast("string")).as("_h"))
-      .orderBy(col("_h"), col("cand_id")).limit(beam)
-      .select(col("cand_id"))
-    // the entry frontier is ≤ beam rows per query by construction
-    // (|entries| = beam), so no cut is needed before the pin
-    var frontier = scoreAdc(
-      q.select(col("q_id")).crossJoin(broadcast(entries))
-        .filter(col("cand_id") =!= col("q_id"))).materialized
-    (1 to rounds).foreach { _ =>
-      // FUSED round — the beamWalkAll shape (r21): score only the hop
-      // candidates (carried frontier rows keep their bit-identical
-      // approx_dot — the ADC expression over the same pinned codes
-      // and qtab), one topKAgg instead of distinct + window
-      val hops = frontier.select(col("q_id"), col("cand_id"))
-        .join(gsym.withColumnRenamed("vec_id", "cand_id"), "cand_id")
-        .select(col("q_id"), col("nbr_id").as("cand_id"))
-        .filter(col("cand_id") =!= col("q_id"))
-      frontier = topKAgg(scoreAdc(hops)
-          .unionByName(frontier.select(col("q_id"), col("cand_id"),
-            col("approx_dot"))),
-        "q_id", "cand_id", "approx_dot", beam).materialized
-    }
-    (frontier, gsym, q)
+    (beamWalk(sg, beam, rounds)(scoreAdc, "approx_dot").last, sg)
   }
 
   /** Exact re-rank of a (q_id, cand_id) frontier: full-precision
-    * cosines against the query set, per-query top-k with ranks.
+    * cosines against the search graph's query set, per-query top-k
+    * with ranks.
     */
-  private def rerankExact(f: DataFrame, e: DataFrame, q: DataFrame,
+  private def rerankExact(f: DataFrame, sg: SearchGraph,
                           k: Int): DataFrame =
-    topK(f.select(col("q_id"), col("cand_id"))
-        .join(e.select(col("vec_id").as("cand_id"), col("v"), col("nrm")),
-          "cand_id")
-        .join(q, "q_id")
-        .select(col("q_id"), col("cand_id").as("nbr_id"),
-          Canon.cosine(Canon.dot(col("qv"), col("v")),
-            col("qnrm"), col("nrm")).as("sim")),
+    topK(scoreCand(sg.e, sg.q)(f.select(col("q_id"), col("cand_id")))
+        .withColumnRenamed("cand_id", "nbr_id"),
       k, "rank")(col("q_id"))(col("sim").desc, col("nbr_id").asc)
 
   /** DiskANN-style PQ-scored graph search (s44): the s33 beam walk
@@ -2968,9 +2768,9 @@ object Similarity {
                         rounds: Int = 4, graphK: Int = 5,
                         descentRounds: Int = 4, m: Int = 8,
                         nCodes: Int = 16, dim: Int = 64): DataFrame = {
-    val (f, e, _, q) = pqBeamChain(embeddings, beam, rounds, graphK,
-      descentRounds, m, nCodes, dim)
-    rerankExact(f, e, q, k)
+    val (f, sg) = pqBeamChain(embeddings, prepared(embeddings).materialized,
+      beam, rounds, graphK, descentRounds, m, nCodes, dim)
+    rerankExact(f, sg, k)
   }
 
   /** s44's recall dial (s45): recall@k against the exact corpus-wide
@@ -2983,26 +2783,17 @@ object Similarity {
   def graphPqBeamRecall(embeddings: DataFrame, k: Int = 5, beam: Int = 16,
                         rounds: Int = 4, graphK: Int = 5,
                         descentRounds: Int = 4, m: Int = 8,
-                        nCodes: Int = 16, dim: Int = 64): DataFrame = {
-    val e = prepared(embeddings).materialized
-    // PQ chain and truth pass overlapped (r21, guide §2.6); the truth
-    // branch derives the query rows from the shared pinned `e` with
-    // the same % 50 filter — identical rows to the chain's q, the
-    // same (qv ≡ v, qnrm ≡ nrm) operands, so identical sims
-    val ((fpq, gsym, q), truth) = Par.concurrently(
-      pqBeamChainOn(embeddings, e, beam, rounds, graphK,
-        descentRounds, m, nCodes, dim),
-      sampledTruth(e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("v"), col("nrm")), e, k))
-    val (_, fex) = beamWalk(e, gsym, q, beam, rounds)
-    val nQ = q.select(countDistinct(col("q_id")).as("n_queries"))
-    def hits(found: DataFrame, variant: String): DataFrame =
-      sampledRecall(truth, found, nQ, k)
-        .select(lit(variant).as("variant"), col("*"))
-    hits(frontierPairs(fex, k), "beam")
-      .unionByName(hits(rerankExact(fpq, e, q, k)
-        .select(col("q_id").as("vec_id"), col("nbr_id")), "pq_beam"))
-  }
+                        nCodes: Int = 16, dim: Int = 64): DataFrame =
+    dialRecall(embeddings, k)(e => pqBeamChain(embeddings, e, beam, rounds,
+        graphK, descentRounds, m, nCodes, dim)) {
+      case (d, (fpq, sg)) =>
+        // queries counted off the chain's pinned rows: the same dial
+        val ds = d.copy(q = sg.q)
+        Seq(ds.arm("variant" -> "beam",
+            frontierPairs(beamWalk(sg, beam, rounds)().last, k)),
+          ds.arm("variant" -> "pq_beam", rerankExact(fpq, sg, k)
+            .select(col("q_id").as("vec_id"), col("nbr_id"))))
+    }
 }
 
 /** One persisted index's artifact schemas + write closure, derived

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{Sessions, SparkEntry, Tables}
@@ -31,7 +32,8 @@ object Main {
     ("rounds", "<sf> <outDir> <suffix>",
       "write the un-pinned beam-walk and NN-descent round plans"),
     ("time", "<sf> <names>",
-      "wall-clock comma-separated queries into a noop sink"),
+      "wall-clock comma-separated queries into a noop sink and count " +
+        "the Spark jobs each started"),
     ("show", "<sf> <names>", "show() comma-separated query results"))
 
   private def usage: String = commands.map { case (n, a, d) =>
@@ -82,10 +84,11 @@ object Main {
       case ("time", Seq(sf, names)) =>
         Tables.warm(spark, sf)
         names.split(",").foreach { n =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sf)
-            .write.format("noop").mode("overwrite").save()
-          println(f"TIME $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          val (secs, jobs) = timeJobs(spark, s"time-$n") {
+            SparkEntry.queries(n)(spark, sf)
+              .write.format("noop").mode("overwrite").save()
+          }
+          println(f"TIME $n $secs%.2f s $jobs jobs")
         }
         0
       case ("show", Seq(sf, names)) =>
@@ -99,6 +102,32 @@ object Main {
     }
 
   private def badUsage(): Int = { println(usage); 2 }
+
+  /** Wall-clock seconds of `body` and the number of Spark jobs it
+    * started. `body` runs under job group `group`, which `graft.Par`
+    * branches inherit, so eager pins and overlapped branches count;
+    * the listener bus is drained before the count is read.
+    */
+  private[graft] def timeJobs(spark: SparkSession, group: String)(
+      body: => Unit): (Double, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val t0 = System.nanoTime()
+      try body finally sc.clearJobGroup()
+      val secs = (System.nanoTime() - t0) / 1e9
+      GraftSqlBridge.drainListeners(spark)
+      (secs, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   private val lambdaId = """\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""".r
   // JVM-wide counters a plan prints: exprIds, Exchange plan ids, RDD ids

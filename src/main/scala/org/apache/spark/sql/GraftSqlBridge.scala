@@ -4,8 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge into the private[sql] Column↔Expression converters —
   * the standard extension-library pattern for attaching custom
-  * Catalyst expressions (graft.functions.*) to the public Column API.
-  * Nothing else from the private surface is exposed.
+  * Catalyst expressions (graft.functions.*) to the public Column API,
+  * plus the few package-private hooks documented below.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -24,4 +24,9 @@ object GraftSqlBridge {
     * (ADVICE r18; the top-level-only copy left nested types tighter).
     */
   def asNullable(s: types.StructType): types.StructType = s.asNullable
+  /** Block until the listener bus has delivered every posted event, so
+    * a listener's counts are complete (`tools.Main time`'s job count).
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -846,6 +846,23 @@ class SimilaritySpec extends SparkSpec {
     assert(run(emb.repartition(7)).toSeq === out.toSeq)
   }
 
+  /** The Spark jobs `body` starts, counted by job group (graft.Par
+    * branches inherit it) — the instrument behind `tools.Main time`.
+    */
+  private def jobsOf(body: => Unit): Int =
+    graft.tools.Main.timeJobs(spark, "similarity-jobs")(body)._2
+
+  test("graphBeamSearch and graphBeamRecall start a fixed number of " +
+    "Spark jobs: every pin and overlapped branch of the chain is " +
+    "counted") {
+    val search = jobsOf(Similarity.graphBeamSearch(emb, k = 2, beam = 3,
+      rounds = 2, graphK = 1, descentRounds = 1).collect())
+    val recall = jobsOf(Similarity.graphBeamRecall(emb, k = 1, beam = 2,
+      rounds = 2, graphK = 1, descentRounds = 1).collect())
+    assert(search === 57)
+    assert(recall === 71)
+  }
+
   test("graphPqBeamSearch: with the corpus as its own codebook the " +
     "PQ walk matches the exact walk and the brute truth; " +
     "partition-independent") {

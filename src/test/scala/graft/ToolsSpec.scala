@@ -59,4 +59,15 @@ class ToolsSpec extends SparkSpec {
       .foreach(q => assert(plans(q).contains("[plan_id=1]"), q))
     assert(plans("h08_account_flow").contains("RDD[1]"))
   }
+
+  test("time prints each query's wall clock and the Spark jobs it " +
+    "started") {
+    val (code, text) = captured(Main.run(spark, "time",
+      Seq(sf0001, "h01_payment_v1_edges")))
+    assert(code === 0)
+    val line = """TIME h01_payment_v1_edges \d+\.\d\d s (\d+) jobs""".r
+    val jobs = line.findFirstMatchIn(text).map(_.group(1).toInt)
+    assert(jobs.exists(_ > 0), text)
+    assert(!spark.sparkContext.isStopped)
+  }
 }

@@ -35,4 +35,19 @@ class VerifySpec extends SparkSpec {
     assert(errors.isEmpty)
     assert(Files.readString(Paths.get(s"$outDir/_errors.json")) === "{}")
   }
+
+  test("_errors.json round-trips a message holding a quote, a " +
+    "backslash, a tab, a CR and \\u0001") {
+    val outDir = Files.createTempDirectory("verify").toString
+    val msg = "a \"quoted\" \\path\tcol\rline\u0001end"
+    val bad: (SparkSession, String) => DataFrame =
+      (_, _) => throw new IllegalStateException(msg)
+    val name = "bad\t\"name\""
+    val errors = Verify.dump(spark, sf0001, outDir, Map(name -> bad))
+    assert(errors(name) === s"IllegalStateException: $msg")
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Files.readString(Paths.get(s"$outDir/_errors.json")))
+    assert(back.size === 1)
+    assert(back.get(name).asText === errors(name))
+  }
 }
