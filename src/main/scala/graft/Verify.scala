@@ -39,8 +39,8 @@ object Verify {
 
   /** Writes `m` as one flat JSON object of strings, in `m`'s order.
     * Jackson escapes every quote, backslash and control char, so a tab
-    * or CR in a message or in builder-authored SQL cannot break the
-    * driver's json.load.
+    * or CR in a message or in the oracle SQL cannot break a reader's
+    * json.load (tools/check.py).
     */
   private def writeJson(path: String,
                         m: scala.collection.Map[String, String]): Unit =
